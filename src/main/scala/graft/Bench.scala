@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE JSON line with per-query best times.
   *
@@ -128,35 +127,13 @@ object Bench {
     // locale — a decimal-comma locale would emit invalid JSON
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.envCpus
     val wmPath = sys.env.getOrElse("SPARK_GRAFT_WATERMARKS", "/root/repo/BENCH_WATERMARKS.json")
     val watermarks = loadWatermarks(wmPath)
     if (watermarks.isEmpty)
       System.err.println(s"[bench] WARNING: no watermarks at $wmPath — " +
         "adaptive noise retry is INERT; commit clean-host minima there")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local files are tiny (<11 MB): split aggressively so scans use
-      // all cores; at cluster scale the default 128m is the right call
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // AQE coalesces shuffles toward 64m by default; our shuffles are
-      // byte-tiny but CPU-heavy downstream (hashing, set ops) — keep
-      // them spread across cores
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      // SAME semantics as the correctness gate: Verify runs UTC, so the
-      // bench must too — a host-local timezone would time (or crash)
-      // different work than what was verified
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); set at session build (a
-      // loader must not mutate global parquet semantics mid-session)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(cpus)
 
     // ---- host-speed probe (see ProbeQuery scaladoc) ----------------
     // Runs FIRST, always against the fixed sf0.1 probe dir — during a

@@ -1,32 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local files are tiny (<11 MB): split aggressively so scans use
-      // all cores; at cluster scale the default 128m is the right call
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // AQE coalesces shuffles toward 64m by default; our shuffles are
-      // byte-tiny but CPU-heavy downstream (hashing, set ops) — keep
-      // them spread across cores
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); set at session build (a
-      // loader must not mutate global parquet semantics mid-session)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.envCpus)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (unset in the driver): comma-separated
     // query names to dump, e.g. SPARK_GRAFT_ONLY=funnel_steps,cdc_latest_state

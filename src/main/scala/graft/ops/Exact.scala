@@ -46,6 +46,16 @@ object Exact {
   def microSumTo4dp(sumCol: String): Column =
     expr(microSumTo4dpSql(sumCol, SparkDiv))
 
+  /** Micro-unit SUM → 2-dp double (cents), the same integer HALF-AWAY
+    * rounding as [[microSumTo4dpSql]].
+    */
+  def microSumTo2dpSql(sumCol: String, intDiv: String): String =
+    s"""CAST(CASE WHEN $sumCol >= 0 THEN ($sumCol + 5000) $intDiv 10000
+       |     ELSE -((-$sumCol + 5000) $intDiv 10000) END AS DOUBLE) / 100""".stripMargin
+
+  def microSumTo2dp(sumCol: String): Column =
+    expr(microSumTo2dpSql(sumCol, SparkDiv))
+
   /** Micro-unit MEAN (`sum / n`) → 4-dp double, same integer HALF-AWAY
     * discipline: 2·sum + n·100 keeps the ±0.5 rounding offset exact.
     */

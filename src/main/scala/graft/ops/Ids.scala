@@ -13,15 +13,18 @@ import org.apache.spark.sql.functions._
 object Ids {
 
   /** 1-based contiguous ID over the given total order, via a global
-    * `row_number()` window. Exactly matches pandas semantics. A global
-    * window funnels through one task — correct at harness scale; use
-    * [[withScalableGlobalId]] for the 100 TB path.
+    * `row_number()` window. Exactly matches pandas semantics. In a
+    * session carrying [[graft.plans.GraftExtensions]] (every
+    * [[graft.Session]]) the window plans as the distributed
+    * [[graft.plans.GlobalSeqIdExec]], not a single-task funnel; its ids
+    * are IntegerType, so past 2^31 rows use
+    * [[withScalableGlobalIdManaged]].
     */
   def withGlobalId(df: DataFrame, idCol: String, order: Seq[Column]): DataFrame =
     df.withColumn(idCol, row_number().over(Window.orderBy(order: _*)))
 
-  /** Same ordering contract as [[withGlobalId]] (IDs are LongType here —
-    * the point is >2^31 rows) but scales: range-partition by the ordering
+  /** Same ordering contract as [[withGlobalId]], but IDs are LongType —
+    * the point is >2^31 rows: range-partition by the ordering
     * so partitions are globally ordered, then number rows as
     * (earlier partitions' row count) + (offset within the partition) —
     * no single-task funnel, no extra shuffle beyond the range exchange,
@@ -48,21 +51,13 @@ object Ids {
     * exchange instance (bounds are sampled once at planning), so IDs
     * cannot drift even under executor failure.
     *
-    * Cache lifecycle: THIS overload has no release handle — the pinned
-    * entry lives until `spark.catalog.clearCache()` or session end
-    * (unpersisting the RETURNED frame would not reach it: the returned
-    * plan is derived, not sameResult-equal to the cached one). Callers
-    * that outlive the query should use [[withScalableGlobalIdManaged]]
-    * and call the handle once their action has run.
-    */
-  def withScalableGlobalId(df: DataFrame, idCol: String, order: Seq[Column]): DataFrame =
-    withScalableGlobalIdManaged(df, idCol, order)._1
-
-  /** [[withScalableGlobalId]] plus the cache-release handle: the second
-    * element unpersists the pinned range-partitioned frame. Call it only
-    * AFTER the final action over the returned frame — releasing earlier
-    * would let a re-execution re-sample the range bounds the collected
-    * offsets were computed from.
+    * Cache lifecycle: the second element of the result unpersists the
+    * pinned range-partitioned frame (unpersisting the RETURNED frame
+    * would not reach it: the returned plan is derived, not
+    * sameResult-equal to the cached one). Call it only AFTER the final
+    * action over the returned frame — releasing earlier would let a
+    * re-execution re-sample the range bounds the collected offsets were
+    * computed from.
     */
   def withScalableGlobalIdManaged(df: DataFrame, idCol: String,
       order: Seq[Column]): (DataFrame, () => Unit) = {

@@ -63,7 +63,7 @@ object Ingest {
     * codegen'd projection over the same scan. Sound for deterministic
     * in-order sources (file scans, local relations): the count pass and
     * the numbering pass replan to identical partitioning — this is the
-    * pattern proven at scale in [[Ids.withScalableGlobalId]], minus the
+    * pattern proven at scale in [[Ids.withScalableGlobalIdManaged]], minus the
     * persist (no range re-sampling here, the scan order is the source's).
     */
   private def numberInScanOrder(df: DataFrame, idCol: String): DataFrame = {

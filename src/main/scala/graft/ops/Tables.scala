@@ -24,9 +24,8 @@ object Tables {
     * and Catalyst prunes/pushes into the shared scan exactly as
     * before.
     *
-    * Keyed WEAKLY by session (values die with the session, e.g. the
-    * per-call isolated clones `ids_rule_orders` makes) and strongly
-    * by (dir, table) within it. Synchronized: bench/verify are
+    * Keyed WEAKLY by session (values die with the session) and
+    * strongly by (dir, table) within it. Synchronized: bench/verify are
     * single-threaded drivers, tests may race harmlessly.
     */
   private val cache = new java.util.WeakHashMap[

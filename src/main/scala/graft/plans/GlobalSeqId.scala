@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.RowNumber
@@ -15,12 +14,12 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * users reach for first (O4) — into the distributed two-pass plan,
   * automatically.
   *
-  * The DataFrame-level fix already exists ([[graft.ops.Ids
-  * .withScalableGlobalId]]); this is the same plan shape delivered
-  * UNDER the API: a `Rule[LogicalPlan]` recognizes the funnel
-  * (one window expression, RowNumber, empty PARTITION BY), replaces it
-  * with the [[GlobalSeqId]] logical node, and a [[SparkStrategy]] plans
-  * [[GlobalSeqIdExec]], which
+  * The DataFrame-level fix for Long ids past 2^31 rows is
+  * [[graft.ops.Ids.withScalableGlobalIdManaged]]; this is the same plan
+  * shape delivered UNDER the API: a `Rule[LogicalPlan]` recognizes the
+  * funnel (one window expression, RowNumber, empty PARTITION BY),
+  * replaces it with the [[GlobalSeqId]] logical node, and a
+  * [[SparkStrategy]] plans [[GlobalSeqIdExec]], which
   *
   *  1. demands `OrderedDistribution(order)` from its child, so
   *     EnsureRequirements inserts a RANGE exchange + per-partition
@@ -38,38 +37,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * a window that someone ALREADY partitioned, or any other window
   * function, is out of scope on purpose.)
   *
-  * Install on a live session (idempotent):
-  * {{{ GlobalSeqId.install(spark) }}}
+  * Installed by [[GraftExtensions]], which every [[graft.Session]]
+  * carries.
   */
 object GlobalSeqId {
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(GlobalRowNumberRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GlobalRowNumberRule
-    if (!spark.experimental.extraStrategies.contains(GlobalSeqIdStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GlobalSeqIdStrategy
-  }
-
-  /** Rule install mutates `spark.experimental` for the SESSION'S
-    * lifetime — `extraOptimizations` has no scoping, and optimization
-    * happens at action time, so an uninstall-in-finally would race the
-    * very query that wanted the rewrite. Callers that only want the
-    * rewrite for ONE query (e.g. the `ids_rule_orders` gate) must not
-    * leak it into every later global-window query in a shared
-    * Verify/Bench session: this helper clones the planning surface
-    * instead. `newSession()` shares the SparkContext, SharedState and
-    * builder-time SQL confs (shuffle partitions, timezone, parquet
-    * nanos) but gets a FRESH `ExperimentalMethods`, so the returned
-    * session plans with the rule while the parent session's plans are
-    * byte-identical to before the call.
-    */
-  def installIsolated(spark: SparkSession): SparkSession = {
-    val iso = spark.newSession()
-    install(iso)
-    iso
-  }
-
   /** Global windows seen-but-not-rewritten (rank/dense_rank, multi-
     * expression projections, …): counted so the near-miss warning is
     * testable, visible via [[unrewrittenGlobalWindows]].
@@ -109,7 +80,7 @@ object GlobalRowNumberRule extends Rule[LogicalPlan] {
       logWarning(s"global window (no PARTITION BY) not rewritten by " +
         s"GlobalRowNumberRule — single-task funnel ahead: " +
         exprs.map(_.sql).mkString(", ") +
-        ". For a lone row_number() use graft.ops.Ids.withScalableGlobalId" +
+        ". For a lone row_number() use graft.ops.Ids.withScalableGlobalIdManaged" +
         " or match this rule's shape.")
       w
   }
@@ -158,7 +129,7 @@ final case class GlobalSeqIdExec(child: SparkPlan, order: Seq[SortOrder],
         // reaches the wrap — fail loudly instead of emitting negatives
         if (id > Int.MaxValue) throw new ArithmeticException(
           "row_number overflow past 2^31 rows — use " +
-            "graft.ops.Ids.withScalableGlobalId (Long ids)")
+            "graft.ops.Ids.withScalableGlobalIdManaged (Long ids)")
         idRow.setInt(0, id.toInt)
         proj(joined(row, idRow))
       }

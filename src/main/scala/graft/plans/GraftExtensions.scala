@@ -21,15 +21,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    read (without it the connector's V1 fallback still answers
   *    correctly).
   *
-  * Both rules rewrite only their exact safe shapes and leave every
+  * The rules rewrite only their exact safe shapes and leave every
   * other plan untouched (near-misses log), so injecting them
-  * cluster-wide is free; the `installIsolated` helpers remain for
-  * scoping a rewrite to one session of a shared REPL. Activate with:
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)              // programmatic, or
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
+  * session-wide is free. This class is the only way they get into a
+  * session: [[graft.Session]] installs it on every graft session, and
+  * an outside session activates it with
+  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

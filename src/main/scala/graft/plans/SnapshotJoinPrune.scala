@@ -33,26 +33,10 @@ import graft.ops.SnapshotTable
   * optimization, never a semantic dependency — and log a warning so
   * the missed prune is visible, the [[GlobalRowNumberRule]] discipline.
   *
-  * Install via [[SnapshotJoinPrune.installIsolated]] (a cloned session,
-  * so a shared Verify/Bench session's other plans stay byte-identical).
+  * Installed by [[GraftExtensions]], which every [[graft.Session]]
+  * carries.
   */
 object SnapshotJoinPrune {
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(SnapshotBloomJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SnapshotBloomJoinRule
-  }
-
-  /** Same scoping contract as [[GlobalSeqId.installIsolated]]: the rule
-    * mutates `spark.experimental` for the session's lifetime, so a
-    * one-query caller installs on a cloned session.
-    */
-  def installIsolated(spark: SparkSession): SparkSession = {
-    val iso = spark.newSession()
-    install(iso)
-    iso
-  }
-
   /** A dim side bigger than this is not a needle lookup — leave the
     * shuffle join alone (the same bound readWhereInFrom enforces).
     */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.ops.SnapshotTable
 import graft.sources.SnapshotDsv2Table
@@ -20,15 +20,9 @@ import graft.sources.SnapshotDsv2Table
   * version is immutable and pinned at table-creation time, so the
   * substituted plan can never drift from the relation it replaces.
   *
-  * Matches BOTH relation forms, so the rule works from either
-  * injection point:
-  *  - `DataSourceV2Relation` — the analysis-time form, seen when
-  *    [[GraftExtensions]] injects the rule into the operator-
-  *    optimization batches (they run before V2 scan pushdown);
-  *  - `DataSourceV2ScanRelation` — the post-pushdown form, seen when
-  *    [[SnapshotRelationRule.install]] appends the rule to an EXISTING
-  *    session's `experimental.extraOptimizations` (the "User Provided
-  *    Optimizers" batch runs last).
+  * [[GraftExtensions]] injects the rule into the operator-optimization
+  * batches, which run before V2 scan pushdown, so it matches the
+  * analysis-time `DataSourceV2Relation`.
   *
   * Without the rule the read still answers correctly through the
   * connector's V1 fallback scan — substitution is an optimization,
@@ -40,22 +34,6 @@ object SnapshotRelationRule extends Rule[LogicalPlan] {
   /** Substitutions performed (testable evidence the rule fired). */
   private[plans] val substCount = new java.util.concurrent.atomic.AtomicLong
   def substitutions: Long = substCount.get()
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(SnapshotRelationRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SnapshotRelationRule
-  }
-
-  /** Scoped install on a cloned session, like
-    * [[SnapshotJoinPrune.installIsolated]]: the caller's shared session
-    * keeps planning every other read byte-identically.
-    */
-  def installIsolated(spark: SparkSession): SparkSession = {
-    val iso = spark.newSession()
-    install(iso)
-    iso
-  }
 
   /** readAt's analyzed plan, re-aliased onto the relation's output
     * exprIds so every parent reference stays resolved. A schema
@@ -85,8 +63,5 @@ object SnapshotRelationRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case r: DataSourceV2Relation if r.table.isInstanceOf[SnapshotDsv2Table] =>
       substitute(r.output, r.table.asInstanceOf[SnapshotDsv2Table])
-    case s: DataSourceV2ScanRelation
-        if s.relation.table.isInstanceOf[SnapshotDsv2Table] =>
-      substitute(s.output, s.relation.table.asInstanceOf[SnapshotDsv2Table])
   }
 }

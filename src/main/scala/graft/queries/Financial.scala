@@ -26,8 +26,9 @@ object Financial {
     * group label (O1) + emitent stamp → union-all with source rank (U1) →
     * global 1-based ID ordered by (src_rank, line order) (O4) → canonical
     * projection (P3). Filters push into the parquet scan; the only shuffle
-    * is the final global row_number (reference semantics — see
-    * Ids.withScalableGlobalId for the 100 TB variant).
+    * is the global row_number's range exchange (GraftExtensions plans it
+    * as the distributed GlobalSeqId; Ids.withScalableGlobalIdManaged is
+    * the Long-id variant past 2^31 rows).
     */
   private def bFinancialUnion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -175,7 +175,7 @@ object JoinsAndSets {
 
   /** The 100 TB global-ID path through the oracle gate: two-pass
     * zipWithIndex IDs (range partition → per-partition number + offset,
-    * no single-task window funnel — see Ids.withScalableGlobalId) must
+    * no single-task window funnel — see Ids.withScalableGlobalIdManaged) must
     * produce EXACTLY the permutation a global row_number defines. The
     * per-priority (count, min, max, sum) signature over the IDs pins
     * every position without shipping 150k raw rows through Verify.
@@ -211,29 +211,29 @@ object JoinsAndSets {
 
   /** The §7.5(a) OPTIMIZER-RULE twin of ids_scalable_orders: the query
     * writes the naive global `row_number()` window — the single-task
-    * funnel — and [[graft.plans.GlobalSeqId]]'s installed rule rewrites
-    * it into the two-pass range plan underneath (GlobalSeqIdSpec pins
-    * the plan shape; this gate pins the VALUES). Same per-priority
-    * signature as the managed-API variant, same oracle semantics, and
-    * the rewrite must be bit-faithful to row_number (IntegerType ids).
+    * funnel — and [[graft.plans.GlobalSeqId]]'s rule, installed on every
+    * graft session by GraftExtensions, rewrites it into the two-pass
+    * range plan underneath (GlobalSeqIdSpec pins the plan shape; this
+    * gate pins the VALUES, and requires the rewrite planned, so a
+    * session without the extensions fails loudly instead of answering
+    * through the funnel). Same per-priority signature as the
+    * managed-API variant, same oracle semantics, and the rewrite must
+    * be bit-faithful to row_number (IntegerType ids).
     */
   private def idsRuleOrders(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // ISOLATED session: install() mutates extraOptimizations for the
-    // session's lifetime, and optimization runs at action time — so
-    // installing on the shared Verify/Bench session would silently
-    // switch every LATER global-row_number query (Financial's
-    // Ids.withGlobalId path) onto the rewritten plan mid-run. The
-    // clone shares the SparkContext + builder confs; only ITS plans
-    // see the rule.
-    val iso = graft.plans.GlobalSeqId.installIsolated(s)
-    Tables.orders(iso, dir).select($"o_orderkey", $"o_orderpriority")
+    val df = Tables.orders(s, dir).select($"o_orderkey", $"o_orderpriority")
       .withColumn("rid", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy($"o_orderkey")))
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n"), min($"rid").as("min_id"),
         max($"rid").as("max_id"), sum($"rid".cast("long")).as("sum_id"))
       .orderBy($"o_orderpriority")
+    require(df.queryExecution.sparkPlan.collectFirst {
+      case e: graft.plans.GlobalSeqIdExec => e }.nonEmpty,
+      "the global row_number did not plan GlobalSeqIdExec — the session " +
+        "lacks GraftExtensions")
+    df
   }
 
   private val idsRuleOracle =

@@ -1188,8 +1188,9 @@ object LakeOps {
 
   /** Dim-driven file pruning WITHOUT the API opt-in — the
     * [[snapshotJoinPrune]] semantics delivered by the PLANNER:
-    * [[graft.plans.SnapshotJoinPrune]] installs a Catalyst rule (the
-    * [[graft.plans.GlobalSeqId]] precedent) that recognizes the plain
+    * [[graft.plans.SnapshotBloomJoinRule]], a Catalyst rule every graft
+    * session carries through GraftExtensions (the
+    * [[graft.plans.GlobalSeqId]] precedent), recognizes the plain
     * `fact.join(dim, key)` shape over a bloom-carrying snapshot scan
     * with a plan-time-known dim and swaps the fact relation's file
     * index for the bloom survivor list — no readWhereInFrom call
@@ -1197,14 +1198,12 @@ object LakeOps {
     * bloom-sidecar'd lineitem fixture, joins it against one customer's
     * order keys with NOTHING but join syntax, and requires loudly that
     * the planned scan reads EXACTLY the survivor list (the dim is a
-    * LocalRelation, so every planned input file is the fact's), that
-    * the rule counted a rewrite, and that the session isolation held
-    * (the parent session's plans are untouched). Same IN-subquery
-    * oracle as the explicit-API gate — the rewrite must be invisible
-    * to the answer.
+    * LocalRelation, so every planned input file is the fact's) and
+    * that the rule counted a rewrite — a session without the
+    * extensions fails loudly. Same IN-subquery oracle as the
+    * explicit-API gate — the rewrite must be invisible to the answer.
     */
-  private def snapshotJoinPruneRule(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.plans.SnapshotJoinPrune.installIsolated(s0)
+  private def snapshotJoinPruneRule(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = lakeBase(dir, "joinprunerule")
     SnapshotTable.deleteTree(base)
@@ -1242,25 +1241,6 @@ object LakeOps {
         s"$planned files planned vs ${kept.size} survivors")
     require(graft.plans.SnapshotJoinPrune.rewrites > before,
       "the planner rule never fired — the scan was not rewritten")
-    // isolation: the parent session (no rule installed) still plans
-    // the full, unpruned scan for the same join
-    val dimParent = {
-      import scala.jdk.CollectionConverters._
-      s0.createDataFrame(
-        keys.map(k => org.apache.spark.sql.Row(k)).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("l_orderkey",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-    }
-    val parentPlanned = SnapshotTable.readAt(s0, base, v1)
-      .join(dimParent, Seq("l_orderkey"), "left_semi")
-      .queryExecution.sparkPlan.collect {
-        case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-          sc.relation.location.inputFiles.length
-      }.sum
-    require(parentPlanned == total,
-      s"rule leak: the parent session planned $parentPlanned of $total " +
-        "files — installIsolated failed to scope the rewrite")
     joined
       .agg(count(lit(1)).as("n_lines"),
         round(sum($"l_quantity"), 2).as("sum_qty"),
@@ -2246,12 +2226,10 @@ object LakeOps {
     * dim-side collect) and swaps the fact's file index for the bloom
     * survivor list; no pruning API anywhere in the query. Loud
     * requires: the plain join PLANS exactly the survivor list; the
-    * rule counted a rewrite; the parent session (no rule) still plans
-    * the full scan. Same IN-subquery oracle — the rewrite must be
-    * invisible to the answer.
+    * rule counted a rewrite. Same IN-subquery oracle — the rewrite
+    * must be invisible to the answer.
     */
-  private def snapshotJoinPruneDimScan(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.plans.SnapshotJoinPrune.installIsolated(s0)
+  private def snapshotJoinPruneDimScan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = lakeBase(dir, "joinprunedimscan")
     SnapshotTable.deleteTree(base)
@@ -2291,19 +2269,6 @@ object LakeOps {
         s"survivor list: $planned fact files planned vs ${kept.size}")
     require(graft.plans.SnapshotJoinPrune.rewrites > before,
       "the planner rule never fired on the dim-scan join")
-    val parentPlanned = SnapshotTable.readAt(s0, base, v1)
-      .join(Tables.orders(s0, dir).filter(col("o_custkey") === cust)
-        .select(col("o_orderkey").as("l_orderkey")),
-        Seq("l_orderkey"), "left_semi")
-      .queryExecution.sparkPlan.collect {
-        case sc: org.apache.spark.sql.execution.FileSourceScanExec
-            if sc.relation.location.inputFiles
-              .exists(_.contains("/joinprunedimscan/")) =>
-          sc.relation.location.inputFiles.length
-      }.sum
-    require(parentPlanned == total,
-      s"rule leak: the parent session planned $parentPlanned of $total " +
-        "files — installIsolated failed to scope the rewrite")
     joined
       .agg(count(lit(1)).as("n_lines"),
         round(sum($"l_quantity"), 2).as("sum_qty"),
@@ -2440,17 +2405,15 @@ object LakeOps {
     * .format("snapshot").load(dir)` — with `versionAsOf` /
     * `timestampAsOf` / `branch` time travel — must resolve a
     * delete+append+upsert MOR chain IDENTICALLY to the Scala-API
-    * [[SnapshotTable.readAt]], through BOTH execution paths: the plain
-    * session's V1 fallback scan (no optimizer rule installed — requires
-    * pin that zero substitutions happened and the plan carries no
-    * parquet FileScan of its own) and the
-    * [[graft.plans.SnapshotRelationRule]] substitution path (requires
-    * pin that the substitution fired and the physical plan IS native
-    * parquet FileScans, i.e. byte-identical shape to the API read).
-    * Mutually-exclusive time-travel options must fail loudly. The
-    * answer rows are derived from the DSv2 reads themselves, so the
-    * DuckDB oracle gates the connector's chain resolution at every
-    * pinned epoch.
+    * [[SnapshotTable.readAt]], through the
+    * [[graft.plans.SnapshotRelationRule]] substitution every graft
+    * session carries (requires pin that the substitution fired and the
+    * physical plan IS native parquet FileScans, i.e. byte-identical
+    * shape to the API read; SnapshotDsv2Spec covers the V1 fallback of
+    * a session without the extensions). Mutually-exclusive time-travel
+    * options must fail loudly. The answer rows are derived from the
+    * DSv2 reads themselves, so the DuckDB oracle gates the connector's
+    * chain resolution at every pinned epoch.
     */
   private def snapshotDsv2Read(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -2489,31 +2452,19 @@ object LakeOps {
       (r.getLong(0), r.getLong(1))
     }
     val apiTip = stat(SnapshotTable.readAt(s, base, v4))
-    // 1) V1 fallback on the PLAIN session: correct with zero rule help
+    // 1) substitution rule: plan-identical to the API read
     val subst0 = graft.plans.SnapshotRelationRule.substitutions
-    val fb = s.read.format("snapshot").load(base)
-    require(!fb.queryExecution.executedPlan.toString.contains("FileScan"),
-      "plain-session snapshot read must plan the V1 fallback scan, not " +
-        "a substituted parquet scan")
-    val fbStat = stat(fb)
-    require(fbStat == apiTip,
-      s"V1 fallback read diverged from readAt: $fbStat vs $apiTip")
-    require(graft.plans.SnapshotRelationRule.substitutions == subst0,
-      "the substitution rule must not fire on a session it was never " +
-        "installed on")
-    // 2) substitution rule (isolated session): plan-identical to the API
-    val iso = graft.plans.SnapshotRelationRule.installIsolated(s)
-    val fast = iso.read.format("snapshot").load(base)
+    val fast = s.read.format("snapshot").load(base)
     val fastStat = stat(fast)
     val fastPlan = fast.queryExecution.executedPlan.toString
     require(fastPlan.contains("FileScan") &&
       !fastPlan.contains("snapshot-v1-fallback"),
       "the substituted DSv2 read must plan native parquet FileScans")
     require(graft.plans.SnapshotRelationRule.substitutions > subst0,
-      "the substitution rule must fire on the installIsolated session")
+      "the substitution rule must fire — the session lacks GraftExtensions")
     require(fastStat == apiTip,
       s"substituted read diverged from readAt: $fastStat vs $apiTip")
-    // 3) time travel options resolve like the Scala API
+    // 2) time travel options resolve like the Scala API
     val dv2 = s.read.format("snapshot")
       .option("versionAsOf", v2.toString).load(base)
     require(stat(dv2) == stat(SnapshotTable.readAt(s, base, v2)),

@@ -12,33 +12,32 @@ import graft.ops.Tables
   */
 object Olap {
 
-  /** Sessions whose temp views are already registered, mapped to the data
-    * dir they were registered from. Weak keys: the guard must not keep a
-    * closed SparkSession alive.
+  /** Per session, the data dir each registered temp view was loaded
+    * from. Weak keys: the guard must not keep a closed SparkSession
+    * alive.
     */
   private val registeredDirs =
     java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]())
+      new java.util.WeakHashMap[SparkSession,
+        scala.collection.mutable.Map[String, String]]())
 
-  /** Register every harness table as a temp view so users can address the
-    * engine in plain SQL.
+  /** Register the harness tables a SQL-surface query reads as temp
+    * views — only those, so a query needs only its own tables on disk.
     *
-    * Idempotent per (session, dir): registration costs nine parquet
-    * schema reads, so repeat calls from query bodies (bench times them)
-    * must be free. A dir change re-registers — `createOrReplaceTempView`
-    * swaps the views in place.
+    * Idempotent per (session, table, dir): each registration costs a
+    * parquet schema read, so repeat calls from query bodies (bench times
+    * them) must be free. A dir change re-registers —
+    * `createOrReplaceTempView` swaps the view in place. A view is marked
+    * registered only AFTER it registered, so a failure (a missing
+    * parquet) or a racing first caller retries instead of skipping.
     */
-  def registerTables(s: SparkSession, dir: String): Unit =
-    // check-and-register is atomic (synchronized on the map), and the
-    // session is marked registered only AFTER every view registered:
-    // a partial failure (one missing parquet) or a racing first caller
-    // must retry, not skip and die later on a missing temp view
+  def registerTables(s: SparkSession, dir: String, tables: String*): Unit =
     registeredDirs.synchronized {
-      if (registeredDirs.get(s) != dir) {
-        Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "documents", "embeddings")
-          .foreach(t => Tables.load(s, dir, t).createOrReplaceTempView(t))
-        registeredDirs.put(s, dir)
+      val done = registeredDirs.computeIfAbsent(s,
+        _ => scala.collection.mutable.Map.empty)
+      tables.filterNot(t => done.get(t).contains(dir)).foreach { t =>
+        Tables.load(s, dir, t).createOrReplaceTempView(t)
+        done(t) = dir
       }
     }
 
@@ -71,7 +70,7 @@ object Olap {
     * end-to-end (parser → analyzer → same physical planning).
     */
   private def sqlSurface(s: SparkSession, dir: String): DataFrame = {
-    registerTables(s, dir)
+    registerTables(s, dir, "customer", "nation")
     s.sql("""
       SELECT n_name, count(*) AS n_cust, round(sum(c_acctbal), 2) AS total_bal
       FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -113,7 +112,7 @@ object Olap {
     * DataFrame API spells this rollup/cube only).
     */
   private def groupingSets(s: SparkSession, dir: String): DataFrame = {
-    registerTables(s, dir)
+    registerTables(s, dir, "customer")
     s.sql("""
       SELECT c_mktsegment, c_nationkey,
         count(*) AS n, round(sum(c_acctbal), 2) AS total_bal,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Tables
+import graft.ops.{Exact, Tables}
 
 /** Second TPC-H breadth batch: the multi-dimension join shapes (Q7/Q8/Q9),
   * the outer-join distribution (Q13), the having/scalar-max shapes
@@ -117,7 +117,11 @@ object RelationalDeep {
     * 0.6 × p_retailprice × l_quantity (same join structure: part,
     * supplier, lineitem, orders, nation; same name-pattern filter; same
     * group-by). part⋈lineitem stays a broadcast of the filtered part
-    * subset.
+    * subset. The profit sum is exact: each row's amount (≤5 dp) is
+    * quantized to micro-units, summed as integers and rounded half-away
+    * to cents in integer arithmetic — a double sum lands on either side
+    * of a half-cent tie depending on summation order, and the two
+    * engines round such ties apart.
     */
   private def q09ProfitByNation(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -128,18 +132,23 @@ object RelationalDeep {
       .join(Tables.orders(s, dir), $"l_orderkey" === $"o_orderkey")
       .join(broadcast(Tables.supplier(s, dir)), $"l_suppkey" === $"s_suppkey")
       .join(broadcast(Tables.nation(s, dir)), $"s_nationkey" === $"n_nationkey")
-      .withColumn("amount",
-        $"l_extendedprice" * (lit(1.0) - $"l_discount") - lit(0.6) * $"p_retailprice" * $"l_quantity")
+      .withColumn("amount_micro", Exact.micro(q09Amount))
       .groupBy($"n_name".as("nation"), year($"o_orderdate").as("o_year"))
-      .agg(round(sum($"amount"), 2).as("sum_profit"))
+      .agg(Exact.microSumTo2dp("sum(amount_micro)").as("sum_profit"))
       .orderBy($"nation", $"o_year".desc)
   }
 
+  /** q09's per-row profit, as SQL text both engines evaluate. */
+  private val q09Amount =
+    "(l_extendedprice * (1.0 - l_discount) - 0.6 * p_retailprice * l_quantity)"
+
   private val q09Oracle =
-    """SELECT nation, o_year, round(sum(amount), 2) AS sum_profit
+    s"""SELECT nation, o_year,
+      |  ${Exact.microSumTo2dpSql("CAST(sum(amount_micro) AS BIGINT)", Exact.DuckDiv)}
+      |    AS sum_profit
       |FROM (
       |  SELECT n_name AS nation, year(o_orderdate) AS o_year,
-      |         l_extendedprice * (1.0 - l_discount) - 0.6 * p_retailprice * l_quantity AS amount
+      |         ${Exact.microSql(q09Amount)} AS amount_micro
       |  FROM part, supplier, lineitem, orders, nation
       |  WHERE s_suppkey = l_suppkey AND p_partkey = l_partkey
       |    AND o_orderkey = l_orderkey AND s_nationkey = n_nationkey

@@ -42,8 +42,8 @@ import graft.ops.SnapshotTable
   *
   *  1. '''Plan substitution''' (the fast path): the
   *     [[graft.plans.SnapshotRelationRule]] optimizer rule — injected
-  *     by [[graft.plans.GraftExtensions]], or per-session via
-  *     [[graft.plans.SnapshotRelationRule.install]] — replaces the V2
+  *     by [[graft.plans.GraftExtensions]], which every [[graft.Session]]
+  *     carries — replaces the V2
   *     relation with `readAt`'s own logical plan (exprIds preserved
   *     through an aliasing Project), so the physical plan is
   *     byte-identical to the Scala-API read: native parquet
@@ -52,9 +52,10 @@ import graft.ops.SnapshotTable
   *     scan is a [[V1Scan]] whose `buildScan` executes the same
   *     `readAt` DataFrame as an `RDD[Row]` — full chain semantics on a
   *     vanilla session, at row-conversion cost (no pushdown through
-  *     the scan boundary). The rule is the performance opt-in; the
-  *     answer is identical either way, which the `snapshot_dsv2_read`
-  *     gate pins (all three reads hash-equal).
+  *     the scan boundary). The rule is the performance path; the
+  *     answer is identical either way (the `snapshot_dsv2_read` gate
+  *     pins the substituted read against `readAt`, SnapshotDsv2Spec
+  *     the fallback).
   *
   * Options: `versionAsOf` (long) XOR `timestampAsOf` (epoch millis or
   * ISO-8601 instant), optionally scoped by `branch`; no options =

@@ -1,34 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.GlobalSeqId
 
 /** The §7.5(a) rewrite: global row_number() → two-pass range plan.
-  *
-  * Every install here goes through [[GlobalSeqId.installIsolated]]:
-  * `extraOptimizations` is session-lifetime state, and this suite's
-  * session is JVM-wide — installing on it would silently flip every
-  * OTHER suite's global-window plans (the exact leak the rule's
-  * production caller, ids_rule_orders, was fixed for).
+  * The shared test session is a [[graft.Session]], which carries
+  * GraftExtensions, so every plan here goes through the rule.
   */
 class GlobalSeqIdSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def numbered(s: SparkSession) = {
+  private def numbered = {
     import org.apache.spark.sql.{functions => F}
-    s.read.parquet(s"$dir/orders.parquet")
+    spark.read.parquet(s"$dir/orders.parquet")
       .select(F.col("o_orderkey"), F.col("o_totalprice"))
       .withColumn("row_id",
         row_number().over(Window.orderBy(F.col("o_orderkey"))))
   }
 
   test("rewrite replaces the single-task window with a range two-pass plan") {
-    val iso = GlobalSeqId.installIsolated(spark)
-    val df = numbered(iso)
+    val df = numbered
     val plan = df.queryExecution.executedPlan.toString
     // SparkPlan.nodeName strips the Exec suffix in plan strings
     assert(plan.contains("GlobalSeqId"), s"rewrite did not fire:\n$plan")
@@ -38,68 +32,38 @@ class GlobalSeqIdSpec extends SparkSpec {
   }
 
   test("ids are exactly row_number's: 1-based, contiguous, order-aligned") {
-    val iso = GlobalSeqId.installIsolated(spark)
-    import iso.implicits._
-    val got = numbered(iso).orderBy($"row_id")
+    import spark.implicits._
+    val got = numbered.orderBy($"row_id")
       .as[(Long, Double, Int)].collect().toSeq
     assert(got.nonEmpty)
     assert(got.map(_._3) == (1 to got.size))
     // order alignment: ids ascend with the ordering key
     assert(got.map(_._1) == got.map(_._1).sorted)
     // schema fidelity: row_number is IntegerType, non-null
-    val f = numbered(iso).schema("row_id")
+    val f = numbered.schema("row_id")
     assert(f.dataType.typeName == "integer")
   }
 
   test("partitioned windows and other window functions are left alone") {
-    val iso = GlobalSeqId.installIsolated(spark)
     import org.apache.spark.sql.{functions => F}
-    val byCust = iso.read.parquet(s"$dir/orders.parquet")
+    val byCust = spark.read.parquet(s"$dir/orders.parquet")
       .withColumn("rn", row_number().over(
         Window.partitionBy(F.col("o_custkey")).orderBy(F.col("o_orderkey"))))
     assert(byCust.queryExecution.executedPlan.toString.contains("Window"))
-    val ranked = iso.read.parquet(s"$dir/orders.parquet")
+    val ranked = spark.read.parquet(s"$dir/orders.parquet")
       .withColumn("rk", rank().over(Window.orderBy(F.col("o_orderkey"))))
     assert(ranked.queryExecution.executedPlan.toString.contains("Window"))
   }
 
   test("a global window the rule can't rewrite is counted (and warned)") {
-    val iso = GlobalSeqId.installIsolated(spark)
     import org.apache.spark.sql.{functions => F}
     val before = GlobalSeqId.unrewrittenGlobalWindows
     // rank() over a global order: still a single-task funnel, out of
     // the rewrite's scope — the rule must surface it, not plan silently
-    iso.read.parquet(s"$dir/orders.parquet")
+    spark.read.parquet(s"$dir/orders.parquet")
       .withColumn("rk", rank().over(Window.orderBy(F.col("o_orderkey"))))
       .queryExecution.executedPlan
     assert(GlobalSeqId.unrewrittenGlobalWindows > before,
       "near-miss global window was not counted")
-  }
-
-  test("installIsolated leaves the parent session's plans untouched") {
-    val parent = spark.newSession()
-    val iso = GlobalSeqId.installIsolated(parent)
-    // parent: vanilla single-task Window plan, no rule anywhere
-    val parentPlan = numbered(parent).queryExecution.executedPlan.toString
-    assert(parentPlan.contains("Window"),
-      s"rule leaked into parent session:\n$parentPlan")
-    assert(!parentPlan.contains("GlobalSeqId"), parentPlan)
-    assert(parent.experimental.extraOptimizations.isEmpty)
-    assert(parent.experimental.extraStrategies.isEmpty)
-    // isolated clone: rewritten
-    val isoPlan = numbered(iso).queryExecution.executedPlan.toString
-    assert(isoPlan.contains("GlobalSeqId"), isoPlan)
-    // and the clone kept the parent's builder-time SQL confs
-    assert(iso.conf.get("spark.sql.session.timeZone") == "UTC")
-  }
-
-  test("install is idempotent across calls") {
-    val iso = GlobalSeqId.installIsolated(spark)
-    GlobalSeqId.install(iso)
-    GlobalSeqId.install(iso)
-    assert(iso.experimental.extraOptimizations
-      .count(_ == graft.plans.GlobalRowNumberRule) == 1)
-    assert(iso.experimental.extraStrategies
-      .count(_ == graft.plans.GlobalSeqIdStrategy) == 1)
   }
 }

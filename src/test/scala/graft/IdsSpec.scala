@@ -22,17 +22,20 @@ class IdsSpec extends SparkSpec {
   test("withScalableGlobalId matches withGlobalId (long vs int widths)") {
     val a = Ids.withGlobalId(df, "id", Seq($"src_rank", $"line_no"))
       .select($"v", $"id".cast("long"))
-    val b = Ids.withScalableGlobalId(df, "id", Seq($"src_rank", $"line_no"))
-      .select($"v", $"id")
-    assert(a.collect().toSet == b.collect().toSet)
+    val (b, release) =
+      Ids.withScalableGlobalIdManaged(df, "id", Seq($"src_rank", $"line_no"))
+    assert(a.collect().toSet == b.select($"v", $"id").collect().toSet)
+    release()
   }
 
   test("withScalableGlobalId on a larger shuffled input") {
     val big = spark.range(1000).toDF("line_no")
       .withColumn("src_rank", lit(1))
       .repartition(7)
-    val ids = Ids.withScalableGlobalId(big, "id", Seq($"src_rank", $"line_no"))
+    val (ids, release) =
+      Ids.withScalableGlobalIdManaged(big, "id", Seq($"src_rank", $"line_no"))
     val rows = ids.select($"line_no", $"id").as[(Long, Long)].collect().sortBy(_._1)
+    release()
     assert(rows.map(_._2).toSeq == (1L to 1000L))
   }
 
@@ -44,7 +47,8 @@ class IdsSpec extends SparkSpec {
       .withColumn("a", concat(lit("x"), $"line_no"))
       .withColumn("b", $"line_no" * 2)
       .repartition(7)
-    val ids = Ids.withScalableGlobalId(wide, "id", Seq($"src_rank", $"line_no"))
+    val (ids, release) =
+      Ids.withScalableGlobalIdManaged(wide, "id", Seq($"src_rank", $"line_no"))
     val rows = ids.select($"line_no", $"id").as[(Long, Long)].collect().sortBy(_._1)
     assert(rows.map(_._2).toSeq == (1L to 1000L))
     val plan = ids.queryExecution.executedPlan.toString
@@ -63,7 +67,7 @@ class IdsSpec extends SparkSpec {
     assert(!numbering.contains("Exchange") && !numbering.contains("Window") &&
       !numbering.contains("Join"),
       s"numbering pass should be a pure projection over the cached scan:\n$plan")
-    spark.catalog.clearCache()
+    release()
   }
 
   test("orders_price_deciles: closed-form buckets == the window ntile plan") {

@@ -1,10 +1,10 @@
 package graft
 
-/** PLANS.md is a derived artifact (tools/plans.sc audits every registry
+/** PLANS.md is a derived artifact (graft.PlanDump audits every registry
   * query's physical plan) — this gate re-derives its section list from
   * the registry so coverage cannot drift: r13 shipped with 114 of 168
   * queries audited because the generator carried a hand-curated list.
-  * If this fails, regenerate (tools/plans.sc), don't edit the report.
+  * If this fails, regenerate (graft.PlanDump), don't edit the report.
   */
 class PlansCoverageSpec extends SparkSpec {
 
@@ -19,7 +19,7 @@ class PlansCoverageSpec extends SparkSpec {
     val missing = registry -- sections
     val stray = sections -- registry
     assert(missing.isEmpty,
-      s"queries missing from PLANS.md (regenerate with tools/plans.sc): " +
+      s"queries missing from PLANS.md (regenerate with graft.PlanDump): " +
         s"${missing.toSeq.sorted.mkString(", ")}")
     assert(stray.isEmpty,
       s"PLANS.md sections not in the registry: ${stray.toSeq.sorted.mkString(", ")}")

@@ -54,23 +54,9 @@ class PostingExpressionsSpec extends SparkSpec {
   }
 
   test("the SQL surface plans the same expression") {
-    // the ExtensionsSpec detach/rebuild/restore dance: extensions bind
-    // at session build, and getOrCreate returns the shared session
-    val base = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      val r = s.sql("SELECT term_counts('a b a') AS tc").collect().head
-      val arr = r.getSeq[org.apache.spark.sql.Row](0)
-      assert(arr.map(x => (x.getString(0), x.getLong(1))) ===
-        Seq(("a", 2L), ("b", 1L)))
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
-    }
+    val r = spark.sql("SELECT term_counts('a b a') AS tc").collect().head
+    val arr = r.getSeq[org.apache.spark.sql.Row](0)
+    assert(arr.map(x => (x.getString(0), x.getLong(1))) ===
+      Seq(("a", 2L), ("b", 1L)))
   }
 }

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.SnapshotTable
 
-/** The `format("snapshot")` DSv2 connector: option resolution edges and
-  * the GraftExtensions injection path (the oracle gate
-  * `snapshot_dsv2_read` covers the fallback/substitution/time-travel
-  * matrix; this spec covers what the gate doesn't).
+/** The `format("snapshot")` DSv2 connector: option resolution edges,
+  * the GraftExtensions substitution every graft session carries, and
+  * the V1 fallback of a session built without them (the oracle gate
+  * `snapshot_dsv2_read` covers the substitution/time-travel matrix;
+  * this spec covers what the gate doesn't).
   */
 class SnapshotDsv2Spec extends SparkSpec {
 
@@ -71,34 +72,38 @@ class SnapshotDsv2Spec extends SparkSpec {
 
   test("GraftExtensions session substitutes the relation (FileScan plan)") {
     val dir = freshTable()
+    val before = graft.plans.SnapshotRelationRule.substitutions
+    val df = spark.read.format("snapshot").load(dir)
+      .filter(col("k") <= 10L).agg(sum(col("x")))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("FileScan"),
+      s"extensions session must plan native parquet scans:\n$plan")
+    assert(!plan.contains("snapshot-v1-fallback"))
+    assert(graft.plans.SnapshotRelationRule.substitutions > before)
+    assert(df.collect()(0).getLong(0) == (1L to 10L).map(_ * 10).sum)
+  }
+
+  test("fallback read on the plain session answers the full chain") {
+    // a session built WITHOUT GraftExtensions (same SparkContext):
+    // detach the shared default, build, restore
+    val dir = freshTable()
     val base = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
+      val plain = SparkSession.builder().master("local[2]").getOrCreate()
+      assert(plain ne base)
       val before = graft.plans.SnapshotRelationRule.substitutions
-      val df = s.read.format("snapshot").load(dir)
-        .filter(col("k") <= 10L).agg(sum(col("x")))
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("FileScan"),
-        s"extensions session must plan native parquet scans:\n$plan")
-      assert(!plan.contains("snapshot-v1-fallback"))
-      assert(graft.plans.SnapshotRelationRule.substitutions > before)
-      assert(df.collect()(0).getLong(0) == (1L to 10L).map(_ * 10).sum)
+      val df = plain.read.format("snapshot").load(dir)
+      assert(!df.queryExecution.executedPlan.toString.contains("FileScan"),
+        "a plain session must plan the V1 fallback scan")
+      assert(df.count() == 60L)
+      assert(df.agg(sum(col("x"))).collect()(0).getLong(0) ==
+        (1L to 60L).map(_ * 10).sum)
+      assert(graft.plans.SnapshotRelationRule.substitutions == before)
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)
     }
-  }
-
-  test("fallback read on the plain session answers the full chain") {
-    val dir = freshTable()
-    val df = spark.read.format("snapshot").load(dir)
-    assert(df.count() == 60L)
-    assert(df.agg(sum(col("x"))).collect()(0).getLong(0) ==
-      (1L to 60L).map(_ * 10).sum)
   }
 }

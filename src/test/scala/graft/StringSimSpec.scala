@@ -59,21 +59,9 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("jaro_winkler usable from plain SQL via GraftExtensions") {
-    val base = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      val r = s.sql(
-        "SELECT jaro_winkler('MARTHA', 'MARHTA') AS j").collect()(0)
-      assert(r.getDouble(0) == 0.9611111111111111)
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
-    }
+    val r = spark.sql(
+      "SELECT jaro_winkler('MARTHA', 'MARHTA') AS j").collect()(0)
+    assert(r.getDouble(0) == 0.9611111111111111)
   }
 
   test("fuzzy_name_clusters: total over the domain, canonical forms closed") {

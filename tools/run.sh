@@ -21,7 +21,5 @@ done
 exec java $ADD_OPENS $EXTRA_JAVA_OPTS \
   -XX:ReservedCodeCacheSize=1g \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
