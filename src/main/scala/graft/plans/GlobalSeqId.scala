@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet
 import org.apache.spark.sql.catalyst.expressions.RowNumber
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
@@ -46,6 +47,12 @@ object GlobalSeqId {
     * testable, visible via [[unrewrittenGlobalWindows]].
     */
   private[plans] val unrewrittenCount = new java.util.concurrent.atomic.AtomicLong
+
+  /** Marks a Window already counted and warned: the optimizer runs the
+    * rule on every pass of its batch, and the tag travels with the
+    * node across those passes, so each Window counts once.
+    */
+  private[plans] val NearMissSeen = TreeNodeTag[Unit]("graft.globalWindowNearMiss")
   def unrewrittenGlobalWindows: Long = unrewrittenCount.get()
 }
 
@@ -74,8 +81,9 @@ object GlobalRowNumberRule extends Rule[LogicalPlan] {
     // still funnel every row through ONE task; splitting the RowNumber
     // out would not help because the residual Window keeps the funnel.
     // Surface the hazard instead of silently planning it.
-    case w @ Window(exprs, Seq(), _, _, _)
-        if exprs.nonEmpty && w.orderSpec.nonEmpty =>
+    case w @ Window(exprs, Seq(), _, _, _) if exprs.nonEmpty &&
+        w.orderSpec.nonEmpty && w.getTagValue(GlobalSeqId.NearMissSeen).isEmpty =>
+      w.setTagValue(GlobalSeqId.NearMissSeen, ())
       GlobalSeqId.unrewrittenCount.incrementAndGet()
       logWarning(s"global window (no PARTITION BY) not rewritten by " +
         s"GlobalRowNumberRule — single-task funnel ahead: " +

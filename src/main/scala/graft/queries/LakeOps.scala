@@ -2465,17 +2465,17 @@ object LakeOps {
     require(fastStat == apiTip,
       s"substituted read diverged from readAt: $fastStat vs $apiTip")
     // 2) time travel options resolve like the Scala API
-    val dv2 = s.read.format("snapshot")
-      .option("versionAsOf", v2.toString).load(base)
-    require(stat(dv2) == stat(SnapshotTable.readAt(s, base, v2)),
+    val v2Stat = stat(s.read.format("snapshot")
+      .option("versionAsOf", v2.toString).load(base))
+    require(v2Stat == stat(SnapshotTable.readAt(s, base, v2)),
       "versionAsOf must read the pinned version exactly")
-    val dAsof = s.read.format("snapshot")
-      .option("timestampAsOf", (t4 - 1).toString).load(base)
-    require(stat(dAsof) == stat(SnapshotTable.readAt(s, base, v3)),
+    val asofStat = stat(s.read.format("snapshot")
+      .option("timestampAsOf", (t4 - 1).toString).load(base))
+    require(asofStat == stat(SnapshotTable.readAt(s, base, v3)),
       "timestampAsOf strictly before v4's publish must resolve v3")
-    val dBranch = s.read.format("snapshot")
-      .option("branch", "side").load(base)
-    require(stat(dBranch) == stat(SnapshotTable.readAt(s, base, bSide)),
+    val branchStat = stat(s.read.format("snapshot")
+      .option("branch", "side").load(base))
+    require(branchStat == stat(SnapshotTable.readAt(s, base, bSide)),
       "branch option must read the branch head")
     val clash =
       try {
@@ -2487,8 +2487,8 @@ object LakeOps {
           Option(e.getMessage).exists(_.contains("mutually exclusive"))
       }
     require(clash, "versionAsOf+timestampAsOf must be rejected loudly")
-    Seq(("asof_v3", stat(dAsof)), ("branch", stat(dBranch)),
-      ("final", fastStat), ("v2", stat(dv2)))
+    Seq(("asof_v3", asofStat), ("branch", branchStat),
+      ("final", fastStat), ("v2", v2Stat))
       .map { case (tag, (n, sm)) => (tag, n, sm) }
       .toDF("epoch", "n_rows", "s_micro")
       .select($"epoch", $"n_rows",

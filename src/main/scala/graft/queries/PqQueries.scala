@@ -1,26 +1,29 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Tables, VectorOps}
+import graft.ops.{Tables, VectorIndex, VectorOps}
+import graft.ops.VectorIndex.{KmK, NProbe, PqIndex, QueryVecId, kmIterSql,
+  PqK => K, PqM => M, PqSubDim => SubDim}
 
 /** Product-quantization ANN (Jégou/Douze/Schmid, "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011 — the compression tier under
-  * FAISS-style IVF-PQ): the 64-dim embedding splits into [[M]] subspaces
-  * of [[SubDim]] dims; each subvector is quantized to its nearest of
-  * ≤[[K]] codewords (squared-L2 — the PQ objective), so a vector stores
-  * as M small codes instead of 64 floats — 64× compression at these
+  * FAISS-style IVF-PQ): the 64-dim embedding splits into
+  * [[VectorIndex.PqM]] subspaces of [[VectorIndex.PqSubDim]] dims; each
+  * subvector is quantized to its nearest of ≤[[VectorIndex.PqK]]
+  * codewords (squared-L2 — the PQ objective), so a vector stores as M
+  * small codes instead of 64 floats — 64× compression at these
   * parameters, the difference between "embeddings fit on the cluster"
   * and "they don't" at 100 TB.
   *
-  * The codebook is TRAINED: deterministic init (subvectors of the first
-  * K stored vectors) + one distributed Lloyd step per subspace — all M
-  * subspaces train in ONE aggregation job (explode by dimension, key by
-  * (subspace, assigned code, dim)), and only M·K·SubDim mean rows cross
-  * the driver bridge, the same k·dim boundary as
-  * [[SimilarityQueries]]' k-means. Codewords that attract no members
-  * drop out, mirroring `lloydStep`.
+  * The codebook is TRAINED ([[VectorIndex.pqIndex]]): deterministic
+  * init (subvectors of the first K stored vectors) + one distributed
+  * Lloyd step per subspace — all M subspaces train in ONE aggregation
+  * job (explode by dimension, key by (subspace, assigned code, dim)),
+  * and only M·K·SubDim mean rows cross the driver bridge through the
+  * same Lloyd update as [[SimilarityQueries]]' k-means. Codewords that
+  * attract no members drop out, as emptied k-means cells do.
   *
   * Search is asymmetric distance computation (ADC): the query's inner
   * product against every codeword is a driver-side M×K lookup table; a
@@ -48,124 +51,8 @@ import graft.ops.{Tables, VectorOps}
   */
 object PqQueries {
 
-  private val QueryVecId = 0
-  private val Dim = 64
-  private val M = 4
-  private val SubDim = Dim / M
-  private val K = 8
   private val CandK = 100
   private val PqTopK = 10
-
-  /** A trained PQ index: query subvectors + per-subspace codewords
-    * (cid → SubDim-dim double array, ascending cid).
-    */
-  private final case class PqIndex(
-      qSubs: Array[Array[Double]],
-      books: Array[Array[(Int, Array[Double])]])
-
-  /** Sequential left-to-right dot in double — the same operation order
-    * as the oracle's `list_reduce` and the executor-side kernels.
-    */
-  private def dotSeq(x: Array[Double], y: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < x.length) { s += x(i) * y(i); i += 1 }
-    s
-  }
-
-  private def round6(d: Double): Double =
-    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** Squared L2 between an array<double> column and a literal codeword:
-    * sequential fold of (x-y)² — codegen'd higher-order functions, no
-    * UDF.
-    */
-  private def sqDist(sub: Column, cw: Array[Double]): Column =
-    aggregate(
-      zip_with(sub, typedlit(cw), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** 1-based POSITION into `book` of the row's codeword for one
-    * subspace: argmin over codewords of the rounded squared-L2, first
-    * (lowest-cid — books are cid-ascending) minimum on ties.
-    */
-  private def codePos(sub: Column, book: Array[(Int, Array[Double])]): Column = {
-    val d2s = array(book.map { case (_, cw) => round(sqDist(sub, cw), 6) }: _*)
-    array_position(d2s, array_min(d2s)).cast("int")
-  }
-
-  /** The embedding column exact-widened to array<double> (the domain
-    * every distance/score is computed in, both engines).
-    */
-  private def embD: Column = col("embedding").cast("array<double>")
-
-  private def subCol(m: Int): Column = slice(embD, m * SubDim + 1, SubDim)
-
-  /** Deterministic init: subvectors of the first K vectors. */
-  private def initBooks(s: SparkSession, dir: String): PqIndex = {
-    import s.implicits._
-    val first = Tables.embeddings(s, dir)
-      .filter($"vec_id" < K).orderBy($"vec_id")
-      .select($"vec_id", $"embedding").as[(Long, Array[Float])]
-      .collect()
-    require(first.map(_._1).toSeq == (0L until K).toSeq,
-      s"PQ codebook needs vec_ids 0..${K - 1} present")
-    require(first.forall(_._2.length == Dim), s"PQ expects $Dim-dim embeddings")
-    val asDouble = first.map(_._2.map(_.toDouble))
-    val qSubs = Array.tabulate(M)(m =>
-      asDouble(QueryVecId).slice(m * SubDim, (m + 1) * SubDim))
-    val books = Array.tabulate(M)(m => Array.tabulate(K)(c =>
-      (c, asDouble(c).slice(m * SubDim, (m + 1) * SubDim))))
-    PqIndex(qSubs, books)
-  }
-
-  /** One Lloyd step for ALL subspaces in one aggregation: assign codes
-    * against `init`, explode the 64 dims, key each element by
-    * (subspace = pos/SubDim, that subspace's code, pos%SubDim), mean.
-    * M·K·SubDim rows cross the driver; means round HALF_UP 6 (the
-    * engine-portability contract — the oracle's `round(avg(..), 6)`).
-    */
-  private def lloydOnce(s: SparkSession, dir: String, init: PqIndex): PqIndex = {
-    import s.implicits._
-    val codeCids = (0 until M).map { m =>
-      val pos = codePos(subCol(m), init.books(m))
-      element_at(typedlit(init.books(m).map(_._1)), pos)
-    }
-    val trained = Tables.fanOut(Tables.embeddings(s, dir))
-      .select(array(codeCids: _*).as("codes"), posexplode(embD).as(Seq("pos", "x")))
-      .select(
-        ($"pos" / SubDim).cast("int").as("m"),
-        element_at($"codes", ($"pos" / SubDim).cast("int") + 1).as("cid"),
-        ($"pos" % SubDim).as("i"),
-        $"x")
-      .groupBy($"m", $"cid", $"i").agg(avg($"x").as("mx"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2),
-        round6(r.getDouble(3))))
-    val books = Array.tabulate(M) { m =>
-      trained.filter(_._1 == m).groupBy(_._2).toArray.sortBy(_._1)
-        .map { case (cid, rows) =>
-          (cid, rows.sortBy(_._3).map(_._4))
-        }
-    }
-    PqIndex(init.qSubs, books)
-  }
-
-  /** Trained index, memoized per (session, dir): a real PQ index trains
-    * once at build time — search, recall gate, and bench share one run.
-    * Weak session keys; assumes the parquet under `dir` is immutable
-    * for the session (the harness contract).
-    */
-  private val indexes =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Map[String, PqIndex]]())
-
-  private def trainedIndex(s: SparkSession, dir: String): PqIndex = {
-    val cached = Option(indexes.get(s)).getOrElse(Map.empty)
-    cached.getOrElse(dir, {
-      val idx = lloydOnce(s, dir, initBooks(s, dir))
-      indexes.merge(s, Map(dir -> idx), (old, nw) => old ++ nw)
-      idx
-    })
-  }
 
   /** Candidate vec_ids by ADC score: encode (M argmins over rounded
     * d²), score (M LUT lookups summed left-to-right), cut to CandK by
@@ -173,13 +60,9 @@ object PqQueries {
     */
   private def adcCandidates(s: SparkSession, dir: String, idx: PqIndex): DataFrame = {
     import s.implicits._
-    val approx = (0 until M).map { m =>
-      val lut = idx.books(m).map { case (_, cw) => round6(dotSeq(idx.qSubs(m), cw)) }
-      element_at(typedlit(lut), codePos(subCol(m), idx.books(m)))
-    }.reduceLeft(_ + _)
     Tables.fanOut(Tables.embeddings(s, dir))
       .filter($"vec_id" =!= QueryVecId)
-      .withColumn("approx", approx)
+      .withColumn("approx", VectorIndex.adcScore(idx))
       .orderBy($"approx".desc, $"vec_id")
       .limit(CandK)
       .select($"vec_id")
@@ -191,7 +74,7 @@ object PqQueries {
     */
   private def annPqAdcTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val idx = trainedIndex(s, dir)
+    val idx = VectorIndex.pqIndex(s, dir)
     val qVecF = idx.qSubs.flatten.map(_.toFloat)
     Tables.embeddings(s, dir)
       .join(broadcast(adcCandidates(s, dir, idx)), Seq("vec_id"))
@@ -277,18 +160,10 @@ object PqQueries {
     */
   private def annPqRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val idx = trainedIndex(s, dir)
+    val idx = VectorIndex.pqIndex(s, dir)
     val qVecF = idx.qSubs.flatten.map(_.toFloat)
-    val pq = annPqAdcTopk(s, dir).select($"vec_id")
-    val exact = Tables.fanOut(Tables.embeddings(s, dir))
-      .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cos_raw", VectorOps.cosine($"embedding", typedlit(qVecF)))
-      .orderBy($"cos_raw".desc, $"vec_id")
-      .limit(PqTopK)
-      .select($"vec_id")
-    pq.join(exact, Seq("vec_id"), "left_semi")
-      .agg((count(lit(1)).cast("double") / PqTopK).as("recall_at_k"))
-      .select(lit(PqTopK).as("k"), $"recall_at_k")
+    VectorIndex.recallAtK(s, dir, annPqAdcTopk(s, dir).select($"vec_id"),
+      typedlit(qVecF), PqTopK)
   }
 
   private val annPqRecallOracle =
@@ -313,9 +188,10 @@ object PqQueries {
     * et al. §V: coarse quantizer + product quantizer), in its
     * no-residual variant (`by_residual=false` in FAISS terms) so both
     * engines' codebooks stay independently reproducible: rows are
-    * binned by their nearest TRAINED coarse centroid
-    * ([[SimilarityQueries]]' one-Lloyd-step codebook, shared via the
-    * per-(session, dir) memo), the query probes only its NProbe closest
+    * binned by their nearest TRAINED coarse centroid (the
+    * one-Lloyd-step [[VectorIndex.coarseCodebook]] the IVF queries
+    * read, memoized per (session, dir) beside the PQ index but trained
+    * apart from it), the query probes only its NProbe closest
     * cells, and ADC scores rank survivors INSIDE the probed cells.
     * Cell assignment and ADC score are both map-side expressions
     * against literal codebooks, so the whole candidate stage is ONE
@@ -325,17 +201,13 @@ object PqQueries {
     */
   private def ivfpqCandidates(s: SparkSession, dir: String, idx: PqIndex): DataFrame = {
     import s.implicits._
-    val (coarseQ, cents) = SimilarityQueries.coarseCodebook(s, dir)
-    val probe = SimilarityQueries.coarseProbe(coarseQ, cents)
-    val approx = (0 until M).map { m =>
-      val lut = idx.books(m).map { case (_, cw) => round6(dotSeq(idx.qSubs(m), cw)) }
-      element_at(typedlit(lut), codePos(subCol(m), idx.books(m)))
-    }.reduceLeft(_ + _)
+    val (coarseQ, cents) = VectorIndex.coarseCodebook(s, dir)
+    val probe = VectorIndex.probe(coarseQ, cents)
     Tables.fanOut(Tables.embeddings(s, dir))
       .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cell", SimilarityQueries.coarseCellCol(cents))
+      .withColumn("cell", VectorIndex.assign(cents))
       .filter($"cell".isin(probe: _*))
-      .withColumn("approx", approx)
+      .withColumn("approx", VectorIndex.adcScore(idx))
       .orderBy($"approx".desc, $"vec_id")
       .limit(CandK)
       .select($"vec_id")
@@ -346,7 +218,7 @@ object PqQueries {
     */
   private def annIvfPqTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val idx = trainedIndex(s, dir)
+    val idx = VectorIndex.pqIndex(s, dir)
     val qVecF = idx.qSubs.flatten.map(_.toFloat)
     Tables.embeddings(s, dir)
       .join(broadcast(ivfpqCandidates(s, dir, idx)), Seq("vec_id"))
@@ -364,8 +236,8 @@ object PqQueries {
   private val ivfpqPrelude =
     s"""$adcPrelude,
        |c0 AS (SELECT vec_id AS cid, embedding AS c FROM e
-       |  WHERE vec_id < ${SimilarityQueries.coarseK}),
-       |${SimilarityQueries.coarseKmIterSql("c0", 1)},
+       |  WHERE vec_id < $KmK),
+       |${kmIterSql("c0", 1)},
        |fin AS (
        |  SELECT vec_id, cid FROM (
        |    SELECT e.vec_id, cid,
@@ -376,7 +248,7 @@ object PqQueries {
        |  SELECT cid FROM (
        |    SELECT c.cid, row_number() OVER (ORDER BY
        |      list_cosine_similarity(q.qv, c.c::DOUBLE[]) DESC, c.cid) AS rn
-       |    FROM c1 c, q) WHERE rn <= ${SimilarityQueries.coarseNProbe}),
+       |    FROM c1 c, q) WHERE rn <= $NProbe),
        |ivcand AS (
        |  SELECT a.vec_id FROM adc a
        |    JOIN fin f USING (vec_id)
@@ -399,18 +271,10 @@ object PqQueries {
     */
   private def annIvfPqRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val idx = trainedIndex(s, dir)
+    val idx = VectorIndex.pqIndex(s, dir)
     val qVecF = idx.qSubs.flatten.map(_.toFloat)
-    val got = annIvfPqTopk(s, dir).select($"vec_id")
-    val exact = Tables.fanOut(Tables.embeddings(s, dir))
-      .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cos_raw", VectorOps.cosine($"embedding", typedlit(qVecF)))
-      .orderBy($"cos_raw".desc, $"vec_id")
-      .limit(PqTopK)
-      .select($"vec_id")
-    got.join(exact, Seq("vec_id"), "left_semi")
-      .agg((count(lit(1)).cast("double") / PqTopK).as("recall_at_k"))
-      .select(lit(PqTopK).as("k"), $"recall_at_k")
+    VectorIndex.recallAtK(s, dir, annIvfPqTopk(s, dir).select($"vec_id"),
+      typedlit(qVecF), PqTopK)
   }
 
   private val annIvfPqRecallOracle =
@@ -440,11 +304,9 @@ object PqQueries {
     */
   private def dedupPqCodes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val idx = trainedIndex(s, dir)
-    val codes = (0 until M).map { m =>
-      val pos = codePos(subCol(m), idx.books(m))
-      element_at(typedlit(idx.books(m).map(_._1)), pos).as(s"code_$m")
-    }
+    val idx = VectorIndex.pqIndex(s, dir)
+    val codes = VectorIndex.pqCodes(idx.books).zipWithIndex
+      .map { case (c, m) => c.as(s"code_$m") }
     val codeCols = (0 until M).map(m => col(s"code_$m"))
     Tables.fanOut(Tables.embeddings(s, dir))
       .select($"vec_id" +: codes: _*)
@@ -482,23 +344,4 @@ object PqQueries {
     Q("ann_ivfpq_topk", annIvfPqTopk, Some(annIvfPqOracle)),
     Q("ann_ivfpq_recall", annIvfPqRecall, Some(annIvfPqRecallOracle)),
     Q("dedup_pq_codes", dedupPqCodes, Some(dedupPqCodesOracle)))
-
-  /** Exposed for PqSpec. */
-  private[graft] def pqRecallFrame(s: SparkSession, dir: String): DataFrame =
-    annPqRecall(s, dir)
-  private[graft] def ivfpqRecallFrame(s: SparkSession, dir: String): DataFrame =
-    annIvfPqRecall(s, dir)
-  private[graft] def ivfpqTopkFrame(s: SparkSession, dir: String): DataFrame =
-    annIvfPqTopk(s, dir)
-  private[graft] def pqCodesFrame(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val idx = trainedIndex(s, dir)
-    val codes = (0 until M).map { m =>
-      val pos = codePos(subCol(m), idx.books(m))
-      element_at(typedlit(idx.books(m).map(_._1)), pos).as(s"code_$m")
-    }
-    Tables.embeddings(s, dir).select($"vec_id" +: codes: _*)
-  }
-  private[graft] def trainedBooks(s: SparkSession, dir: String)
-      : Array[Array[(Int, Array[Double])]] = trainedIndex(s, dir).books
 }

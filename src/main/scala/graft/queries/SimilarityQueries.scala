@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{DedupOps, Tables, VectorOps}
+import graft.ops.{DedupOps, Tables, VectorIndex, VectorOps}
+import graft.ops.VectorIndex.{KmK, NProbe, QueryVecId, kmIterSql}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
   *
@@ -15,7 +16,6 @@ import graft.ops.{DedupOps, Tables, VectorOps}
   */
 object SimilarityQueries {
 
-  private val QueryVecId = 0
   private val TopK = 10
   private val LshBits = 8
   private val LshTopK = 5
@@ -281,13 +281,13 @@ object SimilarityQueries {
     val cents = untrainedCentroids(s, dir)
     require(QueryVecId < NumCells, "query vector must be among the centroids")
     val qVec = cents(QueryVecId)._2
-    val probe = probeCellsFor(cents, qVec)
+    val probe = VectorIndex.probe(qVec, cents)
     // the INDEX: cell-assigned corpus, one hive partition per cell —
     // built once, reused by every probe/rescan until the next refresh
     val vIdx = SnapshotTable.commit(
       Tables.fanOut(Tables.embeddings(s, dir))
         .filter($"vec_id" =!= QueryVecId)
-        .withColumn("cell", cellOfCol(cents)($"embedding")),
+        .withColumn("cell", VectorIndex.assign(cents)),
       idxBase, expectedVersion = SnapshotTable.ExpectEmpty,
       partitionCols = Seq("cell"))
     // index-routed top-k: probe the NProbe nearest cells only
@@ -408,10 +408,10 @@ object SimilarityQueries {
     val cents = untrainedCentroids(s, dir)
     require(QueryVecId < NumCells, "query vector must be among the centroids")
     val qVec = cents(QueryVecId)._2
-    val probe = probeCellsFor(cents, qVec)
+    val probe = VectorIndex.probe(qVec, cents)
     def assigned = Tables.fanOut(Tables.embeddings(s, dir))
       .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cell", cellOfCol(cents)($"embedding"))
+      .withColumn("cell", VectorIndex.assign(cents))
     // the standing index: 90% of the corpus, one file per cell dir
     val v1 = SnapshotTable.commit(
       assigned.filter(pmod($"vec_id", lit(10)) =!= 9).repartition($"cell"),
@@ -534,7 +534,7 @@ object SimilarityQueries {
     val qVec = cents(QueryVecId)._2
     val assigned = Tables.fanOut(Tables.embeddings(s, dir))
       .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cell", cellOfCol(cents)($"embedding"))
+      .withColumn("cell", VectorIndex.assign(cents))
     val v1 = SnapshotTable.commit(assigned.repartition($"cell"),
       idxBase, expectedVersion = SnapshotTable.ExpectEmpty,
       partitionCols = Seq("cell"))
@@ -592,7 +592,7 @@ object SimilarityQueries {
     val newCents = cents.map { case (cid, c) =>
       if (cid == hot) (cid, sub1) else (cid, c)
     } :+ (NumCells, sub2)
-    val probe = probeCellsFor(newCents, qVec)
+    val probe = VectorIndex.probe(qVec, newCents)
     val probed = SnapshotTable.readAt(s, idxBase, vApp)
       .filter($"cell".isin(probe: _*))
     // planning-time pruning evidence across the union of generations:
@@ -743,7 +743,7 @@ object SimilarityQueries {
     // the standing index: stale assignment; the drifted mass arrives
     // as an ingest append (the ann_ivf_index_append story)
     val assignedStale = search
-      .withColumn("cell", cellOfCol(cents)($"embedding"))
+      .withColumn("cell", VectorIndex.assign(cents))
     val v1 = SnapshotTable.commit(
       assignedStale.filter($"vec_id" < driftBase).repartition($"cell"),
       idxBase, expectedVersion = SnapshotTable.ExpectEmpty,
@@ -762,10 +762,7 @@ object SimilarityQueries {
     val exactTop = top5Distinct(search)
     def recallOf(index: DataFrame,
         codebook: Array[(Int, Array[Float])]): Double = {
-      val probe = codebook
-        .map { case (cid, c) => (cid, cosF32(qVec, c)) }
-        .sortBy { case (cid, sc) => (-sc, cid) }
-        .take(NProbe).map(_._1)
+      val probe = VectorIndex.probe(qVec, codebook)
       val hits = top5Distinct(index.filter($"cell".isin(probe: _*)))
         .join(exactTop, Seq("embedding"), "left_semi").count()
       hits.toDouble / IvfTopK
@@ -780,13 +777,12 @@ object SimilarityQueries {
     val sample = SnapshotTable.readAt(s, idxBase, v2)
       .filter(pmod($"vec_id", lit(2)) === 0)
       .select($"vec_id", $"embedding")
-    val retrained = lloydStep(sample, seeds)
+    val retrained = VectorIndex.lloydStep(sample, seeds)
     // recommit: re-bin the INDEX (never the corpus) under the
     // refreshed codebook as one full generation — chain cut, new
     // partition layout, index-size cost
-    val (cellNew, _) = assignCols(retrained)
     val rebinned = SnapshotTable.readAt(s, idxBase, v2)
-      .drop("cell").withColumn("cell", cellNew)
+      .drop("cell").withColumn("cell", VectorIndex.assign(retrained))
     val v3 = SnapshotTable.commit(rebinned.repartition($"cell"), idxBase,
       expectedVersion = Some(v2), partitionCols = Seq("cell"))
     require(SnapshotTable.chainOf(idxBase, v3) == Seq(v3),
@@ -883,16 +879,8 @@ object SimilarityQueries {
     */
   private def annInt8Recall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val approx = annInt8Topk(s, dir).select($"vec_id")
-    val exact = Tables.fanOut(Tables.embeddings(s, dir))
-      .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cos_raw", VectorOps.cosine($"embedding", queryVecLit(s, dir)))
-      .orderBy($"cos_raw".desc, $"vec_id")
-      .limit(TopK)
-      .select($"vec_id")
-    approx.join(exact, Seq("vec_id"), "left_semi")
-      .agg((count(lit(1)).cast("double") / TopK).as("recall_at_k"))
-      .select(lit(TopK).as("k"), $"recall_at_k")
+    VectorIndex.recallAtK(s, dir, annInt8Topk(s, dir).select($"vec_id"),
+      queryVecLit(s, dir), TopK)
   }
 
   private val annInt8RecallOracle = {
@@ -960,7 +948,6 @@ object SimilarityQueries {
   }
 
   private val NumCells = 8
-  private val NProbe = 2
   private val IvfTopK = 5
 
   /** IVF (inverted-file) ANN: vectors are assigned to the cell of their
@@ -971,60 +958,27 @@ object SimilarityQueries {
     *
     * Centroid "training" is stood in by taking the first `NumCells`
     * vectors as centroids (deterministic; a real deployment trains
-    * k-means offline — the IVF *structure* is what's exercised here).
+    * k-means offline — the IVF *structure* is what's exercised here),
+    * centroid ids 0..NumCells-1 in order.
     */
-  /** The first-`NumCells`-vectors-as-centroids codebook (deterministic
-    * stand-in for offline training — the IVF *structure* is what the
-    * gates exercise). Centroid ids are 0..NumCells-1 in order, so an
-    * argmax INDEX over the score array is the cell id.
-    */
-  private def untrainedCentroids(s: SparkSession, dir: String): Array[(Int, Array[Float])] = {
-    import s.implicits._
-    val cents = Tables.embeddings(s, dir)
-      .filter($"vec_id" < NumCells).orderBy($"vec_id")
-      .select($"vec_id", $"embedding").as[(Long, Array[Float])]
-      .collect().map { case (id, v) => (id.toInt, v) }
+  private def untrainedCentroids(s: SparkSession, dir: String): VectorIndex.Codebook = {
+    val cents = VectorIndex.initCentroids(Tables.embeddings(s, dir), NumCells)
     require(cents.map(_._1).toSeq == cents.indices.toSeq,
       "centroid ids must be 0..n-1")
     cents
   }
 
-  /** Map-side cell assignment against broadcast centroid literals.
-    * array_position finds the FIRST maximum — lowest cid wins ties,
-    * matching the oracle's row_number ORDER BY score DESC, cid. One
-    * linear array pass per row instead of a CASE chain that embeds the
-    * full 8-cosine tree in every branch.
-    */
-  private def cellOfCol(cents: Array[(Int, Array[Float])])(
-      v: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val scores = array(cents.map { case (_, c) =>
-      VectorOps.cosine(v, typedlit(c)) }: _*)
-    (array_position(scores, array_max(scores)) - 1).cast("int")
-  }
-
-  /** The query's `NProbe` nearest cells, scored driver-side with cosF32
-    * — the SAME loop CosineSimilarity.nullSafeEval executes (identical
-    * operation order → bit-identical IEEE doubles), avoiding two extra
-    * Spark jobs over an 8-row problem.
-    */
-  private def probeCellsFor(cents: Array[(Int, Array[Float])],
-      qVec: Array[Float]): Seq[Int] = cents
-    .map { case (cid, c) => (cid, cosF32(qVec, c)) }
-    .sortBy { case (cid, sc) => (-sc, cid) }
-    .take(NProbe).map(_._1).toSeq
-
   private def annIvfTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cents = untrainedCentroids(s, dir)
-    def cellOf(v: org.apache.spark.sql.Column) = cellOfCol(cents)(v)
     // the query vector IS centroid QueryVecId (< NumCells), so one
     // collect serves both
     require(QueryVecId < NumCells, "query vector must be among the centroids")
     val qVec = cents(QueryVecId)._2
-    val probe = probeCellsFor(cents, qVec)
+    val probe = VectorIndex.probe(qVec, cents)
     Tables.fanOut(Tables.embeddings(s, dir))
       .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cell", cellOf($"embedding"))
+      .withColumn("cell", VectorIndex.assign(cents))
       .filter($"cell".isin(probe: _*))
       .withColumn("cos_raw", VectorOps.cosine($"embedding", typedlit(qVec)))
       .orderBy($"cos_raw".desc, $"vec_id")
@@ -1059,16 +1013,16 @@ object SimilarityQueries {
 
   // ------------------------------------------- k-means codebook training
 
-  private val KmK = 8
   private val KmIters = 2
 
   /** Distributed Lloyd's k-means over the embedding column — the codebook
     * trainer that upgrades IVF from "first-k vectors as cells" to trained
-    * cells. Per iteration: (1) assignment is map-side argmax of cosine
-    * against k BROADCAST centroid literals; (2) the update is a
-    * (cell, dim)-keyed exact aggregation — k·dim rows collected to the
-    * driver, the legitimate A2-bridge size (k·dim ≪ corpus, the same
-    * boundary every distributed k-means implementation uses).
+    * cells. Per iteration ([[VectorIndex.lloydStep]]): (1) assignment is
+    * map-side argmax of cosine against k BROADCAST centroid literals;
+    * (2) the update is a (cell, dim)-keyed exact aggregation — k·dim rows
+    * collected to the driver, the legitimate A2-bridge size (k·dim ≪
+    * corpus, the same boundary every distributed k-means implementation
+    * uses).
     *
     * Engine-portability: new centroids are rounded HALF_UP to 6 decimals
     * and float32-quantized each iteration on BOTH engines, absorbing the
@@ -1078,63 +1032,6 @@ object SimilarityQueries {
     * members only). Output: per-cell population and mean member cosine
     * after a final assignment under the trained codebook.
     */
-  /** Deterministic init: the k lowest vec_ids (float32 as stored). */
-  private def initCents(emb: DataFrame, k: Int): Array[(Int, Array[Float])] = {
-    import emb.sparkSession.implicits._
-    emb.filter($"vec_id" < k).orderBy($"vec_id")
-      .select($"vec_id", $"embedding")
-      .as[(Long, Array[Float])].collect()
-      .map { case (id, v) => (id.toInt, v) }
-  }
-
-  /** (cell, score) columns: argmax of cosine against the centroid
-    * literals, lowest cid winning ties (array_position finds the FIRST
-    * maximum; centroids are in ascending-cid order).
-    */
-  private def assignCols(cents: Array[(Int, Array[Float])])
-      : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
-    val scores = array(cents.map { case (_, c) =>
-      VectorOps.cosine(col("embedding"), typedlit(c)) }: _*)
-    val idx = array_position(scores, array_max(scores)).cast("int")
-    (element_at(typedlit(cents.map(_._1)), idx).as("cell"),
-      array_max(scores).as("score"))
-  }
-
-  /** One Lloyd step: assign, then per-(cell, dim) mean — k·dim rows
-    * across the driver bridge — rounded HALF_UP to 6 decimals and
-    * float32-quantized (the engine-portability contract shared with the
-    * DuckDB mirror [[kmIterSql]]). Emptied clusters drop out.
-    */
-  private def lloydStep(emb: DataFrame,
-      cents: Array[(Int, Array[Float])]): Array[(Int, Array[Float])] = {
-    import emb.sparkSession.implicits._
-    val (cell, _) = assignCols(cents)
-    emb.select($"embedding", cell)
-      .select($"cell", posexplode($"embedding").as(Seq("pos", "x")))
-      .groupBy($"cell", $"pos").agg(avg($"x").as("m"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-      .groupBy(_._1).toArray.sortBy(_._1).map { case (cid, rows) =>
-        (cid, rows.sortBy(_._2).map(t =>
-          BigDecimal(t._3).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-            .toFloat))
-      }
-  }
-
-  /** Same accumulation order as CosineSimilarity.nullSafeEval — driver-
-    * side probe scoring stays bit-identical to executor-side scoring.
-    */
-  private def cosF32(x: Array[Float], y: Array[Float]): Double = {
-    val n = math.min(x.length, y.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = x(i).toDouble; val yv = y(i).toDouble
-      dot += xv * yv; na += xv * xv; nb += yv * yv
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
   private def kmeansTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // cached: each Lloyd step is an ACTION (the k·dim mean collect), so
@@ -1145,74 +1042,13 @@ object SimilarityQueries {
     // and the code is unchanged.
     val emb = Tables.fanOut(Tables.embeddings(s, dir))
       .select($"vec_id", $"embedding").persist()
-    var cents = initCents(emb, KmK)
-    for (_ <- 1 to KmIters) cents = lloydStep(emb, cents)
-    val (cell, score) = assignCols(cents)
-    emb.select(cell, score)
+    var cents = VectorIndex.initCentroids(emb, KmK)
+    for (_ <- 1 to KmIters) cents = VectorIndex.lloydStep(emb, cents)
+    emb.select(VectorIndex.assign(cents).as("cell"),
+        VectorIndex.assignScore(cents).as("score"))
       .groupBy($"cell")
       .agg(count(lit(1)).as("n"), round(avg($"score"), 4).as("avg_cos"))
       .orderBy($"cell")
-  }
-
-  /** One Lloyd iteration in SQL: assign (argmax cosine, lowest cid wins
-    * ties) then per-(cid, dim) mean, rounded and float32-quantized
-    * exactly as the Spark side.
-    */
-  private def kmIterSql(prev: String, n: Int): String =
-    s"""a$n AS (
-       |  SELECT vec_id, embedding, cid,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_cosine_similarity(embedding::DOUBLE[], c::DOUBLE[]) DESC, cid) AS rn
-       |  FROM e CROSS JOIN $prev),
-       |m$n AS (
-       |  SELECT cid, pos, CAST(round(avg(x), 6) AS FLOAT) AS mx
-       |  FROM (SELECT cid, unnest(embedding) AS x,
-       |          unnest(generate_series(1, len(embedding))) AS pos
-       |        FROM a$n WHERE rn = 1)
-       |  GROUP BY cid, pos),
-       |c$n AS (SELECT cid, list(mx ORDER BY pos) AS c FROM m$n GROUP BY cid)""".stripMargin
-
-  /** Trained codebook, memoized per (session, dir): init + one Lloyd
-    * step is deterministic, and a real IVF index trains once at BUILD
-    * time — the search query and the recall gate share one training run
-    * instead of each re-running the training actions. Weak keys so the
-    * memo cannot outlive its session. Value: (query vector, centroids);
-    * the query vector is the stored embedding of vec_id [[QueryVecId]]
-    * (it is among the init centroids by construction), so reusing it
-    * skips [[queryVecLit]]'s extra scan too.
-    *
-    * Assumes the embeddings parquet under a given dir is immutable for
-    * the session's lifetime (the harness contract); rewriting it
-    * mid-session would serve a stale codebook until clearCache/restart.
-    */
-  private val trainedCodebooks =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        Map[String, (Array[Float], Array[(Int, Array[Float])])]]())
-
-  private def trainedCodebook(s: SparkSession, dir: String)
-      : (Array[Float], Array[(Int, Array[Float])]) = {
-    val cached = Option(trainedCodebooks.get(s)).getOrElse(Map.empty)
-    cached.getOrElse(dir, {
-      // persisted only across the two training actions (init collect +
-      // Lloyd-step collect); withPersisted guarantees release even if
-      // the require below throws (the bare unpersist it replaces
-      // leaked on that path)
-      val entry = Tables.withPersisted(
-        Tables.fanOut(Tables.embeddings(s, dir))
-          .select(col("vec_id"), col("embedding"))) { emb =>
-        val init = initCents(emb, KmK)
-        require(init.nonEmpty && init.map(_._1).contains(QueryVecId),
-          s"query vector vec_id=$QueryVecId must be among the init centroids")
-        val qVec = init.find(_._1 == QueryVecId).get._2
-        (qVec, lloydStep(emb, init))
-      }
-      // atomic merge (SynchronizedMap implements merge under its lock):
-      // two concurrent first-trainers for DIFFERENT dirs must both land
-      // their entries — a plain get-then-put would drop one
-      trainedCodebooks.merge(s, Map(dir -> entry), (old, nw) => old ++ nw)
-      entry
-    })
   }
 
   /** IVF search over the TRAINED codebook — [[kmeansTrain]] (one Lloyd
@@ -1221,19 +1057,17 @@ object SimilarityQueries {
     * trained cells, exact cosine ranks the survivors. Same plan shape as
     * the untrained IVF (map-side assignment, no joins on the corpus
     * side); the training cost is paid once per (session, dir) via
-    * [[trainedCodebook]].
+    * [[VectorIndex.coarseCodebook]]. The memoized codebook's query
+    * vector IS the stored embedding of QueryVecId, so no second scan
+    * re-reads it.
     */
   private def annIvfTrainedTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (qVec, cents) = trainedCodebook(s, dir)
-    val probe = cents
-      .map { case (cid, c) => (cid, cosF32(qVec, c)) }
-      .sortBy { case (cid, sc) => (-sc, cid) }
-      .take(NProbe).map(_._1).toSeq
-    val (cell, _) = assignCols(cents)
+    val (qVec, cents) = VectorIndex.coarseCodebook(s, dir)
+    val probe = VectorIndex.probe(qVec, cents)
     Tables.fanOut(Tables.embeddings(s, dir))
       .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cell", cell)
+      .withColumn("cell", VectorIndex.assign(cents))
       .filter($"cell".isin(probe: _*))
       .withColumn("cos_raw", VectorOps.cosine($"embedding", typedlit(qVec)))
       .orderBy($"cos_raw".desc, $"vec_id")
@@ -1295,19 +1129,9 @@ object SimilarityQueries {
     */
   private def annIvfRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // the memoized codebook's query vector IS the stored embedding of
-    // QueryVecId — no second scan to re-read it
-    val (qVec, _) = trainedCodebook(s, dir)
-    val ivf = annIvfTrainedTopk(s, dir).select($"vec_id")
-    val exact = Tables.fanOut(Tables.embeddings(s, dir))
-      .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cos_raw", VectorOps.cosine($"embedding", typedlit(qVec)))
-      .orderBy($"cos_raw".desc, $"vec_id")
-      .limit(IvfTopK)
-      .select($"vec_id")
-    ivf.join(exact, Seq("vec_id"), "left_semi")
-      .agg((count(lit(1)).cast("double") / IvfTopK).as("recall_at_k"))
-      .select(lit(IvfTopK).as("k"), $"recall_at_k")
+    val (qVec, _) = VectorIndex.coarseCodebook(s, dir)
+    VectorIndex.recallAtK(s, dir, annIvfTrainedTopk(s, dir).select($"vec_id"),
+      typedlit(qVec), IvfTopK)
   }
 
   private val annIvfRecallOracle =
@@ -1348,7 +1172,8 @@ object SimilarityQueries {
 
   /** SemDeDup (semantic dedup; Abbas et al. 2023, arXiv:2303.09540):
     * embeddings are clustered with the TRAINED k-means codebook (the
-    * same one-Lloyd-step [[trainedCodebook]] the IVF queries share),
+    * same one-Lloyd-step [[VectorIndex.coarseCodebook]] the IVF queries
+    * share),
     * then near-duplicates are removed by cosine threshold WITHIN each
     * cluster — the paper's algorithm: clustering bounds the pairwise
     * comparison to cluster-local work, and the lowest vec_id of each
@@ -1366,10 +1191,9 @@ object SimilarityQueries {
     */
   private def dedupSemanticKmeans(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (_, cents) = trainedCodebook(s, dir)
-    val (cell, _) = assignCols(cents)
+    val (_, cents) = VectorIndex.coarseCodebook(s, dir)
     val e = Tables.fanOut(Tables.embeddings(s, dir))
-      .select($"vec_id", $"embedding", cell,
+      .select($"vec_id", $"embedding", VectorIndex.assign(cents).as("cell"),
         VectorOps.signBucket($"embedding", SemBucketBits).as("bucket"),
         VectorOps.norm($"embedding").as("nrm"))
     // cos ≥ t  ⟺  dot ≥ t·|a|·|b| — dot evaluated once per candidate
@@ -1815,15 +1639,8 @@ object SimilarityQueries {
       .orderBy($"cos_t".desc, $"vec_id")
       .limit(TopK)
       .select($"vec_id")
-    val exact = Tables.fanOut(Tables.embeddings(s, dir))
-      .filter($"vec_id" =!= QueryVecId)
-      .withColumn("cos_raw", VectorOps.cosine($"embedding", qv))
-      .orderBy($"cos_raw".desc, $"vec_id")
-      .limit(TopK)
-      .select($"vec_id")
-    approx.join(exact, Seq("vec_id"), "left_semi")
-      .agg((count(lit(1)).cast("double") / TopK).as("recall_at_k"))
-      .select(lit(TopK).as("k"), lit(TruncDims).as("trunc_dims"), $"recall_at_k")
+    VectorIndex.recallAtK(s, dir, approx, qv, TopK,
+      lit(TruncDims).as("trunc_dims"))
   }
 
   private val annTruncatedOracle =
@@ -2035,35 +1852,4 @@ object SimilarityQueries {
     Q("kmeans_train", kmeansTrain, Some(kmeansOracle)),
     Q("ann_ivf_trained_topk", annIvfTrainedTopk, Some(annIvfTrainedOracle)),
     Q("ann_ivf_recall", annIvfRecall, Some(annIvfRecallOracle)))
-
-  /** Exposed for IvfRecallSpec's floor assertion. */
-  private[graft] def ivfRecallFrame(s: SparkSession, dir: String): DataFrame =
-    annIvfRecall(s, dir)
-
-  /** Exposed for IvfRecallSpec's int8 floor assertion. */
-  private[graft] def int8RecallFrame(s: SparkSession, dir: String): DataFrame =
-    annInt8Recall(s, dir)
-
-  // ---------------- coarse-quantizer surface for the IVF-PQ composition
-  // ([[PqQueries]] probes these trained cells, then ADC-scores inside
-  // them — sharing the memoized codebook keeps index build once-per-dir)
-
-  private[queries] def coarseCodebook(s: SparkSession, dir: String)
-      : (Array[Float], Array[(Int, Array[Float])]) = trainedCodebook(s, dir)
-
-  private[queries] def coarseCellCol(
-      cents: Array[(Int, Array[Float])]): org.apache.spark.sql.Column =
-    assignCols(cents)._1
-
-  /** The query's NProbe closest trained cells (cosine desc, cid ties). */
-  private[queries] def coarseProbe(qVec: Array[Float],
-      cents: Array[(Int, Array[Float])]): Seq[Int] =
-    cents.map { case (cid, c) => (cid, cosF32(qVec, c)) }
-      .sortBy { case (cid, sc) => (-sc, cid) }
-      .take(NProbe).map(_._1).toSeq
-
-  private[queries] def coarseKmIterSql(prev: String, n: Int): String =
-    kmIterSql(prev, n)
-  private[queries] def coarseK: Int = KmK
-  private[queries] def coarseNProbe: Int = NProbe
 }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.queries.PqQueries
+import graft.ops.VectorIndex
+import graft.queries.Registry
 
 /** Product-quantization accountability: the PQ+re-rank search keeps a
   * measured recall floor vs exact top-k, the trained codebooks have the
@@ -10,7 +11,7 @@ class PqSpec extends SparkSpec {
 
   test("PQ recall@10 vs brute force stays above the floor") {
     for (sf <- Seq("sf0.001", "sf0.01")) {
-      val row = PqQueries.pqRecallFrame(spark, s"/root/testdata/$sf")
+      val row = Registry.queries("ann_pq_recall")(spark, s"/root/testdata/$sf")
         .collect().head
       val recall = row.getAs[Double]("recall_at_k")
       assert(recall >= 0.6, s"recall@10 = $recall at $sf — below the 0.6 floor")
@@ -21,7 +22,7 @@ class PqSpec extends SparkSpec {
     // the composed index can only lose MORE than flat PQ (probe misses
     // stack on quantization error), so its floor is its own gate
     for (sf <- Seq("sf0.001", "sf0.01")) {
-      val row = PqQueries.ivfpqRecallFrame(spark, s"/root/testdata/$sf")
+      val row = Registry.queries("ann_ivfpq_recall")(spark, s"/root/testdata/$sf")
         .collect().head
       val recall = row.getAs[Double]("recall_at_k")
       assert(recall >= 0.5, s"IVF-PQ recall@10 = $recall at $sf — below 0.5")
@@ -32,7 +33,7 @@ class PqSpec extends SparkSpec {
     // composition only PRUNES: anything IVF-PQ returns must also rank
     // by the same exact cosine, and its ids must exclude the query
     val dir = "/root/testdata/sf0.001"
-    val rows = PqQueries.ivfpqTopkFrame(spark, dir).collect()
+    val rows = Registry.queries("ann_ivfpq_topk")(spark, dir).collect()
     assert(rows.nonEmpty && rows.length <= 10)
     assert(rows.forall(_.getLong(0) != 0L))
     val cos = rows.map(_.getAs[Double]("cos")).toSeq
@@ -40,7 +41,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("trained books: <=K codewords per subspace, SubDim dims each, cid-ascending") {
-    val books = PqQueries.trainedBooks(spark, "/root/testdata/sf0.001")
+    val books = VectorIndex.pqIndex(spark, "/root/testdata/sf0.001").books
     assert(books.length == 4)
     books.foreach { book =>
       assert(book.nonEmpty && book.length <= 8)
@@ -54,10 +55,12 @@ class PqSpec extends SparkSpec {
 
   test("every vector encodes: M codes, each a cid of its subspace book") {
     val dir = "/root/testdata/sf0.001"
-    val books = PqQueries.trainedBooks(spark, dir)
+    val books = VectorIndex.pqIndex(spark, dir).books
     val valid = books.map(_.map(_._1).toSet)
-    val rows = PqQueries.pqCodesFrame(spark, dir).collect()
+    // dedup_pq_codes emits every vector: vec_id, then code_0..code_3
+    val rows = Registry.queries("dedup_pq_codes")(spark, dir).collect()
     assert(rows.nonEmpty)
+    assert(rows.length == spark.read.parquet(s"$dir/embeddings.parquet").count())
     rows.foreach { r =>
       for (m <- 0 until 4) {
         val c = r.getInt(1 + m)
@@ -82,8 +85,8 @@ class PqSpec extends SparkSpec {
 
   test("index trains once per (session, dir)") {
     val dir = "/root/testdata/sf0.001"
-    val a = PqQueries.trainedBooks(spark, dir)
-    val b = PqQueries.trainedBooks(spark, dir)
+    val a = VectorIndex.pqIndex(spark, dir)
+    val b = VectorIndex.pqIndex(spark, dir)
     assert(a eq b, "trained index must be memoized per (session, dir)")
   }
 }
