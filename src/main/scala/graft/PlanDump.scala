@@ -25,6 +25,17 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * generated against sf0.01.
   */
 object PlanDump {
+  /** Catalyst expression ids (`#123`, `#123L`) as `#x`: they count up
+    * with every plan the JVM builds, so unmasked they would rewrite
+    * sections of PLANS.md that no change touched. `PushedFilters: [...]`
+    * lists are kept as they are: they name columns without ids, and a
+    * literal there may itself hold `#<digits>` (`Brand#12`).
+    */
+  def maskExprIds(plan: String): String =
+    "PushedFilters: \\[[^\\]]*\\]|#\\d+L?".r.replaceAllIn(plan, m =>
+      if (m.matched.startsWith("#")) "#x"
+      else scala.util.matching.Regex.quoteReplacement(m.matched))
+
   def main(args: Array[String]): Unit = {
     require(args.isEmpty || args.length >= 3,
       "usage: PlanDump [<outDir> <suffix> <query>...]")
@@ -72,10 +83,10 @@ object PlanDump {
       sb ++= s"${names.length} queries audited.\n\n"
       for (q <- names) {
         val plan =
-          try run(q)._3.executedPlan match {
+          try maskExprIds(run(q)._3.executedPlan match {
             case a: AdaptiveSparkPlanExec => a.executedPlan.toString
             case p => p.toString
-          }
+          })
           catch { case scala.util.control.NonFatal(e) =>
             s"PLAN FAILED: ${e.getClass.getName}: ${e.getMessage}" }
         def n(p: String) = p.r.findAllIn(plan).length

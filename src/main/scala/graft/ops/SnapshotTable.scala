@@ -156,10 +156,10 @@ object SnapshotTable {
     *
     * `statsCols` (optional) gathers per-file min/max/nullCount for the
     * named DATA columns into the version's `_stats.tsv` sidecar — the
-    * file-skipping manifest [[readWhere]] prunes with. The stats scan
-    * reads only the named columns of the freshly staged files (column-
-    * pruned parquet footers+pages, one extra pass over what was just
-    * written — the same bookkeeping cost every stats-writing format
+    * file-skipping manifest [[readWhere]] prunes with. The stats come
+    * from the staged files' parquet footers where those answer, else
+    * from the one column-pruned sidecar scan that also builds the
+    * blooms (the same bookkeeping cost every stats-writing format
     * pays), and the sidecar is one line per (file, column): driver-
     * bounded the way a Delta log / Iceberg manifest is.
     */
@@ -292,10 +292,8 @@ object SnapshotTable {
     val w = df.write.mode("errorifexists")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(staged.toString)
-    if (statsCols.nonEmpty)
-      writeStatsSidecar(df.sparkSession, staged, statsCols)
-    if (bloomCols.nonEmpty)
-      writeBloomSidecar(df.sparkSession, staged, bloomCols, bloomExpectedItems)
+    writeSidecars(df.sparkSession, staged, statsCols, bloomCols,
+      bloomExpectedItems)
     writeMeta(staged, meta)
     // schema-in-metadata: a full commit exposes its own columns (the
     // chain-extending flavors overwrite this with the merged set)
@@ -945,7 +943,7 @@ object SnapshotTable {
     // the deltas' OWN files only — the base is never read, which is
     // the entire point (unionByName: each generation's layout is free
     // to differ, the spec-evolution discipline)
-    val delta = gens.map(g => spark.read.parquet(s"$dir/v$g"))
+    val delta = gens.map(g => readParquet(spark, s"$dir/v$g"))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     // fold the generations' metadata forward: the numeric exactly-once
     // markers — "epoch" and every per-writer "txn.<id>" — fold as MAX
@@ -1159,6 +1157,94 @@ object SnapshotTable {
     publishStaged(dir, staged, Some(expectedVersion))
   }
 
+  // ------------------------------------------ footer schemas (no Spark job)
+
+  /** Spark's hidden-path rule for file listings: a `_`- or `.`-prefixed
+    * name is not data, except a `_`-prefixed hive partition dir (`_k=v`).
+    */
+  private def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** The visible files under `root`, path-sorted: hidden names are
+    * skipped (sidecars, `_deletes/`, checksum files), visible
+    * directories (hive `k=v` partitions) are walked.
+    */
+  private def visibleFiles(root: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def walk(d: java.nio.file.Path): Unit = {
+      val stream = java.nio.file.Files.list(d)
+      try stream.forEach { p =>
+        if (!hiddenName(p.getFileName.toString)) {
+          if (java.nio.file.Files.isDirectory(p)) walk(p)
+          else if (java.nio.file.Files.isRegularFile(p)) out += p
+        }
+      } finally stream.close()
+    }
+    if (java.nio.file.Files.isDirectory(root)) walk(root)
+    out.sortBy(_.toString).toSeq
+  }
+
+  /** A parquet reader given the Spark schema of the data under `path`,
+    * read on the driver from the footer of its first visible data file.
+    * A plain `spark.read.parquet(path)` launches a Spark job to read
+    * that same footer; a read given the schema launches none. Same
+    * order as Spark's own inference (`ParquetFileFormat.readSchemaFromFooter`):
+    * the writer's `org.apache.spark.sql.parquet.row.metadata` schema
+    * when present, else the parquet schema converted under the
+    * session's parquet read settings. Hive partition columns are not in
+    * the footer; a read given this schema still infers them from the
+    * path. A plain reader, which infers, when no data file exists or
+    * `spark.sql.parquet.mergeSchema` is on (a merged schema needs every
+    * footer).
+    */
+  private def footerReader(spark: SparkSession,
+      path: String): org.apache.spark.sql.DataFrameReader = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val sql = spark.sessionState.conf
+    val files =
+      if (sql.isParquetSchemaMergingEnabled) Nil
+      else visibleFiles(java.nio.file.Paths.get(path))
+    files.headOption.fold(spark.read) { f =>
+      val hp = new org.apache.hadoop.fs.Path(f.toUri)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp,
+          spark.sparkContext.hadoopConfiguration))
+      val footer = try reader.getFooter finally reader.close()
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(hp, footer),
+        new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = sql.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+          nanosAsLong = sql.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            sql.parquetReaderRespectUnknownTypeAnnotation)))
+    }
+  }
+
+  /** `spark.read.parquet(path)` with the schema taken from the footer
+    * ([[footerReader]]): the same frame, without the inference job.
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerReader(spark, path).parquet(path)
+
+  /** The data files of `vdir` a file-skipping decision kept, as one scan
+    * (`basePath` keeps hive partition columns resolving), or an empty
+    * frame of the full read's schema when it kept none.
+    */
+  private def readKept(spark: SparkSession, vdir: String,
+      files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        readParquet(spark, vdir).schema)
+    else footerReader(spark, vdir).option("basePath", vdir).parquet(files: _*)
+
+  /** A delete or upsert version's tombstone keys (`_deletes/`). */
+  private def deletesOf(spark: SparkSession, dir: String,
+      version: Long): DataFrame =
+    readParquet(spark, s"$dir/v$version/_deletes")
+
   // ------------------------------------------------------------- reads
 
   /** Read the current snapshot (the version `current` named at call
@@ -1189,10 +1275,10 @@ object SnapshotTable {
       s"no complete version v$version under $dir")
     baseOf(dir, version) match {
       case Some(b) =>
-        val dels = spark.read.parquet(s"$dir/v$version/_deletes")
+        val dels = deletesOf(spark, dir, version)
         readAt(spark, dir, b).join(dels, dels.columns.toSeq, "left_anti")
       case None => appendBaseOf(dir, version) match {
-        case None => spark.read.parquet(s"$dir/v$version")
+        case None => readParquet(spark, s"$dir/v$version")
         case Some(b) =>
           // an UPSERT generation carries tombstones against its base:
           // anti-join them BEFORE this generation's own files union in,
@@ -1201,7 +1287,7 @@ object SnapshotTable {
           val base0 = readAt(spark, dir, b)
           val base =
             if (isUpsert(dir, version)) {
-              val dels = spark.read.parquet(s"$dir/v$version/_deletes")
+              val dels = deletesOf(spark, dir, version)
               base0.join(dels, dels.columns.toSeq, "left_anti")
             } else base0
           // allowMissingColumns: an evolved append generation's new
@@ -1209,7 +1295,7 @@ object SnapshotTable {
           // vice versa) — commit-time checks already guarded against
           // ACCIDENTAL drift, so by read time a difference is a
           // deliberate evolution
-          base.unionByName(spark.read.parquet(s"$dir/v$version"),
+          base.unionByName(readParquet(spark, s"$dir/v$version"),
             allowMissingColumns = true)
       }
     }
@@ -1288,34 +1374,40 @@ object SnapshotTable {
     case _ => a.compareTo(b)
   }
 
-  /** Gather per-file min/max/nullCount for `statsCols` over the staged
-    * write and persist them as `_stats.tsv` inside it (so the sidecar
-    * is covered by the same atomic claim-rename as the data).
-    *
-    * Fast path (r20): the values come from the PARQUET FOOTERS of the
-    * files the write just produced — row counts, null counts and
-    * min/max ride in every column chunk's statistics, so the sidecar
-    * costs file-count-bounded driver I/O and ZERO Spark jobs (the move
-    * every real format makes: Iceberg collects its manifest metrics
-    * from the writer's footers). The footer path restricts itself to
-    * the types whose footer ordering provably matches the old
-    * aggregate's (`min(col).cast("string")`) semantics — integral
-    * (signed comparator = Spark's), string (parquet's unsigned-byte
-    * comparator = UTF8String ordering), date (day ordinal, rendered
-    * ISO like the cast) — and DEMOTES to the original one-job grouped
-    * scan for anything else: fractional/decimal columns (NaN / -0.0
-    * footer-vs-aggregate divergence), partition columns (absent from
-    * data files), or a footer with dropped statistics (parquet omits
-    * binary min/max past 4 KB). Either path feeds the same sink, so
-    * the sidecar bytes are identical — `StatsFooterParitySpec` pins
-    * that equivalence.
+  /** Build the stats and bloom sidecars of a staged write with at most
+    * ONE grouped scan of the fresh files. The stats come from the
+    * parquet FOOTERS when they can answer byte-identically
+    * ([[statsRowsByFooter]]: zero Spark jobs, the move every real
+    * format makes — Iceberg collects its manifest metrics from the
+    * writer's footers); whatever else is asked — the stats the footers
+    * could not answer (fractional/decimal and partition columns,
+    * dropped footer stats) and every bloom — comes from one
+    * [[sidecarScan]]. Either stats source feeds the same sink, so the
+    * sidecar bytes are identical — `StatsFooterParitySpec` pins that.
     */
-  private def writeStatsSidecar(spark: SparkSession,
-      staged: java.nio.file.Path, statsCols: Seq[String]): Unit = {
+  private def writeSidecars(spark: SparkSession, staged: java.nio.file.Path,
+      statsCols: Seq[String], bloomCols: Seq[String],
+      bloomExpectedItems: Long): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val rows = statsRowsByFooter(conf, staged, statsCols)
-      .getOrElse(statsRowsByScan(spark, staged, statsCols))
-      .sortBy(r => (r.file, r.column))
+    val footerStats =
+      if (statsCols.isEmpty) None else statsRowsByFooter(conf, staged, statsCols)
+    val scanStats = if (footerStats.isDefined) Nil else statsCols
+    val scanned =
+      if (scanStats.isEmpty && bloomCols.isEmpty) Nil
+      else sidecarScan(spark, staged, scanStats, bloomCols, bloomExpectedItems)
+    if (statsCols.nonEmpty)
+      writeStatsSidecar(conf, staged, footerStats.getOrElse(scanned.flatMap(_.stats)))
+    if (bloomCols.nonEmpty)
+      writeBloomSidecar(conf, staged, scanned)
+  }
+
+  /** Persist per-file stats records as `_stats.tsv` inside the staged
+    * write (so the sidecar is covered by the same atomic claim-rename
+    * as the data).
+    */
+  private def writeStatsSidecar(conf: org.apache.hadoop.conf.Configuration,
+      staged: java.nio.file.Path, statsRows: Seq[FileColStats]): Unit = {
+    val rows = statsRows.sortBy(r => (r.file, r.column))
     val enc = (s: String) =>
       java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
     val lines = rows.map { r =>
@@ -1347,41 +1439,70 @@ object SnapshotTable {
       column: String, tag: String, minStr: Option[String],
       maxStr: Option[String], nullCount: Long)
 
-  /** The original stats builder: one grouped scan of the staged files
-    * keyed by `input_file_name()`, collect one row per data file. The
-    * fallback for what footers cannot answer byte-identically —
-    * partition columns, fractional/decimal types, dropped footer stats.
+  /** What the sidecar scan yields for one staged data file: its stats
+    * records and its serialized bloom filter per bloom column.
     */
-  private[graft] def statsRowsByScan(spark: SparkSession,
-      staged: java.nio.file.Path, statsCols: Seq[String]): Seq[FileColStats] = {
-    val sdf = spark.read.parquet(staged.toString)
+  private[graft] final case class FileSidecars(file: String,
+      stats: Seq[FileColStats], blooms: Seq[(String, Array[Byte])])
+
+  /** The one grouped scan of the staged files keyed by
+    * `input_file_name()`, collecting one row per data file with the
+    * stats of `statsCols` (`min`/`max` cast to string, null count) and
+    * a bloom filter per `bloomCols` column. The bloom aggregate is a
+    * typed Aggregator whose buffer is Spark's own mergeable
+    * [[org.apache.spark.util.sketch.BloomFilter]] — map-side partials
+    * OR together, so the pass stays one column-pruned scan of the fresh
+    * files, and the collect is file-count-bounded like the sidecars.
+    * Nulls are NOT inserted into a bloom: the point-lookup reader
+    * ([[pruneFilesBloom]]) prunes on equality semantics, where NULL
+    * never matches. A 0-row file yields no row, as on the footer path.
+    */
+  private[graft] def sidecarScan(spark: SparkSession,
+      staged: java.nio.file.Path, statsCols: Seq[String],
+      bloomCols: Seq[String], bloomExpectedItems: Long): Seq[FileSidecars] = {
+    val sdf = readParquet(spark, staged.toString)
     val types = sdf.schema.fields.map(f => f.name -> f.dataType).toMap
     statsCols.foreach(c => require(types.contains(c),
       s"statsCols: no column '$c' in committed schema " +
         s"(${sdf.columns.mkString(", ")})"))
     val tags = statsCols.map(c => c -> statsTag(types(c))).toMap
-    val aggs = statsCols.flatMap { c =>
+    if (bloomCols.nonEmpty)
+      require(bloomExpectedItems > 0,
+        s"bloomExpectedItems must be > 0, got $bloomExpectedItems")
+    bloomCols.foreach { c =>
+      require(types.contains(c),
+        s"bloomCols: no column '$c' in committed schema (${sdf.columns.mkString(", ")})")
+      // the bloom gate is NARROWER than the stats gate: fractional
+      // numerics are rejected (build/probe canonical-form divergence
+      // would mean silent false negatives — see bloomTag)
+      bloomTag(types(c))
+    }
+    val statAggs = statsCols.flatMap { c =>
       Seq(min(col(c)).cast("string").as(s"min_$c"),
         max(col(c)).cast("string").as(s"max_$c"),
         sum(col(c).isNull.cast("long")).as(s"nulls_$c"))
     }
+    val bloomAggs = bloomCols.map(c =>
+      bloomUdaf(bloomExpectedItems)(col(c).cast("string")).as(s"bf_$c"))
     val rows = sdf
       .groupBy(input_file_name().as("_f"))
-      .agg(count(lit(1)).as("_rc"), aggs: _*)
+      .agg(count(lit(1)).as("_rc"), statAggs ++ bloomAggs: _*)
       .collect()
     val marker = staged.getFileName.toString + "/"
-    rows.toSeq.flatMap { r =>
+    rows.toSeq.map { r =>
       val full = r.getString(r.fieldIndex("_f"))
       val i = full.indexOf(marker)
-      require(i >= 0, s"stats scan returned a file outside the staging dir: $full")
+      require(i >= 0, s"sidecar scan returned a file outside the staging dir: $full")
       val rel = full.substring(i + marker.length)
       val rc = r.getLong(r.fieldIndex("_rc"))
-      statsCols.map { c =>
-        FileColStats(rel, rc, c, tags(c),
-          Option(r.getString(r.fieldIndex(s"min_$c"))),
-          Option(r.getString(r.fieldIndex(s"max_$c"))),
-          r.getLong(r.fieldIndex(s"nulls_$c")))
-      }
+      FileSidecars(rel,
+        statsCols.map { c =>
+          FileColStats(rel, rc, c, tags(c),
+            Option(r.getString(r.fieldIndex(s"min_$c"))),
+            Option(r.getString(r.fieldIndex(s"max_$c"))),
+            r.getLong(r.fieldIndex(s"nulls_$c")))
+        },
+        bloomCols.map(c => c -> r.getAs[Array[Byte]](r.fieldIndex(s"bf_$c"))))
     }
   }
 
@@ -1393,8 +1514,9 @@ object SnapshotTable {
     * resolves which, loudly), a non-integral/string/date physical type,
     * a chunk whose statistics were dropped or lack a null count, or a
     * row group that recorded no values for a non-empty chunk. False
-    * negatives here cost one extra Spark job; false positives would
-    * corrupt pruning — so every branch defaults to None.
+    * negatives here move the stats into the sidecar scan (one Spark
+    * aggregation when no bloom asked for it anyway); false positives
+    * would corrupt pruning — so every branch defaults to None.
     */
   private[graft] def statsRowsByFooter(
       conf: org.apache.hadoop.conf.Configuration,
@@ -1403,17 +1525,7 @@ object SnapshotTable {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import scala.jdk.CollectionConverters._
-    val dataFiles = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-      val stream = java.nio.file.Files.walk(staged)
-      try stream.forEach { p =>
-        val n = p.getFileName.toString
-        if (!n.startsWith("_") && !n.startsWith(".") &&
-            n.endsWith(".parquet") && java.nio.file.Files.isRegularFile(p))
-          out += p
-      } finally stream.close()
-      out.sortBy(_.toString).toSeq
-    }
+    val dataFiles = visibleFiles(staged).filter(_.toString.endsWith(".parquet"))
     if (dataFiles.isEmpty) return None
     // internal value kind per column ("long" | "date" | "string"),
     // fixed by the FIRST file's schema and required identical in every
@@ -1648,71 +1760,48 @@ object SnapshotTable {
     }
   }
 
-  /** Build per-file bloom filters for `bloomCols` over the staged write
-    * and persist them as `_bloom.tsv` (file TAB column TAB base64 bits,
-    * covered by the same atomic claim-rename as the data). One grouped
-    * aggregation keyed by `input_file_name()` with a typed Aggregator
-    * whose buffer is Spark's own mergeable
-    * [[org.apache.spark.util.sketch.BloomFilter]] — map-side partials
-    * OR together, so the pass is one column-pruned scan of the fresh
-    * files and the collect is one row per (file, column): the same
-    * driver-bounded manifest scale as `_stats.tsv`.
-    *
-    * Null handling matches the stats sidecar's spirit: nulls are NOT
-    * inserted, and the point-lookup reader ([[pruneFilesBloom]]) prunes
-    * on equality semantics where NULL never matches.
+  /** The bloom aggregate of [[sidecarScan]]: a value's canonical bytes
+    * ([[bloomKeyBytes]]) go into a per-group
+    * [[org.apache.spark.util.sketch.BloomFilter]] sized for
+    * `expectedItems` at 1% fpp; the result is the filter's serialized
+    * bits.
     */
-  private def writeBloomSidecar(spark: SparkSession,
-      staged: java.nio.file.Path, bloomCols: Seq[String],
-      expectedItems: Long): Unit = {
-    require(expectedItems > 0, s"bloomExpectedItems must be > 0, got $expectedItems")
-    val sdf = spark.read.parquet(staged.toString)
-    bloomCols.foreach { c =>
-      require(sdf.columns.contains(c),
-        s"bloomCols: no column '$c' in committed schema (${sdf.columns.mkString(", ")})")
-      // the bloom gate is NARROWER than the stats gate: fractional
-      // numerics are rejected (build/probe canonical-form divergence
-      // would mean silent false negatives — see bloomTag)
-      bloomTag(sdf.schema(c).dataType)
-    }
+  private def bloomUdaf(
+      expectedItems: Long): org.apache.spark.sql.expressions.UserDefinedFunction = {
+    import org.apache.spark.util.sketch.BloomFilter
     val agg = new org.apache.spark.sql.expressions.Aggregator[
-        String, org.apache.spark.util.sketch.BloomFilter, Array[Byte]] {
-      def zero = org.apache.spark.util.sketch.BloomFilter.create(expectedItems, 0.01)
-      def reduce(b: org.apache.spark.util.sketch.BloomFilter, v: String) = {
+        String, BloomFilter, Array[Byte]] {
+      def zero = BloomFilter.create(expectedItems, 0.01)
+      def reduce(b: BloomFilter, v: String) = {
         if (v != null) b.putBinary(bloomKeyBytes(v))
         b
       }
-      def merge(a: org.apache.spark.util.sketch.BloomFilter,
-          b: org.apache.spark.util.sketch.BloomFilter) = { a.mergeInPlace(b); a }
-      def finish(b: org.apache.spark.util.sketch.BloomFilter) = {
+      def merge(a: BloomFilter, b: BloomFilter) = { a.mergeInPlace(b); a }
+      def finish(b: BloomFilter) = {
         val out = new java.io.ByteArrayOutputStream()
         b.writeTo(out)
         out.toByteArray
       }
-      def bufferEncoder =
-        org.apache.spark.sql.Encoders.kryo[org.apache.spark.util.sketch.BloomFilter]
+      def bufferEncoder = org.apache.spark.sql.Encoders.kryo[BloomFilter]
       def outputEncoder = org.apache.spark.sql.Encoders.BINARY
     }
-    val bloomUdaf = org.apache.spark.sql.functions.udaf(
-      agg, org.apache.spark.sql.Encoders.STRING)
-    val aggs = bloomCols.map(c => bloomUdaf(col(c).cast("string")).as(s"bf_$c"))
-    val rows = sdf
-      .groupBy(input_file_name().as("_f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val marker = staged.getFileName.toString + "/"
+    org.apache.spark.sql.functions.udaf(agg, org.apache.spark.sql.Encoders.STRING)
+  }
+
+  /** Persist the per-file bloom filters [[sidecarScan]] built as
+    * `_bloom.tsv` (file TAB column TAB base64 bits, covered by the same
+    * atomic claim-rename as the data): one line per (file, column), the
+    * same driver-bounded manifest scale as `_stats.tsv`.
+    */
+  private def writeBloomSidecar(conf: org.apache.hadoop.conf.Configuration,
+      staged: java.nio.file.Path, scanned: Seq[FileSidecars]): Unit = {
+    val rows = scanned.flatMap(f => f.blooms.map { case (c, bits) => (f.file, c, bits) })
+      .sortBy(r => (r._1, r._2))
     val enc = (s: String) =>
       java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
     val b64 = java.util.Base64.getEncoder
-    val lines = rows.flatMap { r =>
-      val full = r.getString(r.fieldIndex("_f"))
-      val i = full.indexOf(marker)
-      require(i >= 0, s"bloom scan returned a file outside the staging dir: $full")
-      val rel = full.substring(i + marker.length)
-      bloomCols.map { c =>
-        val bits = r.getAs[Array[Byte]](r.fieldIndex(s"bf_$c"))
-        Seq(enc(rel), enc(c), b64.encodeToString(bits)).mkString("\t")
-      }
+    val lines = rows.map { case (file, c, bits) =>
+      Seq(enc(file), enc(c), b64.encodeToString(bits)).mkString("\t")
     }
     java.nio.file.Files.writeString(staged.resolve("_bloom.tsv"),
       lines.sorted.mkString("", "\n", "\n"))
@@ -1734,20 +1823,15 @@ object SnapshotTable {
         .optional(BINARY).named("bits")
         .named("spark_schema")
     }
-    writeDriverParquet(spark.sparkContext.hadoopConfiguration,
-      staged.resolve("_bloomtab"), btSchema) { (factory, write) =>
-      rows.foreach { r =>
-        val full = r.getString(r.fieldIndex("_f"))
-        val rel = full.substring(full.indexOf(marker) + marker.length)
-        bloomCols.foreach { c =>
+    writeDriverParquet(conf, staged.resolve("_bloomtab"), btSchema) {
+      (factory, write) =>
+        rows.foreach { case (file, c, bits) =>
           val g = factory.newGroup()
-          g.add("file", rel)
+          g.add("file", file)
           g.add("column", c)
-          g.add("bits", org.apache.parquet.io.api.Binary.fromConstantByteArray(
-            r.getAs[Array[Byte]](r.fieldIndex(s"bf_$c"))))
+          g.add("bits", org.apache.parquet.io.api.Binary.fromConstantByteArray(bits))
           write(g)
         }
-      }
     }
   }
 
@@ -2133,7 +2217,7 @@ object SnapshotTable {
   private def manifestOwn(spark: SparkSession, dir: String,
       version: Long): DataFrame = {
     val mp = java.nio.file.Paths.get(dir, s"v$version", "_manifest")
-    if (java.nio.file.Files.exists(mp)) spark.read.parquet(mp.toString)
+    if (java.nio.file.Files.exists(mp)) readParquet(spark, mp.toString)
     else {
       val stats = readStats(dir, version)
       require(stats.nonEmpty,
@@ -2228,7 +2312,7 @@ object SnapshotTable {
       return (kept.map(f => s"$dir/v$version/$f"), blooms.size)
     }
     import spark.implicits._
-    val tab = spark.read.parquet(bt.toString)
+    val tab = readParquet(spark, bt.toString)
       .filter(col("column") === column)
       .select(col("file"), col("bits")).as[(String, Array[Byte])]
     val keyBytes = keys.map(k => bloomKeyBytes(String.valueOf(k))).toArray
@@ -2292,12 +2376,7 @@ object SnapshotTable {
     }
     gens.map { g =>
       val (files, _) = pruneFilesBloomOwn(spark, dir, g, column, keys)
-      val vdir = s"$dir/v$g"
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.read.parquet(vdir).schema)
-      else spark.read.option("basePath", vdir).parquet(files: _*)
+      readKept(spark, s"$dir/v$g", files)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
       .filter(col(column).isin(keys: _*))
   }
@@ -2330,16 +2409,12 @@ object SnapshotTable {
   private def prunedInScan(spark: SparkSession, dir: String, version: Long,
       column: String, keys: Seq[Any]): DataFrame = baseOf(dir, version) match {
     case Some(b) =>
-      val dels = spark.read.parquet(s"$dir/v$version/_deletes")
+      val dels = deletesOf(spark, dir, version)
       prunedInScan(spark, dir, b, column, keys)
         .join(dels, dels.columns.toSeq, "left_anti")
     case None =>
       val (files, _) = pruneFilesBloom(spark, dir, version, column, keys)
-      val vdir = s"$dir/v$version"
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.read.parquet(vdir).schema)
-      else spark.read.option("basePath", vdir).parquet(files: _*)
+      readKept(spark, s"$dir/v$version", files)
   }
 
   /** Past this many keys the residual filter becomes a broadcast
@@ -2463,18 +2538,13 @@ object SnapshotTable {
   def readWhere(spark: SparkSession, dir: String, version: Long,
       column: String, lo: Any, hi: Any): DataFrame = baseOf(dir, version) match {
     case Some(b) =>
-      val dels = spark.read.parquet(s"$dir/v$version/_deletes")
+      val dels = deletesOf(spark, dir, version)
       readWhere(spark, dir, b, column, lo, hi)
         .join(dels, dels.columns.toSeq, "left_anti")
     case None =>
       val (files, _) = pruneFiles(dir, version, column, lo, hi)
-      val vdir = s"$dir/v$version"
-      val base =
-        if (files.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            spark.read.parquet(vdir).schema)
-        else spark.read.option("basePath", vdir).parquet(files: _*)
-      base.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
+      readKept(spark, s"$dir/v$version", files)
+        .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
   }
 
   // ------------------------------- conjunctive multi-column skipping
@@ -2608,18 +2678,12 @@ object SnapshotTable {
   def readWhereMulti(spark: SparkSession, dir: String, version: Long,
       preds: Seq[PrunePredicate]): DataFrame = baseOf(dir, version) match {
     case Some(b) =>
-      val dels = spark.read.parquet(s"$dir/v$version/_deletes")
+      val dels = deletesOf(spark, dir, version)
       readWhereMulti(spark, dir, b, preds)
         .join(dels, dels.columns.toSeq, "left_anti")
     case None =>
       val (files, _) = pruneFilesMulti(spark, dir, version, preds)
-      val vdir = s"$dir/v$version"
-      val base =
-        if (files.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            spark.read.parquet(vdir).schema)
-        else spark.read.option("basePath", vdir).parquet(files: _*)
-      base.filter(preds.map {
+      readKept(spark, s"$dir/v$version", files).filter(preds.map {
         case RangePredicate(c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi)
         case InPredicate(c, keys) => col(c).isin(keys: _*)
         case NullPredicate(c, true) => col(c).isNull

@@ -468,7 +468,7 @@ object Analytic {
               "sum_dl" -> sumDl.toString)), nPostings)
       }
     // (a) batch-proportional write: only the batch's postings
-    val v2Rows = s.read.parquet(s"$idxBase/v$v2").count()
+    val v2Rows = SnapshotTable.readParquet(s, s"$idxBase/v$v2").count()
     require(v2Rows == nBatchPostings,
       s"the append must write ONLY the batch's $nBatchPostings postings; " +
         s"v$v2 holds $v2Rows — the index was rebuilt")
@@ -615,7 +615,7 @@ object Analytic {
         s"${SnapshotTable.chainOf(idxBase, vOpt)}")
     require(genFiles(v1) == baseFiles,
       "the fold must never rewrite the standing base generation")
-    val foldedRows = s.read.parquet(s"$idxBase/v$vOpt").count()
+    val foldedRows = SnapshotTable.readParquet(s, s"$idxBase/v$vOpt").count()
     require(foldedRows == nPostA + nPostB,
       s"the fold must hold exactly the deltas' ${nPostA + nPostB} " +
         s"postings, got $foldedRows — the base leaked into the fold")

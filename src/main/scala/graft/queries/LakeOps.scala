@@ -1624,7 +1624,7 @@ object LakeOps {
       statsCols = Seq("o_orderkey"))(_.repartitionByRange(4, $"o_orderkey"))
     require(SnapshotTable.appendBaseOf(base, vOpt).contains(v1),
       s"optimize must rebase onto the original base v$v1")
-    val vOptRows = s.read.parquet(s"$base/v$vOpt").count()
+    val vOptRows = SnapshotTable.readParquet(s, s"$base/v$vOpt").count()
     require(vOptRows == nDelta,
       s"optimize must rewrite ONLY the $nDelta delta rows; v$vOpt holds " +
         s"$vOptRows — the base was rewritten")
@@ -1730,7 +1730,7 @@ object LakeOps {
       s"the retry must shrink the chain to base + one folded " +
         s"generation: ${SnapshotTable.chainOf(base, vOpt)}")
     val nDeltas = orders.filter(pmod($"o_orderkey", lit(2)) === 1).count()
-    val vOptRows = s.read.parquet(s"$base/v$vOpt").count()
+    val vOptRows = SnapshotTable.readParquet(s, s"$base/v$vOpt").count()
     require(vOptRows == nDeltas,
       s"the retry must fold ONLY the $nDeltas delta rows (racer " +
         s"included); v$vOpt holds $vOptRows — the base was rewritten")
@@ -1857,7 +1857,7 @@ object LakeOps {
     require(v2Top.contains("_deletes") && v2Top.contains("_append"),
       s"the merge version must carry tombstones AND the chain marker " +
         s"in one commit; v$v2 has $v2Top")
-    val v2Rows = s.read.parquet(s"$base/v$v2").count()
+    val v2Rows = SnapshotTable.readParquet(s, s"$base/v$v2").count()
     require(v2Rows == nBatch,
       s"the merge must write ONLY the batch's $nBatch rows; v$v2 holds " +
         s"$v2Rows — it rewrote the table")

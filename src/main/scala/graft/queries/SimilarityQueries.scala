@@ -425,7 +425,7 @@ object SimilarityQueries {
     // (a) delta-proportional write: only the batch's rows, ≤1 file/cell
     val deltaCount = delta.count()
     val v2dir = s"$idxBase/v$v2"
-    val v2Rows = s.read.parquet(v2dir).count()
+    val v2Rows = SnapshotTable.readParquet(s, v2dir).count()
     require(v2Rows == deltaCount,
       s"append must write ONLY the delta ($deltaCount rows); v$v2 holds " +
         s"$v2Rows — the commit rebuilt the index")
@@ -572,7 +572,7 @@ object SimilarityQueries {
         .otherwise(lit(NumCells)))
     val vApp = SnapshotTable.commitAppend(reassigned.repartition($"cell"),
       idxBase, expectedVersion = vDel, partitionCols = Seq("cell"))
-    val vAppRows = s.read.parquet(s"$idxBase/v$vApp").count()
+    val vAppRows = SnapshotTable.readParquet(s, s"$idxBase/v$vApp").count()
     require(vAppRows == hotN,
       s"rebalance must append ONLY the hot cell's $hotN rows; v$vApp " +
         s"holds $vAppRows — the commit rewrote the index")

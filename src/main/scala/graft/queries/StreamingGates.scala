@@ -983,8 +983,8 @@ object StreamingGates {
     Seq(2L, 3L, 4L).foreach { v =>
       require(SnapshotTable.isUpsert(table, v),
         s"v$v must be an atomic upsert commit (tombstones + data in one)")
-      val dataRows = s.read.parquet(s"$table/v$v").count()
-      val delKeys = s.read.parquet(s"$table/v$v/_deletes").count()
+      val dataRows = SnapshotTable.readParquet(s, s"$table/v$v").count()
+      val delKeys = SnapshotTable.readParquet(s, s"$table/v$v/_deletes").count()
       require(dataRows == delKeys && dataRows > 0,
         s"v$v must carry exactly one replacement per tombstoned key: " +
           s"$dataRows rows vs $delKeys tombstones")

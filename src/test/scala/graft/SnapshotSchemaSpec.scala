@@ -1,0 +1,149 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
+
+import graft.ops.SnapshotTable
+
+/** Snapshot reads take their schema from a parquet footer on the
+  * driver instead of a Spark schema-inference job, and a commit builds
+  * its stats and bloom sidecars in one scan. Pins (a) that the footer
+  * schema equals the inferred one exactly (names, types, nullability,
+  * metadata) on every directory shape the lake reads, and (b) the job
+  * counts those two changes buy.
+  */
+class SnapshotSchemaSpec extends SparkSpec {
+
+  private def freshDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).resolve("t").toString
+
+  /** A frame with many column types, a non-nullable column and a
+    * column carrying field metadata.
+    */
+  private def wide(n: Int, offset: Long = 0L): DataFrame = {
+    import spark.implicits._
+    val md = new MetadataBuilder().putString("comment", "order key").build()
+    (1 to n).map { i =>
+      val k = i + offset
+      (k, (k % 7).toInt, s"s${k % 13}", k / 4.0,
+        java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(k % 300)),
+        Seq(s"a$k", s"b${k % 3}"), if (k % 5 == 0) null else s"n$k")
+    }.toDF("k", "g", "s", "d", "day", "tags", "maybe")
+      .select(col("k").as("k", md), col("g"), col("s"), col("d"),
+        col("d").cast("decimal(12,2)").as("dec"), col("day"),
+        col("day").cast("timestamp").as("ts"), col("tags"),
+        struct(col("g"), col("s")).as("pair"),
+        map(col("s"), col("k")).as("m"), col("maybe"))
+  }
+
+  private def assertSameSchema(path: String): Unit = {
+    val inferred = spark.read.parquet(path).schema
+    val footer = SnapshotTable.readParquet(spark, path).schema
+    assert(footer === inferred, s"footer schema differs from inferred at $path")
+    assert(footer.fields.map(_.metadata).toSeq ===
+      inferred.fields.map(_.metadata).toSeq)
+  }
+
+  /** Spark jobs launched while `body` runs (listener bus drained at
+    * both ends so no job of an earlier call leaks in).
+    */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftAccess.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftAccess.drainListeners(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("footer schema equals the inferred schema on every lake directory shape") {
+    import spark.implicits._
+    // a plain commit with stats and blooms: data, _manifest, _bloomtab
+    val dir = freshDir("schema_plain")
+    val v1 = SnapshotTable.commit(wide(200).repartition(3), dir,
+      expectedVersion = SnapshotTable.ExpectEmpty,
+      statsCols = Seq("k", "d"), bloomCols = Seq("k"))
+    assert(wide(1).schema("k").metadata.contains("comment"))
+    assertSameSchema(s"$dir/v$v1")
+    assertSameSchema(s"$dir/v$v1/_manifest")
+    assertSameSchema(s"$dir/v$v1/_bloomtab")
+    // an allowSchemaEvolution append: the generation's own widened files
+    val v2 = SnapshotTable.commitAppend(
+      wide(20, offset = 1000L).withColumn("extra", lit(1.5)), dir,
+      expectedVersion = v1, allowSchemaEvolution = true)
+    assertSameSchema(s"$dir/v$v2")
+    // an empty tombstone set still writes a schema-carrying file
+    val v3 = SnapshotTable.commitDeletes(Seq.empty[Long].toDF("k"), dir,
+      expectedVersion = v2)
+    assertSameSchema(s"$dir/v$v3/_deletes")
+    assert(SnapshotTable.readAt(spark, dir, v3).count() == 220L)
+
+    // a partitionCols commit: partition columns still come from the path
+    val pdir = freshDir("schema_part")
+    val pv = SnapshotTable.commit(wide(120).withColumn("p", col("g") % 3)
+        .repartitionByRange(2, col("k")), pdir,
+      expectedVersion = SnapshotTable.ExpectEmpty,
+      partitionCols = Seq("p"), statsCols = Seq("k"))
+    assertSameSchema(s"$pdir/v$pv")
+    assert(SnapshotTable.readParquet(spark, s"$pdir/v$pv").schema.fieldNames
+      .last == "p")
+
+    // pruned reads, kept files and the empty prune, against the same
+    // reads with inference
+    val vdir = s"$pdir/v$pv"
+    val (kept, total) = SnapshotTable.pruneFiles(pdir, pv, "k", 10L, 20L)
+    assert(kept.nonEmpty && kept.size < total)
+    val inferredKept = spark.read.option("basePath", vdir).parquet(kept: _*)
+      .filter(col("k") >= lit(10L) && col("k") <= lit(20L))
+    val pruned = SnapshotTable.readWhere(spark, pdir, pv, "k", 10L, 20L)
+    assert(pruned.schema === inferredKept.schema)
+    assert(pruned.collect().toSet === inferredKept.collect().toSet)
+    val empty = SnapshotTable.readWhere(spark, pdir, pv, "k", -9L, -1L)
+    assert(empty.schema === spark.read.parquet(vdir).schema)
+    assert(empty.count() == 0L)
+  }
+
+  test("job counts: a chain read builds with no job, a commit's sidecars take one scan") {
+    import spark.implicits._
+    val dir = freshDir("schema_jobs")
+    val orders = (1L to 400L).map(k => (k, k * 1.25, s"c${k % 9}"))
+      .toDF("k", "price", "c")
+    val v1 = SnapshotTable.commit(orders.repartition(2), dir,
+      expectedVersion = SnapshotTable.ExpectEmpty)
+    val v2 = SnapshotTable.commitUpsert(
+      (1L to 40L).map(k => (k, k * 2.5, "u")).toDF("k", "price", "c"),
+      Seq("k"), dir, expectedVersion = v1)
+    val v3 = SnapshotTable.commitDeletes((41L to 60L).toDF("k"), dir,
+      expectedVersion = v2)
+    val v4 = SnapshotTable.commitAppend(
+      (401L to 450L).map(k => (k, k * 1.25, "a")).toDF("k", "price", "c"),
+      dir, expectedVersion = v3)
+    val (chain, buildJobs) = jobsOf(SnapshotTable.readAt(spark, dir, v4))
+    assert(buildJobs == 0, s"building readAt over a 4-generation chain ran $buildJobs jobs")
+    assert(chain.count() == 430L)
+
+    // a DOUBLE stats column defeats the footer path, so the stats and
+    // the bloom come from the scan: one aggregation (2 jobs under AQE)
+    // on top of what a sidecar-less commit of the same frame costs
+    val batch = orders.coalesce(1)
+    val (_, plain) = jobsOf(SnapshotTable.commit(batch, freshDir("schema_plain_c")))
+    val sdir = freshDir("schema_side_c")
+    val (sv, withSidecars) = jobsOf(SnapshotTable.commit(batch, sdir,
+      statsCols = Seq("k", "price"), bloomCols = Seq("k")))
+    assert(withSidecars - plain == 2,
+      s"sidecars took ${withSidecars - plain} jobs (plain commit $plain, " +
+        s"with stats+bloom $withSidecars)")
+    assert(SnapshotTable.readStats(sdir, sv).map(_.col).toSet === Set("k", "price"))
+    assert(SnapshotTable.readBloom(sdir, sv).map(_._2) === Seq("k"))
+  }
+}

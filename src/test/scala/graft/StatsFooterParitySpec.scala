@@ -18,10 +18,16 @@ class StatsFooterParitySpec extends SparkSpec {
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
+  /** The scan reference: the sidecar scan with no bloom columns. */
+  private def scanStats(dir: java.nio.file.Path,
+      cols: Seq[String]): Seq[SnapshotTable.FileColStats] =
+    SnapshotTable.sidecarScan(spark, dir, cols, Nil,
+      SnapshotTable.DefaultBloomExpectedItems).flatMap(_.stats)
+
   private def parity(dir: java.nio.file.Path, cols: Seq[String]): Unit = {
     val footer = SnapshotTable.statsRowsByFooter(conf, dir, cols)
     assert(footer.isDefined, s"footer path demoted on a supported shape ($cols)")
-    val scan = SnapshotTable.statsRowsByScan(spark, dir, cols)
+    val scan = scanStats(dir, cols)
     assert(footer.get.sortBy(r => (r.file, r.column)) ===
       scan.sortBy(r => (r.file, r.column)))
   }
@@ -79,12 +85,45 @@ class StatsFooterParitySpec extends SparkSpec {
     // unknown column: demote, and the scan path raises the loud error
     assert(SnapshotTable.statsRowsByFooter(conf, dir, Seq("zz")).isEmpty)
     val e = intercept[IllegalArgumentException] {
-      SnapshotTable.statsRowsByScan(spark, dir, Seq("zz"))
+      scanStats(dir, Seq("zz"))
     }
     assert(e.getMessage.contains("no column 'zz'"))
     // the long column inside a partitioned layout still works, with
     // partition-relative file paths identical across paths
     parity(dir, Seq("k"))
+  }
+
+  test("the sidecar scan's per-file bloom bits equal filters built by hand") {
+    import spark.implicits._
+    val dir = staged()
+    (1L to 300L).map(i => (i, if (i % 9 == 0) null else s"v${i % 40}", i % 3))
+      .toDF("k", "s", "p")
+      .repartitionByRange(3, $"k")
+      .write.partitionBy("p").parquet(dir.toString)
+    val items = 500L
+    val scanned = SnapshotTable.sidecarScan(spark, dir, Seq("k"), Seq("k", "s", "p"), items)
+    // the reference: every value of the file, cast to string, into a
+    // filter of the same size; nulls stay out
+    val perFile = spark.read.parquet(dir.toString)
+      .select(input_file_name().as("f"), $"k".cast("string"), $"s", $"p".cast("string"))
+      .collect().groupBy(r => r.getString(0).substring(
+        r.getString(0).indexOf(dir.getFileName.toString + "/") +
+          dir.getFileName.toString.length + 1))
+    assert(scanned.map(_.file).toSet === perFile.keySet)
+    for (f <- scanned) {
+      val rows = perFile(f.file)
+      assert(f.stats.map(_.rowCount).distinct === Seq(rows.length.toLong))
+      assert(f.blooms.map(_._1) === Seq("k", "s", "p"))
+      for (((c, bits), i) <- f.blooms.zipWithIndex) {
+        val bf = org.apache.spark.util.sketch.BloomFilter.create(items, 0.01)
+        rows.flatMap(r => Option(r.getString(i + 1))).foreach(v =>
+          bf.putBinary(v.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        val want = new java.io.ByteArrayOutputStream()
+        bf.writeTo(want)
+        assert(java.util.Arrays.equals(bits, want.toByteArray),
+          s"bloom bits of ${f.file}/$c differ from the hand-built filter")
+      }
+    }
   }
 
   test("unicode string bounds order by unsigned bytes, like UTF8String") {

@@ -1,7 +1,9 @@
 #!/bin/bash
 # Fast runner: invoke a graft main class directly on compiled classes +
 # /opt/spark/jars, skipping sbt JVM startup. Compile first with
-# `sbt compile` (or tools/compile.sh).
+# `sbt compile` (or tools/compile.sh). src/main/resources rides on the
+# classpath itself (`sbt compile` does not copy it into target/), so the
+# META-INF/services registrations, e.g. format("snapshot"), resolve.
 #   tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/graft_verify
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 tools/run.sh graft.Bench
 set -e
@@ -21,5 +23,5 @@ done
 exec java $ADD_OPENS $EXTRA_JAVA_OPTS \
   -XX:ReservedCodeCacheSize=1g \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "$MAIN" "$@"
