@@ -103,7 +103,9 @@ object PlanDump {
           // non-empty partition filters only: every non-hive scan
           // carries a noisy "PartitionFilters: []"
           lines("PartitionFilters: \\[[^\\]]+\\]", 200, 3)
-          lines("ReadSchema: struct<[^>]*>", 180, 3)
+          // a schema Spark truncated ends in "..." with no closing '>':
+          // the match stops at the end of its line
+          lines("ReadSchema: struct<[^>\\n]*>?", 180, 3)
           lines("SelectedBucketsCount: [^,\\n]*", Int.MaxValue, Int.MaxValue)
         }
         sb ++= "\n"

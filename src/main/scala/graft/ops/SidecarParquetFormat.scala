@@ -1,0 +1,190 @@
+package graft.ops
+
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
+import org.apache.spark.sql.{DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{DataType, Decimal, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.util.sketch.BloomFilter
+
+/** The parquet format a snapshot commit writes its data through: plain
+  * Parquet files, plus what a stats and bloom sidecar needs of each
+  * file, gathered by the writer while it writes the file — the way
+  * Delta and Iceberg collect their per-file metrics — instead of by a
+  * second scan of the fresh files. Each [[OutputWriter]] keeps its
+  * file's row count, min/max/null count per stats column (Catalyst's
+  * ordering for the type: NaN largest) and a bloom filter per bloom
+  * column, and hands one [[SidecarParquetFormat.WrittenFile]] to the
+  * driver when it closes.
+  *
+  * Internal to [[SnapshotTable]], which writes through
+  * [[SidecarParquetFormat.write]]: a write names this class as its
+  * format and carries an opaque commit id as its only option, which
+  * [[prepareWrite]] resolves to the commit's columns and collector.
+  * A write without a registered id fails loudly.
+  */
+class SidecarParquetFormat extends ParquetFileFormat {
+
+  override def prepareWrite(sparkSession: SparkSession, job: Job,
+      options: Map[String, String], dataSchema: StructType): OutputWriterFactory = {
+    val inner = super.prepareWrite(sparkSession, job, options, dataSchema)
+    val commit = options.get(SidecarParquetFormat.CommitKey)
+      .flatMap(id => Option(SidecarParquetFormat.open.get(id)))
+      .getOrElse(throw new IllegalStateException(
+        s"${getClass.getName} is SnapshotTable's internal write format; " +
+          "commit through SnapshotTable instead of naming it"))
+    val tz = Some(sparkSession.sessionState.conf.sessionLocalTimeZone)
+    // hive partition columns are not in the written rows: their per-file
+    // value comes from the staged directory's partition paths
+    val at = (c: String) => Some(dataSchema.fieldNames.indexOf(c)).filter(_ >= 0)
+    new SidecarParquetFormat.WriterFactory(inner,
+      commit.statsCols.flatMap(c => at(c).map(i => (c, i, dataSchema(i).dataType))),
+      commit.bloomCols.flatMap(c => at(c).map(i => (c, i,
+        SidecarParquetFormat.asString(
+          BoundReference(i, dataSchema(i).dataType, nullable = true), tz)))),
+      commit.bloomExpectedItems, commit.sink)
+  }
+}
+
+object SidecarParquetFormat {
+
+  /** The one option a sidecar write carries: its commit's id. */
+  private val CommitKey = "graft.sidecar.commit"
+
+  /** What a writer saw of one data file: the file's path below its
+    * task attempt directory (`p=0/part-….parquet`, the path relative to
+    * the staged directory once the job commits), its row count, the
+    * value range of each stats column written into it and the
+    * serialized bloom filter of each bloom column. Partition columns
+    * appear in neither list.
+    */
+  private[ops] final case class WrittenFile(file: String, rows: Long,
+      stats: Seq[ValueRange], blooms: Seq[(String, Array[Byte])])
+
+  /** A stats column's range in one file: Catalyst values of the
+    * column's type, null when the file holds no non-null value.
+    */
+  private[ops] final case class ValueRange(column: String, min: Any, max: Any,
+      nulls: Long)
+
+  private final case class Commit(statsCols: Seq[String], bloomCols: Seq[String],
+      bloomExpectedItems: Long, sink: CollectionAccumulator[WrittenFile])
+
+  /** The writes in flight on this driver, by commit id. */
+  private val open = new java.util.concurrent.ConcurrentHashMap[String, Commit]()
+
+  /** Save `w` to `path` through this format and return one record per
+    * file the write produced (0-row files included). The commit's
+    * collector lives only for the write: it leaves the registry and
+    * Spark's accumulator registry however the write ends.
+    */
+  private[ops] def write(spark: SparkSession, w: DataFrameWriter[Row], path: String,
+      statsCols: Seq[String], bloomCols: Seq[String],
+      bloomExpectedItems: Long): Seq[WrittenFile] = {
+    val sink = new CollectionAccumulator[WrittenFile]
+    spark.sparkContext.register(sink)
+    val id = java.util.UUID.randomUUID().toString
+    open.put(id, Commit(statsCols, bloomCols, bloomExpectedItems, sink))
+    try {
+      w.format(classOf[SidecarParquetFormat].getName).option(CommitKey, id).save(path)
+      import scala.jdk.CollectionConverters._
+      sink.value.asScala.toSeq
+    } finally {
+      open.remove(id)
+      org.apache.spark.GraftAccess.unregister(sink)
+    }
+  }
+
+  /** Spark's `CAST(e AS STRING)`: how a stats bound is rendered and
+    * what a bloom filter is fed.
+    */
+  private[ops] def asString(e: Expression, tz: Option[String]): Cast =
+    Cast(e, StringType, tz)
+
+  /** An empty bloom filter of the sidecars' size and false-positive rate. */
+  private[ops] def newBloom(expectedItems: Long): BloomFilter =
+    BloomFilter.create(expectedItems, 0.01)
+
+  /** A bloom filter's serialized form, as the sidecars store it. */
+  private[ops] def bits(bf: BloomFilter): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    bf.writeTo(out)
+    out.toByteArray
+  }
+
+  private[ops] final class WriterFactory(inner: OutputWriterFactory,
+      statsCols: Seq[(String, Int, DataType)], bloomCols: Seq[(String, Int, Expression)],
+      bloomExpectedItems: Long, sink: CollectionAccumulator[WrittenFile])
+      extends OutputWriterFactory {
+
+    override def getFileExtension(context: TaskAttemptContext): String =
+      inner.getFileExtension(context)
+
+    override def newInstance(path: String, dataSchema: StructType,
+        context: TaskAttemptContext): OutputWriter = {
+      val attempt = s"/${context.getTaskAttemptID}/"
+      val i = path.indexOf(attempt)
+      new Writer(inner.newInstance(path, dataSchema, context),
+        if (i < 0) path else path.substring(i + attempt.length))
+    }
+
+    private final class Writer(inner: OutputWriter, file: String) extends OutputWriter {
+      private var rows = 0L
+      private val ords = statsCols.map(_._2).toArray
+      private val get = statsCols.map(s => InternalRow.getAccessor(s._3, nullable = false)).toArray
+      private val order = statsCols.map(s =>
+        org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(s._3)).toArray
+      private val mins = new Array[Any](ords.length)
+      private val maxs = new Array[Any](ords.length)
+      private val nulls = new Array[Long](ords.length)
+      private val keyOrds = bloomCols.map(_._2).toArray
+      private val keys = bloomCols.map(_._3).toArray
+      private val blooms = keys.map(_ => newBloom(bloomExpectedItems))
+
+      override def write(row: InternalRow): Unit = {
+        rows += 1
+        var i = 0
+        while (i < ords.length) {
+          if (row.isNullAt(ords(i))) nulls(i) += 1
+          else {
+            val v = get(i)(row, ords(i))
+            if (mins(i) == null || order(i).lt(v, mins(i))) mins(i) = owned(v)
+            if (maxs(i) == null || order(i).gt(v, maxs(i))) maxs(i) = owned(v)
+          }
+          i += 1
+        }
+        i = 0
+        while (i < keys.length) {
+          // the key is the UTF-8 of the value's string cast
+          if (!row.isNullAt(keyOrds(i)))
+            blooms(i).putBinary(keys(i).eval(row).asInstanceOf[UTF8String].getBytes)
+          i += 1
+        }
+        inner.write(row)
+      }
+
+      override def close(): Unit = {
+        inner.close()
+        sink.add(WrittenFile(file, rows,
+          statsCols.zipWithIndex.map { case ((c, _, _), i) =>
+            ValueRange(c, mins(i), maxs(i), nulls(i)) },
+          bloomCols.zipWithIndex.map { case ((c, _, _), i) => c -> bits(blooms(i)) }))
+      }
+
+      override def path(): String = inner.path()
+    }
+  }
+
+  /** A bound that outlives the row: string and decimal values may point
+    * into a buffer the next row reuses.
+    */
+  private def owned(v: Any): Any = v match {
+    case s: UTF8String => s.clone()
+    case d: Decimal => d.clone()
+    case other => other
+  }
+}

@@ -1,7 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, sum}
+import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal snapshot/commit protocol for parquet tables — the spine that
   * turns the lake ops ([[graft.queries.LakeOps]] compaction/integrity,
@@ -155,12 +156,14 @@ object SnapshotTable {
     * the spine.
     *
     * `statsCols` (optional) gathers per-file min/max/nullCount for the
-    * named DATA columns into the version's `_stats.tsv` sidecar — the
-    * file-skipping manifest [[readWhere]] prunes with. The stats come
-    * from the staged files' parquet footers where those answer, else
-    * from the one column-pruned sidecar scan that also builds the
-    * blooms (the same bookkeeping cost every stats-writing format
-    * pays), and the sidecar is one line per (file, column): driver-
+    * named columns into the version's `_stats.tsv` sidecar — the
+    * file-skipping manifest [[readWhere]] prunes with. The stats, like
+    * the `bloomCols` filters, are gathered by the data write itself
+    * ([[SidecarParquetFormat]]: each file's writer keeps them while it
+    * writes, as Delta's and Iceberg's writers keep their file metrics),
+    * so they cost no scan and no Spark job of their own; a hive
+    * partition column takes its per-file value from the partition
+    * directory. The sidecar is one line per (file, column): driver-
     * bounded the way a Delta log / Iceberg manifest is.
     */
   def commit(df: DataFrame, dir: String,
@@ -279,21 +282,33 @@ object SnapshotTable {
 
   /** Stage `df`'s data plus every requested sidecar (stats, blooms,
     * commit metadata) into a fresh writer-unique directory — the
-    * shared write half of all four commit flavors (main, branch,
-    * append, rebase); the claim half is [[claimVersion]]. Chain
-    * markers (`_append`/`_base`) are the caller's: they go in LAST,
-    * after the sidecar builders have re-read the staged data files.
+    * shared write half of every commit flavor (main, branch, append,
+    * rebase, upsert, compaction); the claim half is [[claimVersion]].
+    * The data goes through [[SidecarParquetFormat]], whose writers
+    * gather the stats and blooms while they write, so the sidecars cost
+    * no Spark job; the column gates fire before the write.
     */
   private def stageData(df: DataFrame, dir: String,
       partitionCols: Seq[String], statsCols: Seq[String],
       bloomCols: Seq[String], bloomExpectedItems: Long,
       meta: Map[String, String]): java.nio.file.Path = {
+    checkSidecarCols(df, statsCols, bloomCols, bloomExpectedItems)
     val staged = stagedPath(dir)
     val w = df.write.mode("errorifexists")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(staged.toString)
-    writeSidecars(df.sparkSession, staged, statsCols, bloomCols,
-      bloomExpectedItems)
+    val written = SidecarParquetFormat.write(df.sparkSession,
+      if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w,
+      staged.toString, statsCols, bloomCols, bloomExpectedItems)
+    // the writers must account for exactly the files the job committed:
+    // a file they missed would be a data file without sidecar lines
+    val reported = written.map(_.file).sorted
+    val onDisk = visibleFiles(staged).map(staged.relativize(_).toString).sorted
+    if (reported != onDisk)
+      throw new IllegalStateException(
+        s"staged write at $staged: the writers reported " +
+          s"${reported.mkString("[", ", ", "]")} but the directory holds " +
+          s"${onDisk.mkString("[", ", ", "]")}; nothing was claimed")
+    writeSidecars(df.sparkSession, staged, written, df.schema, statsCols,
+      bloomCols, bloomExpectedItems)
     writeMeta(staged, meta)
     // schema-in-metadata: a full commit exposes its own columns (the
     // chain-extending flavors overwrite this with the merged set)
@@ -836,8 +851,7 @@ object SnapshotTable {
     // the chain read exposes base ∪ delta names (an evolved delta's
     // new columns append; order: base first, the unionByName shape)
     writeNames(staged, baseNames ++ delta.columns.filterNot(baseCols))
-    // chain marker LAST (stageData's sidecar builders re-read the
-    // staged dir and must see only the delta's data files)
+    // chain marker LAST, once the data and its sidecars are staged
     java.nio.file.Files.writeString(staged.resolve("_append"),
       s"v$expectedVersion")
     publishStaged(dir, staged, Some(expectedVersion))
@@ -1044,7 +1058,7 @@ object SnapshotTable {
 
   /** ATOMIC merge-on-read UPSERT (MERGE INTO): publish ONE version that
     * is the base MINUS the batch's keys PLUS the batch's rows — the
-    * tombstone set (`_deletes/`, the batch's distinct `keyCols`), the
+    * tombstone set (`_deletes/`, the batch's `keyCols`), the
     * batch's data files, and the `_append` chain marker all land in one
     * staged directory and publish through one claim-rename + one
     * pointer flip. A reader at ANY version therefore sees either the
@@ -1140,10 +1154,11 @@ object SnapshotTable {
     }
     val staged = stageData(batch, dir, partitionCols, statsCols, bloomCols,
       bloomExpectedItems, meta ++ statsMeta)
-    // tombstones + chain marker LAST (stageData's sidecar builders
-    // re-read the staged dir and must see only the batch's data files;
-    // underscore prefixes keep both invisible to data readers)
-    batch.select(keyCols.map(col): _*).distinct()
+    // tombstones + chain marker after the data (underscore prefixes
+    // keep both invisible to data readers). The keys are written as the
+    // batch carries them: the read's left_anti join ignores duplicate
+    // tombstones, and a distinct would cost a shuffle per upsert
+    batch.select(keyCols.map(col): _*)
       .write.mode("errorifexists").parquet(staged.resolve("_deletes").toString)
     java.nio.file.Files.writeString(staged.resolve("_append"),
       s"v$expectedVersion")
@@ -1374,31 +1389,95 @@ object SnapshotTable {
     case _ => a.compareTo(b)
   }
 
-  /** Build the stats and bloom sidecars of a staged write with at most
-    * ONE grouped scan of the fresh files. The stats come from the
-    * parquet FOOTERS when they can answer byte-identically
-    * ([[statsRowsByFooter]]: zero Spark jobs, the move every real
-    * format makes — Iceberg collects its manifest metrics from the
-    * writer's footers); whatever else is asked — the stats the footers
-    * could not answer (fractional/decimal and partition columns,
-    * dropped footer stats) and every bloom — comes from one
-    * [[sidecarScan]]. Either stats source feeds the same sink, so the
-    * sidecar bytes are identical — `StatsFooterParitySpec` pins that.
+  /** The sidecar column gates, checked against the frame before a byte
+    * is written: every stats and bloom column must exist, with a type
+    * its sidecar supports ([[statsTag]], [[bloomTag]]).
+    */
+  private def checkSidecarCols(df: DataFrame, statsCols: Seq[String],
+      bloomCols: Seq[String], bloomExpectedItems: Long): Unit = {
+    val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    statsCols.foreach(c => require(types.contains(c),
+      s"statsCols: no column '$c' in committed schema " +
+        s"(${df.columns.mkString(", ")})"))
+    statsCols.foreach(c => statsTag(types(c)))
+    if (bloomCols.nonEmpty)
+      require(bloomExpectedItems > 0,
+        s"bloomExpectedItems must be > 0, got $bloomExpectedItems")
+    bloomCols.foreach { c =>
+      require(types.contains(c),
+        s"bloomCols: no column '$c' in committed schema (${df.columns.mkString(", ")})")
+      // the bloom gate is NARROWER than the stats gate: fractional
+      // numerics are rejected (build/probe canonical-form divergence
+      // would mean silent false negatives — see bloomTag)
+      bloomTag(types(c))
+    }
+  }
+
+  /** Render the stats and bloom sidecars of a staged write from what its
+    * writers saw ([[SidecarParquetFormat.WrittenFile]]): one line per
+    * (file, column) of every file with rows, min and max rendered by
+    * the same `CAST(… AS STRING)` a `min(col).cast("string")` applies.
+    * A hive partition column is not in the written rows: its per-file
+    * value is the file's partition directory value, typed as a read of
+    * the staged directory infers it (Spark's own file index, listed on
+    * the driver). Nulls are NOT inserted into a bloom: the point-lookup
+    * reader ([[pruneFilesBloom]]) prunes on equality semantics, where
+    * NULL never matches.
     */
   private def writeSidecars(spark: SparkSession, staged: java.nio.file.Path,
+      written: Seq[SidecarParquetFormat.WrittenFile], schema: StructType,
       statsCols: Seq[String], bloomCols: Seq[String],
       bloomExpectedItems: Long): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
     val conf = spark.sparkContext.hadoopConfiguration
-    val footerStats =
-      if (statsCols.isEmpty) None else statsRowsByFooter(conf, staged, statsCols)
-    val scanStats = if (footerStats.isDefined) Nil else statsCols
-    val scanned =
-      if (scanStats.isEmpty && bloomCols.isEmpty) Nil
-      else sidecarScan(spark, staged, scanStats, bloomCols, bloomExpectedItems)
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    def str(v: Any, dt: DataType): Option[String] = Option(v).map(x =>
+      SidecarParquetFormat.asString(Literal(x, dt), tz).eval().toString)
+    val files = written.filter(_.rows > 0).sortBy(_.file)
+    // a column the writers did not see is a hive partition column
+    lazy val partValue = partitionValues(spark, staged)
     if (statsCols.nonEmpty)
-      writeStatsSidecar(conf, staged, footerStats.getOrElse(scanned.flatMap(_.stats)))
+      writeStatsSidecar(conf, staged, for (f <- files; c <- statsCols) yield
+        f.stats.find(_.column == c) match {
+          case Some(r) =>
+            val dt = schema(c).dataType
+            FileColStats(f.file, f.rows, c, statsTag(dt), str(r.min, dt),
+              str(r.max, dt), r.nulls)
+          case None =>
+            val (v, dt) = partValue(f.file, c)
+            FileColStats(f.file, f.rows, c, statsTag(dt), str(v, dt), str(v, dt),
+              if (v == null) f.rows else 0L)
+        })
     if (bloomCols.nonEmpty)
-      writeBloomSidecar(conf, staged, scanned)
+      writeBloomSidecar(conf, staged, for (f <- files; c <- bloomCols) yield
+        (f.file, c, f.blooms.find(_._1 == c).map(_._2).getOrElse {
+          val (v, dt) = partValue(f.file, c)
+          bloomTag(dt)
+          val bf = SidecarParquetFormat.newBloom(bloomExpectedItems)
+          str(v, dt).foreach(s => bf.putBinary(bloomKeyBytes(s)))
+          SidecarParquetFormat.bits(bf)
+        }))
+  }
+
+  /** A hive partition column's value in a staged data file, as
+    * (Catalyst value, type), by (file path relative to `staged`,
+    * column): Spark's file index of the directory, so values and types
+    * are what a read of it infers.
+    */
+  private def partitionValues(spark: SparkSession,
+      staged: java.nio.file.Path): (String, String) => (Any, DataType) = {
+    val root = staged.toAbsolutePath
+    val spec = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+      spark, Seq(new org.apache.hadoop.fs.Path(root.toUri)), Map.empty, None)
+      .partitionSpec()
+    val byDir = spec.partitions.map(p =>
+      root.relativize(java.nio.file.Paths.get(p.path.toUri)).toString -> p.values).toMap
+    (f, c) => {
+      val i = spec.partitionColumns.fieldIndex(c)
+      val dt = spec.partitionColumns(i).dataType
+      (byDir(Option(java.nio.file.Paths.get(f).getParent).fold("")(_.toString))
+        .get(i, dt), dt)
+    }
   }
 
   /** Persist per-file stats records as `_stats.tsv` inside the staged
@@ -1429,195 +1508,14 @@ object SnapshotTable {
     writeManifestParquet(conf, staged.resolve("_manifest"), rows)
   }
 
-  /** One per-(file, column) stats record — the unit both stats builders
-    * produce and both sidecar forms (`_stats.tsv`, `_manifest/`) are
-    * rendered from. `minStr`/`maxStr` are the exact strings the old
-    * aggregate produced (`min(col).cast("string")`), None for an
+  /** One per-(file, column) stats record — the unit both sidecar forms
+    * (`_stats.tsv`, `_manifest/`) are rendered from. `minStr`/`maxStr`
+    * are the strings `min(col).cast("string")` produces, None for an
     * all-null file.
     */
-  private[graft] final case class FileColStats(file: String, rowCount: Long,
+  private final case class FileColStats(file: String, rowCount: Long,
       column: String, tag: String, minStr: Option[String],
       maxStr: Option[String], nullCount: Long)
-
-  /** What the sidecar scan yields for one staged data file: its stats
-    * records and its serialized bloom filter per bloom column.
-    */
-  private[graft] final case class FileSidecars(file: String,
-      stats: Seq[FileColStats], blooms: Seq[(String, Array[Byte])])
-
-  /** The one grouped scan of the staged files keyed by
-    * `input_file_name()`, collecting one row per data file with the
-    * stats of `statsCols` (`min`/`max` cast to string, null count) and
-    * a bloom filter per `bloomCols` column. The bloom aggregate is a
-    * typed Aggregator whose buffer is Spark's own mergeable
-    * [[org.apache.spark.util.sketch.BloomFilter]] — map-side partials
-    * OR together, so the pass stays one column-pruned scan of the fresh
-    * files, and the collect is file-count-bounded like the sidecars.
-    * Nulls are NOT inserted into a bloom: the point-lookup reader
-    * ([[pruneFilesBloom]]) prunes on equality semantics, where NULL
-    * never matches. A 0-row file yields no row, as on the footer path.
-    */
-  private[graft] def sidecarScan(spark: SparkSession,
-      staged: java.nio.file.Path, statsCols: Seq[String],
-      bloomCols: Seq[String], bloomExpectedItems: Long): Seq[FileSidecars] = {
-    val sdf = readParquet(spark, staged.toString)
-    val types = sdf.schema.fields.map(f => f.name -> f.dataType).toMap
-    statsCols.foreach(c => require(types.contains(c),
-      s"statsCols: no column '$c' in committed schema " +
-        s"(${sdf.columns.mkString(", ")})"))
-    val tags = statsCols.map(c => c -> statsTag(types(c))).toMap
-    if (bloomCols.nonEmpty)
-      require(bloomExpectedItems > 0,
-        s"bloomExpectedItems must be > 0, got $bloomExpectedItems")
-    bloomCols.foreach { c =>
-      require(types.contains(c),
-        s"bloomCols: no column '$c' in committed schema (${sdf.columns.mkString(", ")})")
-      // the bloom gate is NARROWER than the stats gate: fractional
-      // numerics are rejected (build/probe canonical-form divergence
-      // would mean silent false negatives — see bloomTag)
-      bloomTag(types(c))
-    }
-    val statAggs = statsCols.flatMap { c =>
-      Seq(min(col(c)).cast("string").as(s"min_$c"),
-        max(col(c)).cast("string").as(s"max_$c"),
-        sum(col(c).isNull.cast("long")).as(s"nulls_$c"))
-    }
-    val bloomAggs = bloomCols.map(c =>
-      bloomUdaf(bloomExpectedItems)(col(c).cast("string")).as(s"bf_$c"))
-    val rows = sdf
-      .groupBy(input_file_name().as("_f"))
-      .agg(count(lit(1)).as("_rc"), statAggs ++ bloomAggs: _*)
-      .collect()
-    val marker = staged.getFileName.toString + "/"
-    rows.toSeq.map { r =>
-      val full = r.getString(r.fieldIndex("_f"))
-      val i = full.indexOf(marker)
-      require(i >= 0, s"sidecar scan returned a file outside the staging dir: $full")
-      val rel = full.substring(i + marker.length)
-      val rc = r.getLong(r.fieldIndex("_rc"))
-      FileSidecars(rel,
-        statsCols.map { c =>
-          FileColStats(rel, rc, c, tags(c),
-            Option(r.getString(r.fieldIndex(s"min_$c"))),
-            Option(r.getString(r.fieldIndex(s"max_$c"))),
-            r.getLong(r.fieldIndex(s"nulls_$c")))
-        },
-        bloomCols.map(c => c -> r.getAs[Array[Byte]](r.fieldIndex(s"bf_$c"))))
-    }
-  }
-
-  /** Footer-based stats builder: reads each staged data file's parquet
-    * footer on the driver and renders the SAME records the grouped scan
-    * would. Returns None — "demote to the scan" — whenever equivalence
-    * cannot be proven from the footer alone: a stats column missing
-    * from the data-file schema (partition column or typo: the scan path
-    * resolves which, loudly), a non-integral/string/date physical type,
-    * a chunk whose statistics were dropped or lack a null count, or a
-    * row group that recorded no values for a non-empty chunk. False
-    * negatives here move the stats into the sidecar scan (one Spark
-    * aggregation when no bloom asked for it anyway); false positives
-    * would corrupt pruning — so every branch defaults to None.
-    */
-  private[graft] def statsRowsByFooter(
-      conf: org.apache.hadoop.conf.Configuration,
-      staged: java.nio.file.Path,
-      statsCols: Seq[String]): Option[Seq[FileColStats]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
-    val dataFiles = visibleFiles(staged).filter(_.toString.endsWith(".parquet"))
-    if (dataFiles.isEmpty) return None
-    // internal value kind per column ("long" | "date" | "string"),
-    // fixed by the FIRST file's schema and required identical in every
-    // later file; the written tag folds date into "string" (ISO render)
-    // exactly like statsTag does
-    var kinds: Map[String, String] = null
-    val out = Seq.newBuilder[FileColStats]
-    for (f <- dataFiles) {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val footer = try reader.getFooter finally reader.close()
-      val schema = footer.getFileMetaData.getSchema
-      val fileKinds = statsCols.map { c =>
-        if (!schema.containsField(c)) return None
-        val t = schema.getType(schema.getFieldIndex(c))
-        if (!t.isPrimitive) return None
-        val p = t.asPrimitiveType()
-        val kind = (p.getPrimitiveTypeName,
-            Option(p.getLogicalTypeAnnotation)) match {
-          case (PrimitiveTypeName.INT64, None) => "long"
-          case (PrimitiveTypeName.INT64,
-              Some(i: LogicalTypeAnnotation.IntLogicalTypeAnnotation))
-              if i.isSigned => "long"
-          case (PrimitiveTypeName.INT32, None) => "long"
-          case (PrimitiveTypeName.INT32,
-              Some(i: LogicalTypeAnnotation.IntLogicalTypeAnnotation))
-              if i.isSigned => "long"
-          case (PrimitiveTypeName.INT32,
-              Some(_: LogicalTypeAnnotation.DateLogicalTypeAnnotation)) =>
-            "date"
-          case (PrimitiveTypeName.BINARY,
-              Some(_: LogicalTypeAnnotation.StringLogicalTypeAnnotation)) =>
-            "string"
-          case _ => return None
-        }
-        c -> kind
-      }.toMap
-      if (kinds == null) kinds = fileKinds
-      else if (kinds != fileKinds) return None
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rowCount = blocks.map(_.getRowCount).sum
-      // a 0-row file contributes no rows to the grouped scan either
-      if (rowCount > 0) {
-        val rel = staged.relativize(f).toString
-        for (c <- statsCols) {
-          val chunks = blocks.map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == c)
-              .getOrElse(return None)
-          }
-          val stats = chunks.map { ch =>
-            val st = ch.getStatistics
-            if (st == null || !st.isNumNullsSet) return None
-            // a chunk with values but no recorded min/max (e.g. parquet
-            // drops binary stats past 4 KB) cannot prove equivalence
-            if (!st.hasNonNullValue && st.getNumNulls != ch.getValueCount)
-              return None
-            st
-          }
-          val nulls = stats.map(_.getNumNulls).sum
-          val withVals = stats.filter(_.hasNonNullValue)
-          val (minStr, maxStr): (Option[String], Option[String]) =
-            if (withVals.isEmpty) (None, None)
-            else kinds(c) match {
-              case "long" =>
-                val mins = withVals.map(_.genericGetMin.asInstanceOf[Number].longValue)
-                val maxs = withVals.map(_.genericGetMax.asInstanceOf[Number].longValue)
-                (Some(mins.min.toString), Some(maxs.max.toString))
-              case "date" =>
-                val mins = withVals.map(_.genericGetMin.asInstanceOf[Number].intValue)
-                val maxs = withVals.map(_.genericGetMax.asInstanceOf[Number].intValue)
-                (Some(java.time.LocalDate.ofEpochDay(mins.min.toLong).toString),
-                  Some(java.time.LocalDate.ofEpochDay(maxs.max.toLong).toString))
-              case _ =>
-                val mins = withVals.map(_.genericGetMin
-                  .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
-                val maxs = withVals.map(_.genericGetMax
-                  .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
-                val mn = mins.reduce((a, b) =>
-                  if (java.util.Arrays.compareUnsigned(a, b) <= 0) a else b)
-                val mx = maxs.reduce((a, b) =>
-                  if (java.util.Arrays.compareUnsigned(a, b) >= 0) a else b)
-                (Some(new String(mn, java.nio.charset.StandardCharsets.UTF_8)),
-                  Some(new String(mx, java.nio.charset.StandardCharsets.UTF_8)))
-            }
-          val tag = if (kinds(c) == "date") "string" else kinds(c)
-          out += FileColStats(rel, rowCount, c, tag, minStr, maxStr, nulls)
-        }
-      }
-    }
-    Some(out.result())
-  }
 
   /** Write the `_manifest/` parquet from driver-resident stats rows —
     * no Spark job; the schema (names, physical types, nullability)
@@ -1760,43 +1658,14 @@ object SnapshotTable {
     }
   }
 
-  /** The bloom aggregate of [[sidecarScan]]: a value's canonical bytes
-    * ([[bloomKeyBytes]]) go into a per-group
-    * [[org.apache.spark.util.sketch.BloomFilter]] sized for
-    * `expectedItems` at 1% fpp; the result is the filter's serialized
-    * bits.
-    */
-  private def bloomUdaf(
-      expectedItems: Long): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    import org.apache.spark.util.sketch.BloomFilter
-    val agg = new org.apache.spark.sql.expressions.Aggregator[
-        String, BloomFilter, Array[Byte]] {
-      def zero = BloomFilter.create(expectedItems, 0.01)
-      def reduce(b: BloomFilter, v: String) = {
-        if (v != null) b.putBinary(bloomKeyBytes(v))
-        b
-      }
-      def merge(a: BloomFilter, b: BloomFilter) = { a.mergeInPlace(b); a }
-      def finish(b: BloomFilter) = {
-        val out = new java.io.ByteArrayOutputStream()
-        b.writeTo(out)
-        out.toByteArray
-      }
-      def bufferEncoder = org.apache.spark.sql.Encoders.kryo[BloomFilter]
-      def outputEncoder = org.apache.spark.sql.Encoders.BINARY
-    }
-    org.apache.spark.sql.functions.udaf(agg, org.apache.spark.sql.Encoders.STRING)
-  }
-
-  /** Persist the per-file bloom filters [[sidecarScan]] built as
+  /** Persist per-file bloom filters, (file, column, serialized bits), as
     * `_bloom.tsv` (file TAB column TAB base64 bits, covered by the same
     * atomic claim-rename as the data): one line per (file, column), the
     * same driver-bounded manifest scale as `_stats.tsv`.
     */
   private def writeBloomSidecar(conf: org.apache.hadoop.conf.Configuration,
-      staged: java.nio.file.Path, scanned: Seq[FileSidecars]): Unit = {
-    val rows = scanned.flatMap(f => f.blooms.map { case (c, bits) => (f.file, c, bits) })
-      .sortBy(r => (r._1, r._2))
+      staged: java.nio.file.Path, blooms: Seq[(String, String, Array[Byte])]): Unit = {
+    val rows = blooms.sortBy(r => (r._1, r._2))
     val enc = (s: String) =>
       java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
     val b64 = java.util.Base64.getEncoder

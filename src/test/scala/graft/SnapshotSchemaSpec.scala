@@ -8,7 +8,7 @@ import graft.ops.SnapshotTable
 
 /** Snapshot reads take their schema from a parquet footer on the
   * driver instead of a Spark schema-inference job, and a commit builds
-  * its stats and bloom sidecars in one scan. Pins (a) that the footer
+  * its stats and bloom sidecars inside its data write. Pins (a) that the footer
   * schema equals the inferred one exactly (names, types, nullability,
   * metadata) on every directory shape the lake reads, and (b) the job
   * counts those two changes buy.
@@ -113,7 +113,7 @@ class SnapshotSchemaSpec extends SparkSpec {
     assert(empty.count() == 0L)
   }
 
-  test("job counts: a chain read builds with no job, a commit's sidecars take one scan") {
+  test("job counts: chain read build, commit sidecars, upsert tombstones") {
     import spark.implicits._
     val dir = freshDir("schema_jobs")
     val orders = (1L to 400L).map(k => (k, k * 1.25, s"c${k % 9}"))
@@ -132,18 +132,28 @@ class SnapshotSchemaSpec extends SparkSpec {
     assert(buildJobs == 0, s"building readAt over a 4-generation chain ran $buildJobs jobs")
     assert(chain.count() == 430L)
 
-    // a DOUBLE stats column defeats the footer path, so the stats and
-    // the bloom come from the scan: one aggregation (2 jobs under AQE)
-    // on top of what a sidecar-less commit of the same frame costs
+    // stats on a DOUBLE column and a bloom come from the data write
+    // itself: no job on top of what a sidecar-less commit costs
     val batch = orders.coalesce(1)
     val (_, plain) = jobsOf(SnapshotTable.commit(batch, freshDir("schema_plain_c")))
     val sdir = freshDir("schema_side_c")
     val (sv, withSidecars) = jobsOf(SnapshotTable.commit(batch, sdir,
       statsCols = Seq("k", "price"), bloomCols = Seq("k")))
-    assert(withSidecars - plain == 2,
+    assert(withSidecars == plain,
       s"sidecars took ${withSidecars - plain} jobs (plain commit $plain, " +
         s"with stats+bloom $withSidecars)")
     assert(SnapshotTable.readStats(sdir, sv).map(_.col).toSet === Set("k", "price"))
     assert(SnapshotTable.readBloom(sdir, sv).map(_._2) === Seq("k"))
+
+    // an upsert is an append plus its `_deletes` write, one job: the
+    // batch keys are written as they come, with no shuffle
+    val keys = (1L to 40L).map(k => (k, k * 2.5, "u")).toDF("k", "price", "c")
+    val (_, append) = jobsOf(SnapshotTable.commitAppend(keys, dir,
+      expectedVersion = v4))
+    val (v6, upsert) = jobsOf(SnapshotTable.commitUpsert(keys, Seq("k"), dir,
+      expectedVersion = v4 + 1))
+    assert(upsert - append == 1,
+      s"the tombstone write took ${upsert - append} jobs (append $append, upsert $upsert)")
+    assert(SnapshotTable.readAt(spark, dir, v6).count() == 430L)
   }
 }
