@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * shares — Iceberg/Delta reduce to this plus metadata):
   * {{{
   *   <dir>/v1/ ... v2/ ...   immutable parquet snapshot directories
-  *   <dir>/v2/_stats.tsv     optional per-file column min/max sidecar
-  *   <dir>/v2/_bloom.tsv     optional per-file column bloom sidecar
+  *   <dir>/v2/_manifest/     optional per-file column min/max table
+  *   <dir>/v2/_bloomtab/     optional per-file column bloom table
   *   <dir>/v3/_base          merge-on-read DELETE commit: no data files,
   *   <dir>/v3/_deletes/      a base-version pointer plus tombstone keys
   *   <dir>/current           pointer file, contents "v<N>"
@@ -62,7 +62,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    the join broadcasts); a later [[transact]] that rewrites the
   *    table materializes them away (compaction).
   *  - '''File skipping''': [[commit]] with `statsCols` writes a
-  *    per-file column min/max/nullCount sidecar (`_stats.tsv`,
+  *    per-file column min/max/nullCount table (`_manifest/`,
   *    underscore-prefixed so data readers never see it — the Delta
   *    add-file-stats / Iceberg manifest-metrics pattern), and
   *    [[readWhere]] prunes files whose [min,max] cannot satisfy a
@@ -156,14 +156,14 @@ object SnapshotTable {
     * the spine.
     *
     * `statsCols` (optional) gathers per-file min/max/nullCount for the
-    * named columns into the version's `_stats.tsv` sidecar — the
+    * named columns into the version's `_manifest/` table — the
     * file-skipping manifest [[readWhere]] prunes with. The stats, like
     * the `bloomCols` filters, are gathered by the data write itself
     * ([[SidecarParquetFormat]]: each file's writer keeps them while it
     * writes, as Delta's and Iceberg's writers keep their file metrics),
     * so they cost no scan and no Spark job of their own; a hive
     * partition column takes its per-file value from the partition
-    * directory. The sidecar is one line per (file, column): driver-
+    * directory. The table is one row per (file, column): driver-
     * bounded the way a Delta log / Iceberg manifest is.
     */
   def commit(df: DataFrame, dir: String,
@@ -1357,13 +1357,13 @@ object SnapshotTable {
 
   // ------------------------------------------- per-file stats / skipping
 
-  /** One (file, column) stats line from a version's `_stats.tsv`:
+  /** One (file, column) stats row of a version's `_manifest/`:
     * everything [[readWhere]] needs to decide whether a file can
-    * contain a row matching a range predicate. `min`/`max` are None
-    * for an all-null file. Values are kept in their exact string form
-    * and compared under `typ` ("long" | "double" | "decimal" |
-    * "string"; dates ride as ISO strings, whose lexicographic order is
-    * chronological).
+    * contain a row matching a range or null predicate. `min`/`max` are
+    * the strings `min(col).cast("string")` produces, None for an
+    * all-null file. Values are kept in that exact form and compared
+    * under `typ` ("long" | "double" | "decimal" | "string"; dates ride
+    * as ISO strings, whose lexicographic order is chronological).
     */
   final case class ColStats(file: String, rowCount: Long, col: String,
       typ: String, min: Option[String], max: Option[String], nulls: Long)
@@ -1380,6 +1380,14 @@ object SnapshotTable {
         s"statsCols: unsupported type ${other.simpleString} — supported: " +
           "integral, float/double, decimal, string, date")
     }
+  }
+
+  /** A numeric-tagged stat as the manifest's `min_num`/`max_num` double
+    * (metadata answering only; pruning compares exactly, [[cmpStat]]).
+    */
+  private def numStat(typ: String, v: Option[String]): Option[Double] = typ match {
+    case "long" | "double" | "decimal" => v.map(_.toDouble)
+    case _ => None
   }
 
   private def cmpStat(typ: String, a: String, b: String): Int = typ match {
@@ -1414,7 +1422,7 @@ object SnapshotTable {
   }
 
   /** Render the stats and bloom sidecars of a staged write from what its
-    * writers saw ([[SidecarParquetFormat.WrittenFile]]): one line per
+    * writers saw ([[SidecarParquetFormat.WrittenFile]]): one row per
     * (file, column) of every file with rows, min and max rendered by
     * the same `CAST(… AS STRING)` a `min(col).cast("string")` applies.
     * A hive partition column is not in the written rows: its per-file
@@ -1437,26 +1445,28 @@ object SnapshotTable {
     // a column the writers did not see is a hive partition column
     lazy val partValue = partitionValues(spark, staged)
     if (statsCols.nonEmpty)
-      writeStatsSidecar(conf, staged, for (f <- files; c <- statsCols) yield
-        f.stats.find(_.column == c) match {
-          case Some(r) =>
-            val dt = schema(c).dataType
-            FileColStats(f.file, f.rows, c, statsTag(dt), str(r.min, dt),
-              str(r.max, dt), r.nulls)
-          case None =>
-            val (v, dt) = partValue(f.file, c)
-            FileColStats(f.file, f.rows, c, statsTag(dt), str(v, dt), str(v, dt),
-              if (v == null) f.rows else 0L)
-        })
+      writeManifestParquet(conf, staged.resolve("_manifest"),
+        for (f <- files; c <- statsCols.sorted) yield
+          f.stats.find(_.column == c) match {
+            case Some(r) =>
+              val dt = schema(c).dataType
+              ColStats(f.file, f.rows, c, statsTag(dt), str(r.min, dt),
+                str(r.max, dt), r.nulls)
+            case None =>
+              val (v, dt) = partValue(f.file, c)
+              ColStats(f.file, f.rows, c, statsTag(dt), str(v, dt), str(v, dt),
+                if (v == null) f.rows else 0L)
+          })
     if (bloomCols.nonEmpty)
-      writeBloomSidecar(conf, staged, for (f <- files; c <- bloomCols) yield
-        (f.file, c, f.blooms.find(_._1 == c).map(_._2).getOrElse {
-          val (v, dt) = partValue(f.file, c)
-          bloomTag(dt)
-          val bf = SidecarParquetFormat.newBloom(bloomExpectedItems)
-          str(v, dt).foreach(s => bf.putBinary(bloomKeyBytes(s)))
-          SidecarParquetFormat.bits(bf)
-        }))
+      writeBloomParquet(conf, staged.resolve("_bloomtab"),
+        for (f <- files; c <- bloomCols.sorted) yield
+          (f.file, c, f.blooms.find(_._1 == c).map(_._2).getOrElse {
+            val (v, dt) = partValue(f.file, c)
+            bloomTag(dt)
+            val bf = SidecarParquetFormat.newBloom(bloomExpectedItems)
+            str(v, dt).foreach(s => bf.putBinary(bloomKeyBytes(s)))
+            SidecarParquetFormat.bits(bf)
+          }))
   }
 
   /** A hive partition column's value in a staged data file, as
@@ -1480,52 +1490,18 @@ object SnapshotTable {
     }
   }
 
-  /** Persist per-file stats records as `_stats.tsv` inside the staged
-    * write (so the sidecar is covered by the same atomic claim-rename
-    * as the data).
-    */
-  private def writeStatsSidecar(conf: org.apache.hadoop.conf.Configuration,
-      staged: java.nio.file.Path, statsRows: Seq[FileColStats]): Unit = {
-    val rows = statsRows.sortBy(r => (r.file, r.column))
-    val enc = (s: String) =>
-      java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
-    val lines = rows.map { r =>
-      Seq(enc(r.file), r.rowCount.toString, enc(r.column), r.tag,
-        r.minStr.map(enc).getOrElse(""), r.maxStr.map(enc).getOrElse(""),
-        r.nullCount.toString).mkString("\t")
-    }
-    java.nio.file.Files.writeString(staged.resolve("_stats.tsv"),
-      lines.sorted.mkString("", "\n", "\n"))
-    // the same stats AS A TABLE (`_manifest/`, parquet, covered by the
-    // atomic claim-rename like everything else in the staging dir): the
-    // metadata tree every real format keeps queryable (Iceberg's
-    // table.files, Delta's log). At 10^5 files a pruning decision is a
-    // DataFrame filter over this, not a driver readAllLines loop; the
-    // TSV stays as the human-readable compatibility sidecar. The rows
-    // are already ON the driver (file-count-bounded), so the tiny
-    // parquet is written directly — a Spark job per commit just to
-    // persist a handful of metadata rows was pure scheduler overhead.
-    writeManifestParquet(conf, staged.resolve("_manifest"), rows)
-  }
-
-  /** One per-(file, column) stats record — the unit both sidecar forms
-    * (`_stats.tsv`, `_manifest/`) are rendered from. `minStr`/`maxStr`
-    * are the strings `min(col).cast("string")` produces, None for an
-    * all-null file.
-    */
-  private final case class FileColStats(file: String, rowCount: Long,
-      column: String, tag: String, minStr: Option[String],
-      maxStr: Option[String], nullCount: Long)
-
-  /** Write the `_manifest/` parquet from driver-resident stats rows —
-    * no Spark job; the schema (names, physical types, nullability)
-    * matches what the old `toDF(...).write.parquet` produced, so every
-    * existing reader (manifest(), chainStats, the DSv2 relation) sees
-    * identical bytes-on-read.
+  /** Write a staged version's stats as the `_manifest/` parquet table,
+    * covered by the same atomic claim-rename as the data: the metadata
+    * tree every real format keeps queryable (Iceberg's `table.files`,
+    * Delta's log), and the only stats store. `rows` come in (file,
+    * column) order. The rows are already on the driver (file-count-
+    * bounded), so the tiny parquet is written directly, with no Spark
+    * job; the schema (names, physical types, nullability) is what a
+    * `toDF(...).write.parquet` of the same rows produces.
     */
   private def writeManifestParquet(
       conf: org.apache.hadoop.conf.Configuration,
-      dest: java.nio.file.Path, rows: Seq[FileColStats]): Unit = {
+      dest: java.nio.file.Path, rows: Seq[ColStats]): Unit = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val schema = Types.buildMessage()
@@ -1539,22 +1515,18 @@ object SnapshotTable {
       .optional(DOUBLE).named("max_num")
       .required(INT64).named("null_count")
       .named("spark_schema")
-    val num = (tag: String, v: Option[String]) => tag match {
-      case "long" | "double" | "decimal" => v.map(_.toDouble)
-      case _ => None
-    }
     writeDriverParquet(conf, dest, schema) { (factory, write) =>
       rows.foreach { r =>
         val g = factory.newGroup()
         g.add("file", r.file)
         g.add("row_count", r.rowCount)
-        g.add("column", r.column)
-        g.add("col_type", r.tag)
-        r.minStr.foreach(v => g.add("min_str", v))
-        r.maxStr.foreach(v => g.add("max_str", v))
-        num(r.tag, r.minStr).foreach(v => g.add("min_num", v))
-        num(r.tag, r.maxStr).foreach(v => g.add("max_num", v))
-        g.add("null_count", r.nullCount)
+        g.add("column", r.col)
+        g.add("col_type", r.typ)
+        r.min.foreach(v => g.add("min_str", v))
+        r.max.foreach(v => g.add("max_str", v))
+        numStat(r.typ, r.min).foreach(v => g.add("min_num", v))
+        numStat(r.typ, r.max).foreach(v => g.add("max_num", v))
+        g.add("null_count", r.nulls)
         write(g)
       }
     }
@@ -1592,24 +1564,53 @@ object SnapshotTable {
     finally writer.close()
   }
 
-  /** Parse a version's `_stats.tsv` (empty when the commit didn't ask
+  /** The Hadoop configuration the driver-side metadata reads use: the
+    * tables are local files written by [[writeDriverParquet]], so no
+    * session setting applies to them.
+    */
+  private lazy val metaConf = new org.apache.hadoop.conf.Configuration()
+
+  /** Read a metadata table written by [[writeDriverParquet]] back on the
+    * driver, row by row through parquet-hadoop's example `Group` reader
+    * (its mirror): no Spark job. `f` maps each row as it streams by, so
+    * a caller that keeps a small answer per row never holds more than
+    * one row. Empty when the table does not exist.
+    */
+  private def readDriverParquet[A](dest: java.nio.file.Path)(
+      f: org.apache.parquet.example.data.Group => A): Seq[A] =
+    visibleFiles(dest).flatMap { part =>
+      val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+          new org.apache.parquet.hadoop.example.GroupReadSupport,
+          new org.apache.hadoop.fs.Path(part.toUri))
+        .withConf(metaConf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map(f).toList
+      finally reader.close()
+    }
+
+  /** A version's per-file stats, read from its `_manifest/` table on the
+    * driver, in (file, column) order (empty when the commit didn't ask
     * for stats).
     */
-  def readStats(dir: String, version: Long): Seq[ColStats] = {
-    val p = java.nio.file.Paths.get(dir, s"v$version", "_stats.tsv")
-    if (!java.nio.file.Files.exists(p)) Seq.empty
-    else {
-      val dec = (s: String) =>
-        java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-      java.nio.file.Files.readAllLines(p).toArray(Array.empty[String])
-        .toSeq.filter(_.nonEmpty).map { line =>
-          val f = line.split("\t", -1)
-          require(f.length == 7, s"corrupt _stats.tsv line in $p: '$line'")
-          ColStats(dec(f(0)), f(1).toLong, dec(f(2)), f(3),
-            Option(f(4)).filter(_.nonEmpty).map(dec),
-            Option(f(5)).filter(_.nonEmpty).map(dec), f(6).toLong)
-        }
+  def readStats(dir: String, version: Long): Seq[ColStats] =
+    readDriverParquet(java.nio.file.Paths.get(dir, s"v$version", "_manifest")) { g =>
+      val opt = (name: String) =>
+        if (g.getFieldRepetitionCount(name) == 0) None else Some(g.getString(name, 0))
+      ColStats(g.getString("file", 0), g.getLong("row_count", 0),
+        g.getString("column", 0), g.getString("col_type", 0), opt("min_str"),
+        opt("max_str"), g.getLong("null_count", 0))
     }
+
+  /** One `_manifest_chain/fold.tsv` stats line body (the fold prefixes
+    * the generation): file, row count, column, type tag, min, max and
+    * null count, tab-separated, names and bounds URL-encoded, an
+    * absent bound empty.
+    */
+  private def statsLine(s: ColStats): String = {
+    val enc = (x: String) =>
+      java.net.URLEncoder.encode(x, java.nio.charset.StandardCharsets.UTF_8)
+    Seq(enc(s.file), s.rowCount.toString, enc(s.col), s.typ,
+      s.min.map(enc).getOrElse(""), s.max.map(enc).getOrElse(""),
+      s.nulls.toString).mkString("\t")
   }
 
   // --------------------------------------- per-file bloom / point skip
@@ -1658,75 +1659,63 @@ object SnapshotTable {
     }
   }
 
-  /** Persist per-file bloom filters, (file, column, serialized bits), as
-    * `_bloom.tsv` (file TAB column TAB base64 bits, covered by the same
-    * atomic claim-rename as the data): one line per (file, column), the
-    * same driver-bounded manifest scale as `_stats.tsv`.
+  /** Write a staged version's per-file bloom filters, (file, column,
+    * serialized bits) in (file, column) order, as the `_bloomtab/`
+    * parquet table, covered by the same atomic claim-rename as the
+    * data: one row per (file, column), the same driver-bounded scale
+    * as `_manifest/`, written directly for the same no-Spark-job
+    * reason.
     */
-  private def writeBloomSidecar(conf: org.apache.hadoop.conf.Configuration,
-      staged: java.nio.file.Path, blooms: Seq[(String, String, Array[Byte])]): Unit = {
-    val rows = blooms.sortBy(r => (r._1, r._2))
-    val enc = (s: String) =>
-      java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
-    val b64 = java.util.Base64.getEncoder
-    val lines = rows.map { case (file, c, bits) =>
-      Seq(enc(file), enc(c), b64.encodeToString(bits)).mkString("\t")
-    }
-    java.nio.file.Files.writeString(staged.resolve("_bloom.tsv"),
-      lines.sorted.mkString("", "\n", "\n"))
-    // the same filters AS A TABLE (`_bloomtab/`, parquet, covered by
-    // the atomic claim-rename): at 10^5 files × ~150 KB of bits each,
-    // a driver-side TSV parse of every filter is gigabytes of heap —
-    // the probe must DISTRIBUTE (each task deserializes its rows'
-    // filters, tests the keys, emits survivors only), which
-    // [[pruneFilesBloom]]'s spark overload does. The TSV stays as the
-    // human-readable compatibility sidecar. The rows are already ON
-    // the driver, so the tiny parquet is written directly (same
-    // no-Spark-job reasoning as the `_manifest` write).
-    val btSchema = {
-      import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      Types.buildMessage()
-        .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("file")
-        .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("column")
-        .optional(BINARY).named("bits")
-        .named("spark_schema")
-    }
-    writeDriverParquet(conf, staged.resolve("_bloomtab"), btSchema) {
-      (factory, write) =>
-        rows.foreach { case (file, c, bits) =>
-          val g = factory.newGroup()
-          g.add("file", file)
-          g.add("column", c)
-          g.add("bits", org.apache.parquet.io.api.Binary.fromConstantByteArray(bits))
-          write(g)
-        }
+  private def writeBloomParquet(conf: org.apache.hadoop.conf.Configuration,
+      dest: java.nio.file.Path, rows: Seq[(String, String, Array[Byte])]): Unit = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val schema = Types.buildMessage()
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("file")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("column")
+      .optional(BINARY).named("bits")
+      .named("spark_schema")
+    writeDriverParquet(conf, dest, schema) { (factory, write) =>
+      rows.foreach { case (file, c, bits) =>
+        val g = factory.newGroup()
+        g.add("file", file)
+        g.add("column", c)
+        g.add("bits", org.apache.parquet.io.api.Binary.fromConstantByteArray(bits))
+        write(g)
+      }
     }
   }
 
-  /** Parse a version's `_bloom.tsv` into (file, column, filter) rows
-    * (empty when the commit didn't ask for blooms).
+  /** Whether `version` carries a bloom sidecar (`_bloomtab/`, written
+    * by every commit given `bloomCols`).
+    */
+  def hasBloom(dir: String, version: Long): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"v$version", "_bloomtab"))
+
+  /** Stream a version's `_bloomtab/` rows on the driver: `f` gets each
+    * (file, column, filter) whose column `column` admits (every column
+    * when None), and only those rows' filters are deserialized, so a
+    * probe holds one filter at a time.
+    */
+  private def foldBlooms[A](dir: String, version: Long, column: Option[String])(
+      f: (String, String, org.apache.spark.util.sketch.BloomFilter) => A): Seq[A] =
+    readDriverParquet(java.nio.file.Paths.get(dir, s"v$version", "_bloomtab")) { g =>
+      val c = g.getString("column", 0)
+      if (column.exists(_ != c)) None
+      else Some(f(g.getString("file", 0), c,
+        org.apache.spark.util.sketch.BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(g.getBinary("bits", 0).getBytes))))
+    }.flatten
+
+  /** A version's per-file bloom filters as (file, column, filter) rows
+    * in (file, column) order (empty when the commit didn't ask for
+    * blooms).
     */
   def readBloom(dir: String, version: Long):
-      Seq[(String, String, org.apache.spark.util.sketch.BloomFilter)] = {
-    val p = java.nio.file.Paths.get(dir, s"v$version", "_bloom.tsv")
-    if (!java.nio.file.Files.exists(p)) Seq.empty
-    else {
-      val dec = (s: String) =>
-        java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-      val b64 = java.util.Base64.getDecoder
-      java.nio.file.Files.readAllLines(p).toArray(Array.empty[String])
-        .toSeq.filter(_.nonEmpty).map { line =>
-          val f = line.split("\t", -1)
-          require(f.length == 3, s"corrupt _bloom.tsv line in $p: '$line'")
-          val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(b64.decode(f(2))))
-          (dec(f(0)), dec(f(1)), bf)
-        }
-    }
-  }
+      Seq[(String, String, org.apache.spark.util.sketch.BloomFilter)] =
+    foldBlooms(dir, version, None)((f, c, bf) => (f, c, bf))
 
-  /** The version's stats sidecar as a queryable MANIFEST DataFrame —
+  /** The version's stats table as a queryable MANIFEST DataFrame —
     * Iceberg's `table.files` / Delta's transaction-log stats, the
     * metadata side of the table surfaced to SQL: one row per (file,
     * column) with rowCount/min/max/nullCount. The point at 100 TB is
@@ -1736,13 +1725,10 @@ object SnapshotTable {
     * sidecar's own type tags, so `min(mins)` is numeric where the
     * column was numeric, not lexicographic.
     *
-    * Since r18 the manifest is itself a parquet TABLE committed inside
-    * the version directory (`_manifest/`, written by the same staging
-    * pass as `_stats.tsv` and covered by the same atomic rename), so a
-    * 10⁵-file version's manifest is a distributed scan and a pruning
-    * decision is a DataFrame filter — no driver loop anywhere on the
-    * metadata path. Versions committed before the table existed fall
-    * back to parsing the TSV into a local relation (same schema).
+    * The manifest is itself a parquet TABLE committed inside the
+    * version directory (`_manifest/`, written by the staging pass and
+    * covered by the same atomic rename), so a 10⁵-file version's
+    * manifest rolls up as a distributed scan.
     * Loud error on a stats-less version (a caller answering from
     * metadata must know when there is none), on a merge-on-read delete
     * commit (tombstones invalidate counts; compact first), and on an
@@ -1826,7 +1812,7 @@ object SnapshotTable {
     * (FAILFAST — corrupt lines are as loud as the stats parser), never
     * a driver line loop, decoded and typed in the plan. Spark's csv
     * reader maps empty fields to NULL, which is exactly the all-null-
-    * file min/max encoding the stats sidecar uses.
+    * file min/max encoding of [[statsLine]].
     */
   private def foldedManifest(spark: SparkSession,
       p: java.nio.file.Path): DataFrame = {
@@ -1860,22 +1846,14 @@ object SnapshotTable {
       col("generation"))
   }
 
-  /** Raw (still-encoded) `_stats.tsv` lines of a version. */
-  private def rawStatsLines(dir: String, version: Long): Seq[String] = {
-    val p = java.nio.file.Paths.get(dir, s"v$version", "_stats.tsv")
-    if (!java.nio.file.Files.exists(p)) Seq.empty
-    else java.nio.file.Files.readAllLines(p).toArray(Array.empty[String])
-      .toSeq.filter(_.nonEmpty)
-  }
-
   /** Fold the base chain's manifest into the staged directory as
     * `_manifest_chain.tsv` — the manifest-list compaction every real
     * format performs (Iceberg's manifest list, Delta's checkpoint):
     * each append carries a snapshot of its ANCESTORS' (file, column)
     * stats with their generation ids, so [[manifestChain]] is O(1)
     * scans at any chain depth. The fold is COMPOSED, not recomputed:
-    * the base's fold lines plus the base's own stats lines stamped
-    * with its generation — pure driver file I/O on file-count-bounded
+    * the base's fold lines plus the base's own stats rows, rendered as
+    * lines ([[statsLine]]) and stamped with its generation — pure driver file I/O on file-count-bounded
     * metadata, ZERO Spark jobs per commit (the first fold cut ~0.6 s
     * of read-fold-write jobs from every append). Skipped (the read
     * side's recursive walk remains the correct, slower path) when the
@@ -1934,7 +1912,7 @@ object SnapshotTable {
   private def foldLines(dir: String, version: Long): Option[Seq[String]] = {
     if (baseOf(dir, version).isDefined) None
     else {
-      val ownStats = rawStatsLines(dir, version)
+      val ownStats = readStats(dir, version).map(statsLine).sorted
       if (ownStats.isEmpty) None // stats-less generation: no manifest
       else {
         val tombOpt =
@@ -1997,13 +1975,9 @@ object SnapshotTable {
     require(ownStats.nonEmpty,
       s"no per-file stats on $dir v$version — commit with statsCols to " +
         "enable metadata-only answering")
-    val num = (typ: String, v: Option[String]) => typ match {
-      case "long" | "double" | "decimal" => v.map(_.toDouble)
-      case _ => None
-    }
     val ownRows = ownStats.map { s =>
       (s.file, s.rowCount, s.col, s.typ, s.min, s.max,
-        num(s.typ, s.min), num(s.typ, s.max), s.nulls, version)
+        numStat(s.typ, s.min), numStat(s.typ, s.max), s.nulls, version)
     } ++ {
       if (!isUpsert(dir, version)) Nil
       else {
@@ -2019,7 +1993,7 @@ object SnapshotTable {
           val mn = if (parts(1).isEmpty) None else Some(dec(parts(1)))
           val mx = if (parts(2).isEmpty) None else Some(dec(parts(2)))
           (TombstoneFoldMarker, matched, c, parts(0), mn, mx,
-            num(parts(0), mn), num(parts(0), mx), nKeys, version)
+            numStat(parts(0), mn), numStat(parts(0), mx), nKeys, version)
         }
       }
     }
@@ -2086,23 +2060,24 @@ object SnapshotTable {
   private def manifestOwn(spark: SparkSession, dir: String,
       version: Long): DataFrame = {
     val mp = java.nio.file.Paths.get(dir, s"v$version", "_manifest")
-    if (java.nio.file.Files.exists(mp)) readParquet(spark, mp.toString)
-    else {
-      val stats = readStats(dir, version)
-      require(stats.nonEmpty,
-        s"no per-file stats on $dir v$version — commit with statsCols to " +
-          "enable metadata-only answering")
-      import spark.implicits._
-      stats.map { s =>
-        val num = (v: Option[String]) => s.typ match {
-          case "long" | "double" | "decimal" => v.map(_.toDouble)
-          case _ => None
-        }
-        (s.file, s.rowCount, s.col, s.typ, s.min, s.max,
-          num(s.min), num(s.max), s.nulls)
-      }.toDF("file", "row_count", "column", "col_type", "min_str", "max_str",
-        "min_num", "max_num", "null_count")
-    }
+    require(java.nio.file.Files.exists(mp),
+      s"no per-file stats on $dir v$version — commit with statsCols to " +
+        "enable metadata-only answering")
+    readParquet(spark, mp.toString)
+  }
+
+  /** The guard every one-generation skipping decision shares: `version`
+    * must be a data version whose files are all its own — a merge-on-
+    * read delete commit has no data files, and an append commit's own
+    * sidecars cover only its own generation.
+    */
+  private def requireDataVersion(fn: String, dir: String, version: Long): Unit = {
+    require(baseOf(dir, version).isEmpty,
+      s"$fn targets data versions; v$version of $dir is a " +
+        "merge-on-read delete commit — compact first or prune its base")
+    require(appendBaseOf(dir, version).isEmpty,
+      s"$fn covers one generation; v$version of $dir is an " +
+        "append commit — prune each generation against its own sidecar")
   }
 
   /** File-skipping decision for `column IN (keys)` on a bloom-carrying
@@ -2117,90 +2092,31 @@ object SnapshotTable {
     * depends on the filter, only I/O does. Keys are canonicalized
     * through the same string form the build side inserted. Absent or
     * column-less blooms are a LOUD error, same contract as
-    * [[pruneFiles]].
+    * [[pruneFiles]]. Decided on the driver over the `_bloomtab/` rows,
+    * one deserialized filter at a time: no Spark job.
+    * [[readWhereIn]]/[[readWhereMulti]] route through this.
     */
   def pruneFilesBloom(dir: String, version: Long, column: String,
       keys: Seq[Any]): (Seq[String], Int) = {
-    require(baseOf(dir, version).isEmpty,
-      s"pruneFilesBloom targets data versions; v$version of $dir is a " +
-        "merge-on-read delete commit — compact first or prune its base")
-    require(appendBaseOf(dir, version).isEmpty,
-      s"pruneFilesBloom covers one generation; v$version of $dir is an " +
-        "append commit — prune each generation against its own sidecar")
-    require(keys.nonEmpty, "pruneFilesBloom needs at least one key")
-    val blooms = readBloom(dir, version).filter(_._2 == column)
-    require(blooms.nonEmpty,
-      s"no per-file bloom for column '$column' on $dir v$version — " +
-        "commit with bloomCols to enable point-lookup file skipping")
+    requireDataVersion("pruneFilesBloom", dir, version)
+    bloomDecision(dir, version, column, keys)
+  }
+
+  /** The bloom probe, chain guards already applied by callers:
+    * (surviving file paths, file count), loud on no keys and when the
+    * column has no filters.
+    */
+  private def bloomDecision(dir: String, version: Long, column: String,
+      keys: Seq[Any]): (Seq[String], Int) = {
+    require(keys.nonEmpty, "a bloom probe needs at least one key")
     val keyBytes = keys.map(k => bloomKeyBytes(String.valueOf(k)))
-    val kept = blooms.collect {
-      case (file, _, bf) if keyBytes.exists(bf.mightContainBinary) => file
+    val decided = foldBlooms(dir, version, Some(column)) { (file, _, bf) =>
+      file -> keyBytes.exists(bf.mightContainBinary)
     }
-    (kept.map(f => s"$dir/v$version/$f"), blooms.size)
-  }
-
-  /** The DISTRIBUTED bloom probe — same decision as the driver-side
-    * overload, computed as a scan of the committed `_bloomtab` parquet
-    * table: each task deserializes only its rows' filters and tests
-    * the keys, so at 10⁵ files × ~150 KB of bits the probe never
-    * materializes gigabytes of filters on the driver (the collect is
-    * SURVIVORS-ONLY, the same driver-bounded file list every planner
-    * holds). Falls back to the TSV sidecar for versions committed
-    * before the table existed. [[readWhereIn]]/[[readWhereMulti]]
-    * route through this.
-    */
-  def pruneFilesBloom(spark: SparkSession, dir: String, version: Long,
-      column: String, keys: Seq[Any]): (Seq[String], Int) = {
-    require(baseOf(dir, version).isEmpty,
-      s"pruneFilesBloom targets data versions; v$version of $dir is a " +
-        "merge-on-read delete commit — compact first or prune its base")
-    require(appendBaseOf(dir, version).isEmpty,
-      s"pruneFilesBloom covers one generation; v$version of $dir is an " +
-        "append commit — prune each generation against its own sidecar " +
-        "(pruneFilesBloomOwn / readWhereInChain)")
-    require(keys.nonEmpty, "pruneFilesBloom needs at least one key")
-    pruneBloomUnguarded(spark, dir, version, column, keys)
-  }
-
-  /** The shared probe core, chain guards already applied by callers:
-    * distributed over the committed `_bloomtab` when present, the
-    * driver-side TSV parse for versions that predate it.
-    */
-  private def pruneBloomUnguarded(spark: SparkSession, dir: String,
-      version: Long, column: String, keys: Seq[Any]): (Seq[String], Int) = {
-    val bt = java.nio.file.Paths.get(dir, s"v$version", "_bloomtab")
-    if (!java.nio.file.Files.exists(bt)) {
-      val blooms = readBloom(dir, version).filter(_._2 == column)
-      require(blooms.nonEmpty,
-        s"no per-file bloom for column '$column' on $dir v$version — " +
-          "commit with bloomCols to enable point-lookup file skipping")
-      val keyBytes = keys.map(k => bloomKeyBytes(String.valueOf(k)))
-      val kept = blooms.collect {
-        case (file, _, bf) if keyBytes.exists(bf.mightContainBinary) => file
-      }
-      return (kept.map(f => s"$dir/v$version/$f"), blooms.size)
-    }
-    import spark.implicits._
-    val tab = readParquet(spark, bt.toString)
-      .filter(col("column") === column)
-      .select(col("file"), col("bits")).as[(String, Array[Byte])]
-    val keyBytes = keys.map(k => bloomKeyBytes(String.valueOf(k))).toArray
-    val decided = tab.mapPartitions { it =>
-      it.map { case (file, bits) =>
-        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bits))
-        (file, keyBytes.exists(bf.mightContainBinary))
-      }
-    }
-    // one pass decides; total and survivors come back together (the
-    // frame is file-count-bounded metadata, and the survivors subset
-    // is what the planner needs on the driver anyway)
-    val rows = decided.collect()
-    require(rows.nonEmpty,
+    require(decided.nonEmpty,
       s"no per-file bloom for column '$column' on $dir v$version — " +
         "commit with bloomCols to enable point-lookup file skipping")
-    val kept = rows.collect { case (f, true) => f }.toSeq.sorted
-    (kept.map(f => s"$dir/v$version/$f"), rows.length)
+    (decided.collect { case (f, true) => s"$dir/v$version/$f" }, decided.size)
   }
 
   /** ONE GENERATION's own-file skipping decision for `column IN
@@ -2212,13 +2128,12 @@ object SnapshotTable {
     * data files and is refused loudly. Returns (surviving own file
     * paths, own file total).
     */
-  def pruneFilesBloomOwn(spark: SparkSession, dir: String, version: Long,
+  def pruneFilesBloomOwn(dir: String, version: Long,
       column: String, keys: Seq[Any]): (Seq[String], Int) = {
     require(baseOf(dir, version).isEmpty,
       s"pruneFilesBloomOwn: v$version of $dir is a merge-on-read delete " +
         "commit with no data files of its own")
-    require(keys.nonEmpty, "pruneFilesBloomOwn needs at least one key")
-    pruneBloomUnguarded(spark, dir, version, column, keys)
+    bloomDecision(dir, version, column, keys)
   }
 
   /** Bloom-pruned point-lookup read over an APPEND CHAIN: each
@@ -2244,7 +2159,7 @@ object SnapshotTable {
           "use readAt")
     }
     gens.map { g =>
-      val (files, _) = pruneFilesBloomOwn(spark, dir, g, column, keys)
+      val (files, _) = pruneFilesBloomOwn(dir, g, column, keys)
       readKept(spark, s"$dir/v$g", files)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
       .filter(col(column).isin(keys: _*))
@@ -2282,7 +2197,7 @@ object SnapshotTable {
       prunedInScan(spark, dir, b, column, keys)
         .join(dels, dels.columns.toSeq, "left_anti")
     case None =>
-      val (files, _) = pruneFilesBloom(spark, dir, version, column, keys)
+      val (files, _) = pruneFilesBloom(dir, version, column, keys)
       readKept(spark, s"$dir/v$version", files)
   }
 
@@ -2365,33 +2280,40 @@ object SnapshotTable {
   /** File-skipping decision for `column BETWEEN lo AND hi` on a stats-
     * carrying version: returns (surviving file paths, total file
     * count). A file survives iff its [min,max] interval overlaps
-    * [lo,hi]; an all-null file (no min/max) cannot match a range
-    * predicate and is pruned. Absent or column-less stats are a LOUD
-    * error, not a silent full scan — a caller relying on skipping must
-    * know when the manifest it priced its query on is missing.
+    * [lo,hi] ([[overlaps]]); an all-null file (no min/max) cannot match
+    * a range predicate and is pruned. Absent or column-less stats are a
+    * LOUD error, not a silent full scan — a caller relying on skipping
+    * must know when the manifest it priced its query on is missing.
     */
   def pruneFiles(dir: String, version: Long, column: String,
       lo: Any, hi: Any): (Seq[String], Int) = {
-    require(baseOf(dir, version).isEmpty,
-      s"pruneFiles targets data versions; v$version of $dir is a " +
-        "merge-on-read delete commit — compact first or prune its base")
-    require(appendBaseOf(dir, version).isEmpty,
-      s"pruneFiles covers one generation; v$version of $dir is an " +
-        "append commit — prune each generation against its own sidecar")
-    val stats = readStats(dir, version).filter(_.col == column)
-    require(stats.nonEmpty,
+    requireDataVersion("pruneFiles", dir, version)
+    statsDecision(readStats(dir, version), dir, version, column)(overlaps(_, lo, hi))
+  }
+
+  /** Whether a file's [min,max] for a column overlaps [lo,hi], compared
+    * exactly under the column's type tag ([[cmpStat]]: longs and
+    * decimals past 2^53 stay exact); an all-null file cannot.
+    */
+  private def overlaps(st: ColStats, lo: Any, hi: Any): Boolean =
+    (st.min, st.max) match {
+      case (Some(mn), Some(mx)) =>
+        cmpStat(st.typ, mn, String.valueOf(hi)) <= 0 &&
+          cmpStat(st.typ, mx, String.valueOf(lo)) >= 0
+      case _ => false // all-null file: no row can satisfy a range
+    }
+
+  /** One stats term's decision: the files whose stats for `column`
+    * pass `keep`, as (surviving file paths, file count); loud when the
+    * column carries no stats.
+    */
+  private def statsDecision(stats: Seq[ColStats], dir: String, version: Long,
+      column: String)(keep: ColStats => Boolean): (Seq[String], Int) = {
+    val own = stats.filter(_.col == column)
+    require(own.nonEmpty,
       s"no per-file stats for column '$column' on $dir v$version — " +
         "commit with statsCols to enable file skipping")
-    val loS = String.valueOf(lo)
-    val hiS = String.valueOf(hi)
-    val kept = stats.filter { st =>
-      (st.min, st.max) match {
-        case (Some(mn), Some(mx)) =>
-          cmpStat(st.typ, mn, hiS) <= 0 && cmpStat(st.typ, mx, loS) >= 0
-        case _ => false // all-null file: no row can satisfy a range
-      }
-    }
-    (kept.map(st => s"$dir/v$version/${st.file}"), stats.size)
+    (own.filter(keep).map(st => s"$dir/v$version/${st.file}"), own.size)
   }
 
   /** Stats-pruned range read: `readAt(version).filter(column between
@@ -2424,8 +2346,8 @@ object SnapshotTable {
     */
   sealed trait PrunePredicate { def column: String }
 
-  /** `column BETWEEN lo AND hi` — decided against the stats manifest
-    * (per-file min/max overlap).
+  /** `column BETWEEN lo AND hi` — decided against the per-file stats
+    * (min/max overlap).
     */
   final case class RangePredicate(column: String, lo: Any, hi: Any)
       extends PrunePredicate
@@ -2436,104 +2358,45 @@ object SnapshotTable {
   final case class InPredicate(column: String, keys: Seq[Any])
       extends PrunePredicate
 
-  /** `column IS NULL` / `IS NOT NULL` — decided against the stats
-    * manifest's per-file null counts: a file with zero nulls cannot
-    * satisfy IS NULL, an all-null file cannot satisfy IS NOT NULL.
+  /** `column IS NULL` / `IS NOT NULL` — decided against the per-file
+    * stats' null counts: a file with zero nulls cannot satisfy IS
+    * NULL, an all-null file cannot satisfy IS NOT NULL.
     * The null-count side of the Delta/Iceberg stats record, which
     * range and bloom terms can't use (neither sidecar sees nulls).
     */
   final case class NullPredicate(column: String, isNull: Boolean)
       extends PrunePredicate
 
-  /** Survivors of one range term, decided as a DataFrame FILTER over
-    * the [[manifest]] table (not a driver parse loop — at 10⁵ files
-    * the decision distributes; the collect is survivors-only, the same
-    * driver-bounded file list every format's planner holds). A file
-    * survives iff its [min,max] overlaps [lo,hi], compared numerically
-    * for numeric-tagged columns and lexicographically for
-    * string/date-tagged ones; an all-null file (null min/max) prunes.
-    * Loud error when the column carries no stats rows.
-    */
-  private def rangeSurvivors(m: DataFrame, dir: String, version: Long,
-      p: RangePredicate): Set[String] = {
-    val loS = String.valueOf(p.lo)
-    val hiS = String.valueOf(p.hi)
-    val numericBounds =
-      scala.util.Try { loS.toDouble; hiS.toDouble }.isSuccess
-    val strCond = col("min_str") <= lit(hiS) && col("max_str") >= lit(loS)
-    val cond =
-      if (numericBounds)
-        org.apache.spark.sql.functions.when(
-          col("col_type").isin("long", "double", "decimal"),
-          col("min_num") <= lit(hiS.toDouble) &&
-            col("max_num") >= lit(loS.toDouble))
-          .otherwise(strCond)
-      else strCond
-    val rows = m.filter(col("column") === p.column)
-      .select(col("file"),
-        org.apache.spark.sql.functions.coalesce(cond, lit(false)).as("keep"))
-      .collect()
-    require(rows.nonEmpty,
-      s"no per-file stats for column '${p.column}' on $dir v$version — " +
-        "commit with statsCols to enable file skipping")
-    rows.filter(_.getBoolean(1)).map(_.getString(0)).toSet
-  }
-
-  /** Survivors of one null term, decided over the [[manifest]] table
-    * like [[rangeSurvivors]]: IS NULL keeps files whose null count is
-    * positive, IS NOT NULL keeps files with at least one non-null row.
-    * Loud when the column carries no stats rows, same contract.
-    */
-  private def nullSurvivors(m: DataFrame, dir: String, version: Long,
-      p: NullPredicate): Set[String] = {
-    val cond =
-      if (p.isNull) col("null_count") > 0
-      else col("null_count") < col("row_count")
-    val rows = m.filter(col("column") === p.column)
-      .select(col("file"),
-        org.apache.spark.sql.functions.coalesce(cond, lit(false)).as("keep"))
-      .collect()
-    require(rows.nonEmpty,
-      s"no per-file stats for column '${p.column}' on $dir v$version — " +
-        "commit with statsCols to enable file skipping")
-    rows.filter(_.getBoolean(1)).map(_.getString(0)).toSet
-  }
-
   /** File-skipping decision for a CONJUNCTION of predicates — the shape
     * real queries have (`WHERE k BETWEEN … AND bucket IN (…)`): each
-    * term's survivor set comes from its own sidecar (ranges from the
-    * stats manifest, INs from the bloom), and the sets INTERSECT, so
-    * the conjunction prunes at least as hard as its strongest term and
-    * usually strictly harder — on a 2-D-clustered 100 TB layout that is
-    * the difference between "one stripe" and "one cell". Same contract
-    * as the single-term prunes: a term whose sidecar is missing is a
-    * LOUD error, never a silent no-op (a silently skipped term would
-    * still be correct here — survivors only shrink — but a caller who
-    * priced the query on that term's skipping must know).
+    * term's survivor set comes from its own sidecar (ranges and null
+    * tests from the stats, INs from the bloom — the same decisions
+    * [[pruneFiles]] and [[pruneFilesBloom]] make), and the sets
+    * INTERSECT, so the conjunction prunes at least as hard as its
+    * strongest term and usually strictly harder — on a 2-D-clustered
+    * 100 TB layout that is the difference between "one stripe" and
+    * "one cell". Same contract as the single-term prunes: a term whose
+    * sidecar is missing is a LOUD error, never a silent no-op (a
+    * silently skipped term would still be correct here — survivors
+    * only shrink — but a caller who priced the query on that term's
+    * skipping must know). Decided on the driver: no Spark job.
     */
-  def pruneFilesMulti(spark: SparkSession, dir: String, version: Long,
+  def pruneFilesMulti(dir: String, version: Long,
       preds: Seq[PrunePredicate]): (Seq[String], Int) = {
     require(preds.nonEmpty, "pruneFilesMulti needs at least one predicate")
-    require(baseOf(dir, version).isEmpty,
-      s"pruneFilesMulti targets data versions; v$version of $dir is a " +
-        "merge-on-read delete commit — compact first or prune its base")
-    require(appendBaseOf(dir, version).isEmpty,
-      s"pruneFilesMulti covers one generation; v$version of $dir is an " +
-        "append commit — prune each generation against its own sidecar")
-    lazy val m = manifest(spark, dir, version)
-    val survivorSets: Seq[Set[String]] = preds.map {
-      case r: RangePredicate => rangeSurvivors(m, dir, version, r)
-      case i: InPredicate =>
-        val (kept, _) = pruneFilesBloom(spark, dir, version, i.column, i.keys)
-        kept.map(_.stripPrefix(s"$dir/v$version/")).toSet
-      case n: NullPredicate => nullSurvivors(m, dir, version, n)
+    requireDataVersion("pruneFilesMulti", dir, version)
+    lazy val stats = readStats(dir, version)
+    // every term's sidecar has one row per file, so each term counts
+    // the same total
+    val decided = preds.map {
+      case RangePredicate(c, lo, hi) =>
+        statsDecision(stats, dir, version, c)(overlaps(_, lo, hi))
+      case InPredicate(c, keys) => bloomDecision(dir, version, c, keys)
+      case NullPredicate(c, isNull) =>
+        statsDecision(stats, dir, version, c)(st =>
+          if (isNull) st.nulls > 0 else st.nulls < st.rowCount)
     }
-    val allFiles: Set[String] = {
-      val s = readStats(dir, version).map(_.file).toSet
-      if (s.nonEmpty) s else readBloom(dir, version).map(_._1).toSet
-    }
-    val kept = survivorSets.reduce(_ intersect _)
-    (kept.toSeq.sorted.map(f => s"$dir/v$version/$f"), allFiles.size)
+    (decided.map(_._1.toSet).reduce(_ intersect _).toSeq.sorted, decided.head._2)
   }
 
   /** Conjunction-pruned read: `readAt(version).filter(AND(preds))` that
@@ -2551,7 +2414,7 @@ object SnapshotTable {
       readWhereMulti(spark, dir, b, preds)
         .join(dels, dels.columns.toSeq, "left_anti")
     case None =>
-      val (files, _) = pruneFilesMulti(spark, dir, version, preds)
+      val (files, _) = pruneFilesMulti(dir, version, preds)
       readKept(spark, s"$dir/v$version", files).filter(preds.map {
         case RangePredicate(c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi)
         case InPredicate(c, keys) => col(c).isin(keys: _*)

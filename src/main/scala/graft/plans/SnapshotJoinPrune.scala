@@ -53,8 +53,8 @@ object SnapshotJoinPrune {
     * claim-rename, so a decision is valid forever — and the rule runs
     * inside fixed-point optimizer batches session-wide (injected by
     * [[GraftExtensions]]), where an unprunable join would otherwise
-    * re-execute the filesystem probe, the nested bloom-scan Spark job,
-    * and the near-miss warning on EVERY iteration of every batch (and
+    * re-execute the sidecar check, the bloom probe over every file's
+    * filter, and the near-miss warning on EVERY iteration of every batch (and
     * on every `df.explain()`). Bounded: cleared wholesale past
     * [[DecisionCacheMax]] entries (decisions are cheap to recompute;
     * wholesale clear beats LRU bookkeeping on the planner hot path).
@@ -179,22 +179,12 @@ object SnapshotBloomJoinRule extends Rule[LogicalPlan] {
 
   /** The survivor-file decision for (dir, version, column, keys) —
     * computed at most once per distinct input (see
-    * [[SnapshotJoinPrune.decisionCache]]); the filesystem probe, the
-    * bloom-scan job, and the near-miss warnings all live inside the
-    * compute so repeat optimizer iterations over an unprunable join are
-    * a single map lookup.
+    * [[SnapshotJoinPrune.decisionCache]]); the sidecar check, the
+    * driver-side bloom probe, and the near-miss warnings all live inside
+    * the compute so repeat optimizer iterations over an unprunable join
+    * are a single map lookup.
     */
-  /** Whether the version carries a bloom sidecar at all — the cheap
-    * fact-side precondition checked before anything expensive (in the
-    * DPP-style path, before the dim subquery ever runs).
-    */
-  private def hasBloomSidecar(dir: String, version: Long): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, s"v$version", "_bloomtab")) ||
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, s"v$version", "_bloom.tsv"))
-
-  private def decideFiles(spark: SparkSession, dir: String, version: Long,
+  private def decideFiles(dir: String, version: Long,
       column: String, keys: Seq[Any]): Option[Seq[String]] = {
     val cache = SnapshotJoinPrune.decisionCache
     if (cache.size > SnapshotJoinPrune.DecisionCacheMax) cache.clear()
@@ -202,13 +192,13 @@ object SnapshotBloomJoinRule extends Rule[LogicalPlan] {
       SnapshotJoinPrune.versionIdentity(dir, version), column, keys), { _ =>
       // bail (plan unchanged) unless the version really carries a bloom
       // for the join column — the rewrite is optional, the query is not
-      if (!hasBloomSidecar(dir, version)) {
+      if (!SnapshotTable.hasBloom(dir, version)) {
         logWarning(s"snapshot join prune: no bloom sidecar on $dir " +
           s"v$version — plain join kept (commit with bloomCols to enable)")
         None
       } else try {
         val (files, total) = SnapshotTable.pruneFilesBloom(
-          spark, dir, version, column, keys)
+          dir, version, column, keys)
         if (files.size >= total) None // nothing to prune; keep the plan
         else Some(files)
       } catch {
@@ -223,7 +213,7 @@ object SnapshotBloomJoinRule extends Rule[LogicalPlan] {
 
   private def prune(lr: LogicalRelation, fs: HadoopFsRelation, dir: String,
       version: Long, column: String, keys: Seq[Any]): Option[LogicalRelation] =
-    decideFiles(fs.sparkSession, dir, version, column, keys).map { files =>
+    decideFiles(dir, version, column, keys).map { files =>
       val pruned = new InMemoryFileIndex(fs.sparkSession,
         files.map(new Path(_)), Map.empty, Some(fs.dataSchema))
       SnapshotJoinPrune.rewriteCount.incrementAndGet()
@@ -301,7 +291,7 @@ object SnapshotBloomJoinRule extends Rule[LogicalPlan] {
         // never run for a join that could not be pruned anyway
         (lr, rebuild, fs, dir, version) <- snapshotScan(left, factAttr)
         keys <- localKeys(right, dimAttr).orElse {
-          if (hasBloomSidecar(dir, version)) dimScanKeys(right, dimAttr)
+          if (SnapshotTable.hasBloom(dir, version)) dimScanKeys(right, dimAttr)
           else None
         }
         if keys.nonEmpty && keys.size <= SnapshotJoinPrune.MaxDimKeys

@@ -375,7 +375,7 @@ object Analytic {
     val nDocs = meta("n_docs").toLong
     val avgdl = meta("sum_dl").toDouble / nDocs
     val (kept, total) =
-      SnapshotTable.pruneFilesBloom(s, idxBase, v1, "term", terms)
+      SnapshotTable.pruneFilesBloom(idxBase, v1, "term", terms)
     require(kept.nonEmpty && kept.size < total,
       s"the term bloom must prune strictly (kept ${kept.size} of $total " +
         "posting files) — the index layout regressed")
@@ -483,7 +483,7 @@ object Analytic {
     // (c) the query prunes strictly in BOTH generations
     val keptPerGen = SnapshotTable.chainOf(idxBase, v2).map { g =>
       val (kept, total) =
-        SnapshotTable.pruneFilesBloomOwn(s, idxBase, g, "term", terms)
+        SnapshotTable.pruneFilesBloomOwn(idxBase, g, "term", terms)
       require(kept.nonEmpty && kept.size < total,
         s"generation v$g must prune strictly for the query terms " +
           s"(kept ${kept.size} of $total posting files)")
@@ -632,7 +632,7 @@ object Analytic {
       "the folded chain's corpus scalars must equal the pre-fold totals")
     val keptPerGen = SnapshotTable.chainOf(idxBase, vOpt).map { g =>
       val (kept, total) =
-        SnapshotTable.pruneFilesBloomOwn(s, idxBase, g, "term", terms)
+        SnapshotTable.pruneFilesBloomOwn(idxBase, g, "term", terms)
       require(kept.nonEmpty && kept.size < total,
         s"post-fold generation v$g must prune strictly " +
           s"(kept ${kept.size} of $total posting files)")

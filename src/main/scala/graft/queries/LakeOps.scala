@@ -545,11 +545,11 @@ object LakeOps {
   /** METADATA-ONLY answering through the snapshot spine — the manifest
     * surfaced to SQL (Iceberg's `table.files`, Delta's log stats):
     * count(*), per-column min/max, and null counts fold over
-    * [[SnapshotTable.manifest]] — since r18 a parquet TABLE committed
-    * inside the version directory (`_manifest/`), so the metadata tree
-    * is itself a distributed scan: a 10⁵-file version's stats roll up
-    * as a DataFrame aggregation, not a driver readAllLines loop (the
-    * `_stats.tsv` stays as the compatibility sidecar). ZERO data files
+    * [[SnapshotTable.manifest]] — a parquet TABLE committed inside
+    * the version directory (`_manifest/`, the version's one stats
+    * store), so the metadata tree is itself a distributed scan: a
+    * 10⁵-file version's stats roll up as a DataFrame aggregation, not
+    * a driver loop. ZERO data files
     * open, which the gate proves with a loud require that every file
     * in the result plan's input list lives under `_manifest/`. This is
     * the 100 TB dashboard trick every real table format ships: a row
@@ -822,8 +822,8 @@ object LakeOps {
     * different dimension: the key-range term keeps ~one okey stripe
     * per parity half, the parity IN term (decided by the per-file
     * bloom) keeps one half — and their INTERSECTION
-    * ([[SnapshotTable.pruneFilesMulti]], range terms decided as a
-    * DataFrame filter over the committed `_manifest` table) keeps
+    * ([[SnapshotTable.pruneFilesMulti]], range terms decided by the
+    * same typed min/max test as `pruneFiles`) keeps
     * strictly fewer files than the BEST single term alone, which the
     * gate requires loudly. On a 100 TB table this is the difference
     * between reading a stripe and reading a cell. The answer columns
@@ -851,10 +851,10 @@ object LakeOps {
     val rangeTerm = RangePredicate("o_orderkey", 1L, hi)
     val inTerm = InPredicate("par", Seq(1L))
     val (rangeKept, total) =
-      SnapshotTable.pruneFilesMulti(s, base, v1, Seq(rangeTerm))
-    val (inKept, _) = SnapshotTable.pruneFilesMulti(s, base, v1, Seq(inTerm))
+      SnapshotTable.pruneFilesMulti(base, v1, Seq(rangeTerm))
+    val (inKept, _) = SnapshotTable.pruneFilesMulti(base, v1, Seq(inTerm))
     val (conjKept, _) =
-      SnapshotTable.pruneFilesMulti(s, base, v1, Seq(rangeTerm, inTerm))
+      SnapshotTable.pruneFilesMulti(base, v1, Seq(rangeTerm, inTerm))
     require(conjKept.nonEmpty && conjKept.size < rangeKept.size &&
       conjKept.size < inKept.size,
       s"the conjunction must out-prune its best single term: conj " +
@@ -2027,9 +2027,9 @@ object LakeOps {
     val isNull = NullPredicate("note", isNull = true)
     val notNull = NullPredicate("note", isNull = false)
     val (nullKept, total) =
-      SnapshotTable.pruneFilesMulti(s, base, v1, Seq(isNull))
+      SnapshotTable.pruneFilesMulti(base, v1, Seq(isNull))
     val (notNullKept, _) =
-      SnapshotTable.pruneFilesMulti(s, base, v1, Seq(notNull))
+      SnapshotTable.pruneFilesMulti(base, v1, Seq(notNull))
     require(nullKept.nonEmpty && nullKept.size < total &&
       notNullKept.nonEmpty && notNullKept.size < total,
       s"both polarities must prune strictly: IS NULL kept " +
@@ -2037,7 +2037,7 @@ object LakeOps {
     // the conjunction composes: IS NULL ∧ first key octile
     val hi = orders.agg(max($"o_orderkey")).head.getLong(0) / 8
     val conj = Seq(isNull, RangePredicate("o_orderkey", 1L, hi))
-    val (conjKept, _) = SnapshotTable.pruneFilesMulti(s, base, v1, conj)
+    val (conjKept, _) = SnapshotTable.pruneFilesMulti(base, v1, conj)
     require(conjKept.nonEmpty && conjKept.size < nullKept.size,
       s"the conjunction must out-prune IS NULL alone: ${conjKept.size} " +
         s"vs ${nullKept.size}")

@@ -7,11 +7,12 @@ import org.apache.spark.sql.types.MetadataBuilder
 import graft.ops.SnapshotTable
 
 /** Snapshot reads take their schema from a parquet footer on the
-  * driver instead of a Spark schema-inference job, and a commit builds
-  * its stats and bloom sidecars inside its data write. Pins (a) that the footer
-  * schema equals the inferred one exactly (names, types, nullability,
-  * metadata) on every directory shape the lake reads, and (b) the job
-  * counts those two changes buy.
+  * driver instead of a Spark schema-inference job, a commit builds its
+  * stats and bloom sidecars inside its data write, and file-skipping
+  * decisions read those sidecars on the driver. Pins (a) that the
+  * footer schema equals the inferred one exactly (names, types,
+  * nullability, metadata) on every directory shape the lake reads, and
+  * (b) the job counts those changes buy.
   */
 class SnapshotSchemaSpec extends SparkSpec {
 
@@ -155,5 +156,35 @@ class SnapshotSchemaSpec extends SparkSpec {
     assert(upsert - append == 1,
       s"the tombstone write took ${upsert - append} jobs (append $append, upsert $upsert)")
     assert(SnapshotTable.readAt(spark, dir, v6).count() == 430L)
+  }
+
+  test("job counts: pruning decisions run no job, readWhereIn is one scan job") {
+    import spark.implicits._
+    import SnapshotTable.{InPredicate, NullPredicate, RangePredicate}
+    val dir = freshDir("schema_prune_jobs")
+    val v = SnapshotTable.commit(
+      (1L to 400L).map(k => (k, if (k % 3 == 0) null else s"n$k")).toDF("k", "s")
+        .repartitionByRange(4, $"k"),
+      dir, statsCols = Seq("k", "s"), bloomCols = Seq("k"))
+    val keys = Seq(5L, 250L)
+    val ((bloomKept, total), bloomJobs) =
+      jobsOf(SnapshotTable.pruneFilesBloom(dir, v, "k", keys))
+    assert(bloomJobs == 0, s"the bloom probe ran $bloomJobs jobs")
+    assert(bloomKept.nonEmpty && bloomKept.size < total)
+    val ((inKept, _), inJobs) =
+      jobsOf(SnapshotTable.pruneFilesMulti(dir, v, Seq(InPredicate("k", keys))))
+    assert(inJobs == 0, s"an IN term ran $inJobs jobs")
+    assert(inKept == bloomKept.sorted)
+    val ((conjKept, _), conjJobs) = jobsOf(SnapshotTable.pruneFilesMulti(dir, v,
+      Seq(InPredicate("k", keys), RangePredicate("k", 1L, 300L),
+        NullPredicate("s", isNull = true))))
+    assert(conjJobs == 0, s"a range, IN and null conjunction ran $conjJobs jobs")
+    assert(conjKept.nonEmpty && conjKept.toSet.subsetOf(inKept.toSet))
+    // collected, not counted: a Dataset.count() is an aggregate, which
+    // adaptive execution runs as a shuffle-map job plus a result job
+    val (rows, readJobs) = jobsOf(
+      SnapshotTable.readWhereIn(spark, dir, v, "k", keys).collect())
+    assert(rows.map(_.getLong(0)).sorted.toSeq == keys)
+    assert(readJobs == 1, s"readWhereIn plus its collect ran $readJobs jobs")
   }
 }

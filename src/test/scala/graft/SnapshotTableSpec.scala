@@ -457,6 +457,17 @@ class SnapshotTableSpec extends SparkSpec {
     assert(got.select("name").as[String].collect().toSet == Set("alpha"))
   }
 
+  test("an empty-string min is a bound, not an all-null file") {
+    val dir = freshDir()
+    val v = SnapshotTable.commit(Seq(("", 1L), ("apple", 2L)).toDF("s", "id")
+      .coalesce(1), dir, statsCols = Seq("s"))
+    assert(SnapshotTable.readStats(dir, v).map(s => (s.min, s.max)) ==
+      Seq((Some(""), Some("apple"))))
+    // the file holds "apple": pruning it would drop a matching row
+    assert(SnapshotTable.readWhere(spark, dir, v, "s", "a", "b")
+      .select("id").as[Long].collect().toSeq == Seq(2L))
+  }
+
   test("per-file bloom skipping: readWhereIn opens only admitting files") {
     val dir = freshDir()
     // HASH-cluster by a different column so every file's k range spans
@@ -522,14 +533,6 @@ class SnapshotTableSpec extends SparkSpec {
     intercept[IllegalArgumentException] { SnapshotTable.manifest(spark, dir2, v2) }
     val vd = SnapshotTable.commitDeletes(Seq(1L).toDF("k"), dir, expectedVersion = v)
     intercept[IllegalArgumentException] { SnapshotTable.manifest(spark, dir, vd) }
-    // pre-_manifest versions (TSV only) fall back to the local relation
-    // with the same schema and rows
-    SnapshotTable.deleteTree(s"$dir/v$v/_manifest")
-    val legacy = SnapshotTable.manifest(spark, dir, v)
-    assert(legacy.inputFiles.isEmpty, "TSV fallback is a local relation")
-    assert(legacy.columns.toSeq == m.columns.toSeq)
-    assert(legacy.filter($"column" === "k")
-      .agg(sum($"row_count")).head().getLong(0) == 400)
   }
 
   test("commitAppend: delta-cost ingest, chain reads, CAS, loud guards") {
@@ -629,11 +632,11 @@ class SnapshotTableSpec extends SparkSpec {
       dir, expectedVersion = SnapshotTable.ExpectEmpty,
       statsCols = Seq("k", "par"), bloomCols = Seq("par"))
     import SnapshotTable.{InPredicate, RangePredicate}
-    val (rangeKept, total) = SnapshotTable.pruneFilesMulti(spark, dir, v,
+    val (rangeKept, total) = SnapshotTable.pruneFilesMulti(dir, v,
       Seq(RangePredicate("k", 1L, 50L)))
-    val (inKept, _) = SnapshotTable.pruneFilesMulti(spark, dir, v,
+    val (inKept, _) = SnapshotTable.pruneFilesMulti(dir, v,
       Seq(InPredicate("par", Seq(1L))))
-    val (conjKept, _) = SnapshotTable.pruneFilesMulti(spark, dir, v,
+    val (conjKept, _) = SnapshotTable.pruneFilesMulti(dir, v,
       Seq(RangePredicate("k", 1L, 50L), InPredicate("par", Seq(1L))))
     assert(conjKept.nonEmpty && conjKept.size < rangeKept.size &&
       conjKept.size < inKept.size,
@@ -647,11 +650,11 @@ class SnapshotTableSpec extends SparkSpec {
       (1 to 50).filter(_ % 2 == 1).map(_.toLong))
     // a term with no sidecar fails loudly, never a silent no-op
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFilesMulti(spark, dir, v,
+      SnapshotTable.pruneFilesMulti(dir, v,
         Seq(InPredicate("k", Seq(5L)))) // no bloom on k
     }
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFilesMulti(spark, dir, v,
+      SnapshotTable.pruneFilesMulti(dir, v,
         Seq(RangePredicate("nope", 1L, 2L)))
     }
     // string bounds compare lexicographically against string stats
@@ -663,6 +666,30 @@ class SnapshotTableSpec extends SparkSpec {
     val gotS = SnapshotTable.readWhereMulti(spark, dirS, vS,
       Seq(RangePredicate("name", "a", "c")))
     assert(gotS.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("pruneFilesMulti decides ranges exactly like pruneFiles past 2^53") {
+    import SnapshotTable.RangePredicate
+    // 2^53 + 1 rounds to 2^53 as a double: a compare of double bounds
+    // keeps the high file for a range ending at 2^53, the typed compare
+    // prunes it
+    val big = 1L << 53
+    for (typ <- Seq("bigint", "decimal(38,0)")) {
+      val dir = freshDir()
+      // one file per hive partition: {1..10} and {2^53+1..2^53+5}
+      val v = SnapshotTable.commit(
+        ((1L to 10L) ++ ((big + 1) to (big + 5))).toDF("k").coalesce(1)
+          .select($"k".cast(typ).as("k"), ($"k" > 10L).cast("int").as("hi")),
+        dir, partitionCols = Seq("hi"), statsCols = Seq("k"))
+      val single = SnapshotTable.pruneFiles(dir, v, "k", 0L, big)
+      assert(single._1.size == 1 && single._2 == 2,
+        s"$typ: pruneFiles kept ${single._1.size} of ${single._2}")
+      assert(SnapshotTable.pruneFilesMulti(dir, v,
+        Seq(RangePredicate("k", 0L, big))) == single,
+        s"$typ: the multi-term range decision differs from pruneFiles")
+      assert(SnapshotTable.readWhereMulti(spark, dir, v,
+        Seq(RangePredicate("k", 0L, big))).count() == 10L)
+    }
   }
 
   test("transact with layout params is OPTIMIZE: same rows, strict skipping") {
@@ -987,23 +1014,36 @@ class SnapshotTableSpec extends SparkSpec {
     }
   }
 
-  test("the distributed bloom probe matches the driver-side TSV decision") {
+  test("the bloom probe keeps exactly the files whose hand-built filter admits a key") {
     val dir = freshDir()
     val v = SnapshotTable.commit(
       spark.range(2000).toDF("k").repartitionByRange(8, $"k"),
-      dir, bloomCols = Seq("k"))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, s"v$v", "_bloomtab")),
-      "the bloom table must be committed beside the TSV sidecar")
-    val keys = Seq(5L, 900L, 1750L)
-    val (viaTsv, nTsv) = SnapshotTable.pruneFilesBloom(dir, v, "k", keys)
-    val (viaTab, nTab) = SnapshotTable.pruneFilesBloom(spark, dir, v, "k", keys)
-    assert(viaTab.sorted == viaTsv.sorted && nTab == nTsv,
-      "the distributed probe diverged from the TSV decision")
+      dir, bloomCols = Seq("k"), bloomExpectedItems = 300)
+    assert(SnapshotTable.hasBloom(dir, v) && !SnapshotTable.hasBloom(dir, v + 1))
+    val vdir = s"$dir/v$v"
+    // one filter per data file, built from the file's own rows with the
+    // commit's sizing and the probe's canonical bytes
+    val handBuilt = spark.read.parquet(vdir)
+      .select(input_file_name().as("f"), $"k").as[(String, Long)].collect()
+      .groupBy(_._1).map { case (f, rows) =>
+        val bf = org.apache.spark.util.sketch.BloomFilter.create(300, 0.01)
+        rows.foreach(r => bf.putBinary(
+          r._2.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        f.substring(f.indexOf(s"/v$v/") + s"/v$v/".length) -> bf
+      }
+    assert(handBuilt.size == 8)
+    val keys = Seq(5L, 900L, 1750L, 5000L)
+    val want = handBuilt.collect { case (f, bf) if keys.exists(k =>
+      bf.mightContainBinary(k.toString.getBytes(
+        java.nio.charset.StandardCharsets.UTF_8))) => s"$vdir/$f" }.toSeq.sorted
+    val (kept, total) = SnapshotTable.pruneFilesBloom(dir, v, "k", keys)
+    assert(kept == want && total == 8,
+      s"the probe kept ${kept.mkString(", ")} of $total, filters admit ${want.mkString(", ")}")
+    assert(kept.size < total)
     // and the read path routes through it with identical answers
     val got = SnapshotTable.readWhereIn(spark, dir, v, "k", keys)
-    assert(got.as[Long].collect().toSet == keys.toSet)
-    assert(got.inputFiles.length == viaTab.size)
+    assert(got.as[Long].collect().toSet == keys.filter(_ < 2000L).toSet)
+    assert(got.inputFiles.length == kept.size)
   }
 
   test("commit metadata rides the version dir; chainOf skips orphans") {
@@ -1085,9 +1125,9 @@ class SnapshotTableSpec extends SparkSpec {
       df.repartitionByRange(5, $"v".isNull, $"k"), dir,
       statsCols = Seq("k", "v"))
     import SnapshotTable.{NullPredicate, RangePredicate}
-    val (nullKept, total) = SnapshotTable.pruneFilesMulti(spark, dir, ver,
+    val (nullKept, total) = SnapshotTable.pruneFilesMulti(dir, ver,
       Seq(NullPredicate("v", isNull = true)))
-    val (notNullKept, _) = SnapshotTable.pruneFilesMulti(spark, dir, ver,
+    val (notNullKept, _) = SnapshotTable.pruneFilesMulti(dir, ver,
       Seq(NullPredicate("v", isNull = false)))
     assert(nullKept.nonEmpty && nullKept.size < total)
     assert(notNullKept.nonEmpty && notNullKept.size < total)
@@ -1100,7 +1140,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(conj.select("k").as[Long].collect().sorted.toSeq == (0L to 10L))
     // a stats-less column is loud, same as the range contract
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFilesMulti(spark, dir, ver,
+      SnapshotTable.pruneFilesMulti(dir, ver,
         Seq(NullPredicate("missing", isNull = true)))
     }
   }
@@ -1344,7 +1384,7 @@ class SnapshotTableSpec extends SparkSpec {
     // every generation contributed a pruned (not full) own-file list
     val perGen = SnapshotTable.chainOf(dir, tip).map { g =>
       val (kept, total) =
-        SnapshotTable.pruneFilesBloomOwn(spark, dir, g, "k", keys)
+        SnapshotTable.pruneFilesBloomOwn(dir, g, "k", keys)
       assert(kept.nonEmpty && kept.size < total,
         s"generation v$g did not prune (kept ${kept.size} of $total)")
       kept.size

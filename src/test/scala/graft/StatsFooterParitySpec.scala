@@ -18,7 +18,7 @@ class StatsFooterParitySpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory("sidecarparity")
       .resolve("t").toString
 
-  /** The `_stats.tsv` type tag of a column of type `dt`. */
+  /** The stats type tag of a column of type `dt`. */
   private def tag(dt: org.apache.spark.sql.types.DataType): String = {
     import org.apache.spark.sql.types._
     dt match {
@@ -51,7 +51,7 @@ class StatsFooterParitySpec extends SparkSpec {
       }
   }
 
-  /** Commit `df` with stats on `cols` and assert its `_stats.tsv`
+  /** Commit `df` with stats on `cols` and assert its `_manifest/`
     * records equal the scan reference's; returns (dir, version).
     */
   private def parity(df: DataFrame, cols: Seq[String],
@@ -161,24 +161,22 @@ class StatsFooterParitySpec extends SparkSpec {
       .select(input_file_name().as("f"), $"k".cast("string"), $"s", $"p".cast("string"))
       .collect().groupBy(r => r.getString(0).substring(
         r.getString(0).indexOf(s"/v$v/") + s"/v$v/".length))
-    val dec = (s: String) =>
-      java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(vdir, "_bloom.tsv")).toArray(Array.empty[String])
-      .toSeq.filter(_.nonEmpty).map(_.split("\t", -1))
+    val blooms = SnapshotTable.readBloom(dir, v)
     val cols = Seq("k", "s", "p")
-    assert(lines.map(l => dec(l(0))).distinct.toSet === perFile.keySet)
-    assert(lines.map(l => (dec(l(0)), dec(l(1)))).sorted ===
+    assert(blooms.map(_._1).distinct.toSet === perFile.keySet)
+    assert(blooms.map(b => (b._1, b._2)) ===
       perFile.keySet.toSeq.flatMap(f => cols.map(c => (f, c))).sorted)
-    for (l <- lines) {
-      val (file, c) = (dec(l(0)), dec(l(1)))
+    val bits = (bf: org.apache.spark.util.sketch.BloomFilter) => {
+      val out = new java.io.ByteArrayOutputStream()
+      bf.writeTo(out)
+      out.toByteArray
+    }
+    for ((file, c, got) <- blooms) {
       val rows = perFile(file)
       val bf = org.apache.spark.util.sketch.BloomFilter.create(items, 0.01)
       rows.flatMap(r => Option(r.getString(cols.indexOf(c) + 1))).foreach(x =>
         bf.putBinary(x.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      val want = new java.io.ByteArrayOutputStream()
-      bf.writeTo(want)
-      assert(java.util.Base64.getDecoder.decode(l(2)).sameElements(want.toByteArray),
+      assert(bits(got).sameElements(bits(bf)),
         s"bloom bits of $file/$c differ from the hand-built filter")
     }
     assert(SnapshotTable.readStats(dir, v).map(r => r.file -> r.rowCount).toMap ===
@@ -217,7 +215,7 @@ class StatsFooterParitySpec extends SparkSpec {
     assert(krow.getAs[Double]("max_num") == 300.0)
     // the _bloomtab written driver-side still answers point lookups
     val (files, total) =
-      SnapshotTable.pruneFilesBloom(spark, dir, v, "k", Seq(5L))
+      SnapshotTable.pruneFilesBloom(dir, v, "k", Seq(5L))
     assert(files.nonEmpty && total >= files.size)
   }
 }

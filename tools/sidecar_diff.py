@@ -2,11 +2,11 @@
 
     python3 tools/sidecar_diff.py <parent out dir> <change out dir>
 
-For every version directory of the first run: _stats.tsv and _bloom.tsv
-must be byte-identical and the _manifest/ and _bloomtab/ tables equal row
-for row (same schema), with the part-file UUIDs masked; _deletes/ rows
-must be equal as sets. Prints one line per artifact and exits 1 on any
-difference.
+For every version directory of the first run: the _manifest/ and
+_bloomtab/ tables must be equal row for row (same schema) and
+_manifest_chain/fold.tsv byte-identical, with the part-file UUIDs masked;
+_deletes/ rows must be equal as sets. Prints one line per artifact and
+exits 1 on any difference.
 """
 import glob, os, re, sys
 import pyarrow.parquet as pq
@@ -17,12 +17,6 @@ norm = lambda v: mask(v) if isinstance(v, str) else repr(v) if isinstance(v, flo
 bad = 0
 for vdir in sorted(glob.glob(f'{P}/*/v*')):
     rel = os.path.relpath(vdir, P)
-    for f in ('_stats.tsv', '_bloom.tsv'):
-        a, b = f'{vdir}/{f}', f'{C}/{rel}/{f}'
-        if os.path.exists(a) or os.path.exists(b):
-            same = mask(open(a).read()) == mask(open(b).read())
-            bad += not same
-            print(rel, f, 'SAME' if same else 'DIFF')
     for t in ('_manifest', '_bloomtab'):
         if os.path.isdir(f'{vdir}/{t}'):
             rd = lambda d: pq.read_table(d)
@@ -32,6 +26,13 @@ for vdir in sorted(glob.glob(f'{P}/*/v*')):
             same = ra == rb and ta.schema == tb.schema
             bad += not same
             print(rel, t, len(ra), 'rows', 'SAME' if same else 'DIFF')
+    f = '_manifest_chain/fold.tsv'
+    a, b = f'{vdir}/{f}', f'{C}/{rel}/{f}'
+    if os.path.exists(a) or os.path.exists(b):
+        same = (os.path.exists(a) and os.path.exists(b)
+                and mask(open(a).read()) == mask(open(b).read()))
+        bad += not same
+        print(rel, f, 'SAME' if same else 'DIFF')
     if os.path.isdir(f'{vdir}/_deletes'):
         key = lambda d: sorted(set(map(tuple, (r.values() for r in pq.read_table(d).to_pylist()))))
         same = key(f'{vdir}/_deletes') == key(f'{C}/{rel}/_deletes')
