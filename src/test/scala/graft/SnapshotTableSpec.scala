@@ -1014,7 +1014,7 @@ class SnapshotTableSpec extends SparkSpec {
     }
   }
 
-  test("the bloom probe keeps exactly the files whose hand-built filter admits a key") {
+  test("the bloom probe keeps exactly the files a hand-built filter admits") {
     val dir = freshDir()
     val v = SnapshotTable.commit(
       spark.range(2000).toDF("k").repartitionByRange(8, $"k"),
