@@ -3,10 +3,15 @@ package graft.ops
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
 import org.apache.spark.sql.{DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{DataType, Decimal, StringType, StructType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, Literal,
+  UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory,
+  PartitioningUtils}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetOutputWriter, ParquetWriteSupport}
+import org.apache.spark.sql.types.{DataType, Decimal, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.CollectionAccumulator
 import org.apache.spark.util.sketch.BloomFilter
@@ -46,7 +51,8 @@ class SidecarParquetFormat extends ParquetFileFormat {
       commit.bloomCols.flatMap(c => at(c).map(i => (c, i,
         SidecarParquetFormat.asString(
           BoundReference(i, dataSchema(i).dataType, nullable = true), tz)))),
-      commit.bloomExpectedItems, commit.sink)
+      commit.bloomExpectedItems,
+      commit.keys.map(f => (f, at(f.name).getOrElse(-1))), tz, commit.sink)
   }
 }
 
@@ -72,23 +78,29 @@ object SidecarParquetFormat {
       nulls: Long)
 
   private final case class Commit(statsCols: Seq[String], bloomCols: Seq[String],
-      bloomExpectedItems: Long, sink: CollectionAccumulator[WrittenFile])
+      bloomExpectedItems: Long, keys: Seq[StructField],
+      sink: CollectionAccumulator[WrittenFile])
 
   /** The writes in flight on this driver, by commit id. */
   private val open = new java.util.concurrent.ConcurrentHashMap[String, Commit]()
 
   /** Save `w` to `path` through this format and return one record per
-    * file the write produced (0-row files included). The commit's
-    * collector lives only for the write: it leaves the registry and
-    * Spark's accumulator registry however the write ends.
+    * file the write produced (0-row files included). With `keys`, each
+    * writer also writes the key columns of its rows (an upsert's
+    * tombstones) to a key file of its own under `path/_deletes/`, in the
+    * same task attempt, so the job commit publishes both together; a key
+    * column that is a hive partition column takes its value from the
+    * file's partition directory. The commit's collector lives only for
+    * the write: it leaves the registry and Spark's accumulator registry
+    * however the write ends.
     */
   private[ops] def write(spark: SparkSession, w: DataFrameWriter[Row], path: String,
       statsCols: Seq[String], bloomCols: Seq[String],
-      bloomExpectedItems: Long): Seq[WrittenFile] = {
+      bloomExpectedItems: Long, keys: Seq[StructField] = Nil): Seq[WrittenFile] = {
     val sink = new CollectionAccumulator[WrittenFile]
     spark.sparkContext.register(sink)
     val id = java.util.UUID.randomUUID().toString
-    open.put(id, Commit(statsCols, bloomCols, bloomExpectedItems, sink))
+    open.put(id, Commit(statsCols, bloomCols, bloomExpectedItems, keys, sink))
     try {
       w.format(classOf[SidecarParquetFormat].getName).option(CommitKey, id).save(path)
       import scala.jdk.CollectionConverters._
@@ -116,9 +128,14 @@ object SidecarParquetFormat {
     out.toByteArray
   }
 
+  /** `keyCols` pairs each key column with its ordinal in the written
+    * rows, or -1 for a hive partition column, whose value is the file's
+    * partition directory's.
+    */
   private[ops] final class WriterFactory(inner: OutputWriterFactory,
       statsCols: Seq[(String, Int, DataType)], bloomCols: Seq[(String, Int, Expression)],
-      bloomExpectedItems: Long, sink: CollectionAccumulator[WrittenFile])
+      bloomExpectedItems: Long, keyCols: Seq[(StructField, Int)], tz: Option[String],
+      sink: CollectionAccumulator[WrittenFile])
       extends OutputWriterFactory {
 
     override def getFileExtension(context: TaskAttemptContext): String =
@@ -128,11 +145,55 @@ object SidecarParquetFormat {
         context: TaskAttemptContext): OutputWriter = {
       val attempt = s"/${context.getTaskAttemptID}/"
       val i = path.indexOf(attempt)
-      new Writer(inner.newInstance(path, dataSchema, context),
-        if (i < 0) path else path.substring(i + attempt.length))
+      val file = if (i < 0) path else path.substring(i + attempt.length)
+      val keyFile =
+        if (keyCols.isEmpty) None
+        else {
+          if (i < 0) throw new IllegalStateException(
+            s"no task attempt directory in the write path $path to put its key file under")
+          Some(keyWriter(path.substring(0, i + attempt.length), file, context))
+        }
+      new Writer(inner.newInstance(path, dataSchema, context), file, keyFile)
     }
 
-    private final class Writer(inner: OutputWriter, file: String) extends OutputWriter {
+    /** The key file of data file `file` (relative to `attemptDir`) and the
+      * projection of a written row onto the key columns. The key file sits
+      * flat in `_deletes/`, so a read of that directory finds no partition
+      * columns; a partitioned file's name carries a hash of its partition
+      * path, since one task names the files of all its partitions alike.
+      */
+    private def keyWriter(attemptDir: String, file: String,
+        context: TaskAttemptContext): (OutputWriter, UnsafeProjection) = {
+      val f = new org.apache.hadoop.fs.Path(file)
+      val partDir = Option(f.getParent).fold("")(_.toString)
+      val name =
+        if (partDir.isEmpty) f.getName
+        else {
+          val ext = getFileExtension(context)
+          val h = java.security.MessageDigest.getInstance("MD5")
+            .digest(partDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            .take(8).map("%02x".format(_)).mkString
+          s"${f.getName.stripSuffix(ext)}-$h$ext"
+        }
+      lazy val partValues = PartitioningUtils.parsePathFragment(partDir)
+      val proj = UnsafeProjection.create(keyCols.map {
+        case (k, i) if i >= 0 => BoundReference(i, k.dataType, nullable = true)
+        case (k, _) =>
+          val raw = partValues.getOrElse(k.name, throw new IllegalStateException(
+            s"key column ${k.name} is neither written nor a partition of $file"))
+          if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) Literal(null, k.dataType)
+          else Literal(Cast(Literal(raw), k.dataType, tz).eval(), k.dataType)
+      })
+      // the parquet writer takes its schema from the task's configuration
+      val conf = new org.apache.hadoop.conf.Configuration(context.getConfiguration)
+      ParquetWriteSupport.setSchema(StructType(keyCols.map(_._1)), conf)
+      conf.unset(ParquetWriteSupport.SPARK_VARIANT_SHREDDING_SCHEMA)
+      (new ParquetOutputWriter(s"${attemptDir}_deletes/$name",
+        new TaskAttemptContextImpl(conf, context.getTaskAttemptID)), proj)
+    }
+
+    private final class Writer(inner: OutputWriter, file: String,
+        keyFile: Option[(OutputWriter, UnsafeProjection)]) extends OutputWriter {
       private var rows = 0L
       private val ords = statsCols.map(_._2).toArray
       private val get = statsCols.map(s => InternalRow.getAccessor(s._3, nullable = false)).toArray
@@ -165,10 +226,12 @@ object SidecarParquetFormat {
           i += 1
         }
         inner.write(row)
+        keyFile.foreach { case (w, proj) => w.write(proj(row)) }
       }
 
       override def close(): Unit = {
         inner.close()
+        keyFile.foreach(_._1.close())
         sink.add(WrittenFile(file, rows,
           statsCols.zipWithIndex.map { case ((c, _, _), i) =>
             ValueRange(c, mins(i), maxs(i), nulls(i)) },

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, sum}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal snapshot/commit protocol for parquet tables — the spine that
@@ -57,9 +57,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    tombstone sidecar AGAINST an existing version without rewriting
   *    a byte of data — the deletion-vector pattern that makes a
   *    GDPR-erasure on a 100 TB table a kilobyte write instead of a
-  *    table rewrite. [[readAt]] applies the tombstones (an anti-join
-  *    on the tombstone's key columns — the tombstone side is tiny, so
-  *    the join broadcasts); a later [[transact]] that rewrites the
+  *    table rewrite. [[readAt]] applies the tombstones: a small
+  *    single-key set as a `NOT IN` filter in the plan, with its keys
+  *    read on the driver; any other set as an anti-join on the
+  *    tombstone's key columns. A later [[transact]] that rewrites the
   *    table materializes them away (compaction).
   *  - '''File skipping''': [[commit]] with `statsCols` writes a
   *    per-file column min/max/nullCount table (`_manifest/`,
@@ -177,7 +178,7 @@ object SnapshotTable {
     // fast-fail BEFORE the expensive write when the table has already
     // moved — the conflict is certain, no need to burn the I/O
     checkExpected(dir, expectedVersion, detail = "")
-    val staged = stageData(df, dir, partitionCols, statsCols, bloomCols,
+    val (staged, _) = stageData(df, dir, partitionCols, statsCols, bloomCols,
       bloomExpectedItems, meta)
     publishStaged(dir, staged, expectedVersion)
   }
@@ -286,18 +287,23 @@ object SnapshotTable {
     * rebase, upsert, compaction); the claim half is [[claimVersion]].
     * The data goes through [[SidecarParquetFormat]], whose writers
     * gather the stats and blooms while they write, so the sidecars cost
-    * no Spark job; the column gates fire before the write.
+    * no Spark job; the column gates fire before the write. `keyCols`
+    * has the same writers write those columns of every row to
+    * `_deletes/` (an upsert's tombstones). Returns the staged directory
+    * and the number of rows written.
     */
   private def stageData(df: DataFrame, dir: String,
       partitionCols: Seq[String], statsCols: Seq[String],
       bloomCols: Seq[String], bloomExpectedItems: Long,
-      meta: Map[String, String]): java.nio.file.Path = {
+      meta: Map[String, String],
+      keyCols: Seq[String] = Nil): (java.nio.file.Path, Long) = {
     checkSidecarCols(df, statsCols, bloomCols, bloomExpectedItems)
     val staged = stagedPath(dir)
     val w = df.write.mode("errorifexists")
     val written = SidecarParquetFormat.write(df.sparkSession,
       if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w,
-      staged.toString, statsCols, bloomCols, bloomExpectedItems)
+      staged.toString, statsCols, bloomCols, bloomExpectedItems,
+      keyCols.map(df.schema(_)))
     // the writers must account for exactly the files the job committed:
     // a file they missed would be a data file without sidecar lines
     val reported = written.map(_.file).sorted
@@ -313,7 +319,7 @@ object SnapshotTable {
     // schema-in-metadata: a full commit exposes its own columns (the
     // chain-extending flavors overwrite this with the merged set)
     writeNames(staged, df.columns.toSeq)
-    staged
+    (staged, written.map(_.rows).sum)
   }
 
   /** Claim a version number for a fully-written staging directory and
@@ -693,7 +699,7 @@ object SnapshotTable {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     refPtr(dir, name) // validate the name before any I/O
     checkExpectedRef(dir, name, expectedBranchVersion, detail = "")
-    val staged = stageData(df, dir, partitionCols, statsCols, bloomCols,
+    val (staged, _) = stageData(df, dir, partitionCols, statsCols, bloomCols,
       bloomExpectedItems, meta)
     // claim a version number exactly like a main commit (one shared
     // number space — a branch version IS a version), then flip only
@@ -842,7 +848,7 @@ object SnapshotTable {
         s"v$expectedVersion (pass allowSchemaEvolution = true for a " +
         "deliberate widening)")
     checkExpected(dir, Some(expectedVersion), detail = "")
-    val staged = stageData(delta, dir, partitionCols, statsCols, bloomCols,
+    val (staged, _) = stageData(delta, dir, partitionCols, statsCols, bloomCols,
       bloomExpectedItems, meta)
     // fold the ancestors' manifests forward so chain reads stay O(1)
     // at any depth (no-op on stats-less commits/ancestry)
@@ -907,7 +913,7 @@ object SnapshotTable {
         s"v$baseVersion (pass allowSchemaEvolution = true when folding " +
         "an evolved chain)")
     checkExpected(dir, Some(expectedVersion), detail = "")
-    val staged = stageData(delta, dir, partitionCols, statsCols, bloomCols,
+    val (staged, _) = stageData(delta, dir, partitionCols, statsCols, bloomCols,
       bloomExpectedItems, meta)
     if (statsCols.nonEmpty)
       writeChainManifestFold(staged, dir, baseVersion)
@@ -1019,10 +1025,12 @@ object SnapshotTable {
     * The tombstone frame's COLUMNS are the delete key: rows of the
     * base version matching a tombstone on all of them are gone from
     * the new version. Keys must exist in the base schema (checked
-    * loudly here, not at first read). Tombstones are collected-free —
-    * written as parquet, applied as an anti-join that Spark broadcasts
-    * (the tombstone side is delete-proportional, not table-
-    * proportional).
+    * loudly here, not at first read). Tombstones are written as
+    * parquet and applied by every read ([[withoutTombstones]]): up to
+    * [[InlineInLiteralMax]] keys of one int, long or string column as
+    * an in-plan filter with no Spark job of its own, any other set as
+    * an anti-join (the tombstone side is delete-proportional, not
+    * table-proportional).
     */
   def commitDeletes(tombstones: DataFrame, dir: String,
       expectedVersion: Long): Long = {
@@ -1058,20 +1066,23 @@ object SnapshotTable {
 
   /** ATOMIC merge-on-read UPSERT (MERGE INTO): publish ONE version that
     * is the base MINUS the batch's keys PLUS the batch's rows — the
-    * tombstone set (`_deletes/`, the batch's `keyCols`), the
-    * batch's data files, and the `_append` chain marker all land in one
-    * staged directory and publish through one claim-rename + one
-    * pointer flip. A reader at ANY version therefore sees either the
-    * pre-merge or the post-merge state; the deletes-applied/batch-
+    * batch's data files and its tombstone set (`_deletes/`, the batch's
+    * `keyCols`, one key file per data file, written by the same task
+    * writers in the same Spark job) plus the `_append` chain marker all
+    * land in one staged directory and publish through one
+    * claim-rename + one pointer flip. A reader at ANY version
+    * therefore sees either the pre-merge or the post-merge state; the deletes-applied/batch-
     * missing intermediate that a commitDeletes-then-commitAppend
     * sequence exposes (a crash between the two publishes a table with
     * matched keys erased and their replacements absent — reader-visible
     * data loss) is unrepresentable by construction. Cost is
     * batch-proportional: tombstone keys + batch rows, never a rewrite —
-    * the MERGE a 100 TB table can afford per micro-batch.
+    * the MERGE a 100 TB table can afford per micro-batch. A batch with
+    * no rows publishes nothing: its staged directory is deleted at once
+    * and `expectedVersion` comes back.
     *
     * [[readAt]] resolves the generation as
-    * `(base ∖ tombstone-keys) ∪ batch`; the anti-join applies BEFORE
+    * `(base ∖ tombstone-keys) ∪ batch`; the tombstones apply BEFORE
     * this generation's own files union in, so the batch replaces, never
     * deletes, itself. `expectedVersion` is MANDATORY (a merge is always
     * a read-modify-write); the batch must carry exactly the base
@@ -1134,7 +1145,7 @@ object SnapshotTable {
       val krow = batch.groupBy(keyCols.map(col): _*)
         .agg(count(lit(1)).as("_grp_rows"))
         .agg(count(lit(1)).as("nk"),
-          sum(col("_grp_rows")).as("nr") +:
+          coalesce(sum(col("_grp_rows")), lit(0L)).as("nr") +:
             keyCols.flatMap(c =>
               Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"))): _*)
         .head()
@@ -1152,24 +1163,28 @@ object SnapshotTable {
             s"$typ,${mn.getOrElse("")},${mx.getOrElse("")}"
         }
     }
-    val staged = stageData(batch, dir, partitionCols, statsCols, bloomCols,
-      bloomExpectedItems, meta ++ statsMeta)
-    // tombstones + chain marker after the data (underscore prefixes
-    // keep both invisible to data readers). The keys are written as the
-    // batch carries them: the read's left_anti join ignores duplicate
-    // tombstones, and a distinct would cost a shuffle per upsert
-    batch.select(keyCols.map(col): _*)
-      .write.mode("errorifexists").parquet(staged.resolve("_deletes").toString)
-    java.nio.file.Files.writeString(staged.resolve("_append"),
-      s"v$expectedVersion")
-    // the ancestor fold continues THROUGH a merge (chainStats' O(1)-
-    // scan shape); this generation's own tombstone record joins the
-    // fold when the NEXT commit composes it from the meta above
-    writeChainManifestFold(staged, dir, expectedVersion)
-    if (crashBeforePublish)
-      throw new InjectedCrash(
-        s"injected crash: upsert fully staged at $staged, nothing published")
-    publishStaged(dir, staged, Some(expectedVersion))
+    // the data write also writes the tombstones: each writer puts the
+    // keys of its rows, as the batch carries them, in a key file under
+    // `_deletes/` (duplicates are harmless to the read, and a distinct
+    // would cost a shuffle per upsert)
+    val (staged, rows) = stageData(batch, dir, partitionCols, statsCols,
+      bloomCols, bloomExpectedItems, meta ++ statsMeta, keyCols)
+    if (rows == 0) {
+      // nothing to merge: publish nothing, and leave no staged debris
+      deleteTree(staged.toString)
+      expectedVersion
+    } else {
+      java.nio.file.Files.writeString(staged.resolve("_append"),
+        s"v$expectedVersion")
+      // the ancestor fold continues THROUGH a merge (chainStats' O(1)-
+      // scan shape); this generation's own tombstone record joins the
+      // fold when the NEXT commit composes it from the meta above
+      writeChainManifestFold(staged, dir, expectedVersion)
+      if (crashBeforePublish)
+        throw new InjectedCrash(
+          s"injected crash: upsert fully staged at $staged, nothing published")
+      publishStaged(dir, staged, Some(expectedVersion))
+    }
   }
 
   // ------------------------------------------ footer schemas (no Spark job)
@@ -1214,28 +1229,36 @@ object SnapshotTable {
     */
   private def footerReader(spark: SparkSession,
       path: String): org.apache.spark.sql.DataFrameReader = {
+    val files =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) Nil
+      else visibleFiles(java.nio.file.Paths.get(path))
+    files.headOption.fold(spark.read)(f =>
+      spark.read.schema(footerSchema(spark, f, readFooter(spark, f))))
+  }
+
+  /** The parquet footer of `file`, read on the driver. */
+  private def readFooter(spark: SparkSession, file: java.nio.file.Path):
+      org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toUri), spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The Spark schema Spark's own inference takes from `footer`. */
+  private def footerSchema(spark: SparkSession, file: java.nio.file.Path,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): StructType = {
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetToSparkSchemaConverter}
     val sql = spark.sessionState.conf
-    val files =
-      if (sql.isParquetSchemaMergingEnabled) Nil
-      else visibleFiles(java.nio.file.Paths.get(path))
-    files.headOption.fold(spark.read) { f =>
-      val hp = new org.apache.hadoop.fs.Path(f.toUri)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp,
-          spark.sparkContext.hadoopConfiguration))
-      val footer = try reader.getFooter finally reader.close()
-      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
-        new org.apache.parquet.hadoop.Footer(hp, footer),
-        new ParquetToSparkSchemaConverter(
-          assumeBinaryIsString = sql.isParquetBinaryAsString,
-          assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
-          inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
-          nanosAsLong = sql.legacyParquetNanosAsLong,
-          respectUnknownTypeAnnotation =
-            sql.parquetReaderRespectUnknownTypeAnnotation)))
-    }
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(new org.apache.hadoop.fs.Path(file.toUri), footer),
+      new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sql.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sql.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation))
   }
 
   /** `spark.read.parquet(path)` with the schema taken from the footer
@@ -1255,10 +1278,49 @@ object SnapshotTable {
         readParquet(spark, vdir).schema)
     else footerReader(spark, vdir).option("basePath", vdir).parquet(files: _*)
 
-  /** A delete or upsert version's tombstone keys (`_deletes/`). */
-  private def deletesOf(spark: SparkSession, dir: String,
-      version: Long): DataFrame =
-    readParquet(spark, s"$dir/v$version/_deletes")
+  /** `base` minus the tombstones of a delete or upsert `version`
+    * (`_deletes/`): a row goes when it equals a tombstone on every key
+    * column, and a null never matches. One key column of type int, long
+    * or string with at most [[InlineInLiteralMax]] tombstone rows (the
+    * count from the parquet footers) is applied in the plan as
+    * `k IS NULL OR NOT k IN (keys)`, its keys read on the driver the way
+    * [[readDriverParquet]] reads metadata tables: no Spark job, and a
+    * filter that prunes hive partitions and pushes into the scan. Any
+    * other shape (several key columns, other types, a larger set) is an
+    * anti-join on the key columns, which Spark broadcasts when the set
+    * is small.
+    */
+  private def withoutTombstones(spark: SparkSession, base: DataFrame,
+      dir: String, version: Long): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    import scala.jdk.CollectionConverters._
+    val path = java.nio.file.Paths.get(dir, s"v$version", "_deletes")
+    val files = visibleFiles(path)
+    val footers = files.map(f => f -> readFooter(spark, f))
+    val rows = footers.iterator.flatMap(_._2.getBlocks.asScala).map(_.getRowCount).sum
+    val key = footers.headOption.map { case (f, ft) => footerSchema(spark, f, ft) }
+      .collect { case StructType(Array(k)) => k }
+      .filter(k => Seq(IntegerType, LongType, StringType).contains(k.dataType) &&
+        base.schema.find(_.name == k.name).exists(_.dataType == k.dataType))
+    key.filter(_ => rows <= InlineInLiteralMax) match {
+      case Some(k) =>
+        val keys = readDriverParquet(path, spark.sparkContext.hadoopConfiguration) { g =>
+          if (g.getFieldRepetitionCount(0) == 0) None else Some(k.dataType match {
+            case IntegerType => g.getInteger(0, 0)
+            case LongType => g.getLong(0, 0)
+            case _ => g.getString(0, 0)
+          })
+        }.flatten.distinct
+        val column = (n: String) => base.col("`" + n.replace("`", "``") + "`")
+        val c = column(k.name)
+        val kept = if (keys.isEmpty) base else base.filter(c.isNull || !c.isin(keys: _*))
+        // the anti-join's column order: the key first
+        kept.select(c +: base.columns.toSeq.filter(_ != k.name).map(column): _*)
+      case None =>
+        val dels = readParquet(spark, path.toString)
+        base.join(dels, dels.columns.toSeq, "left_anti")
+    }
+  }
 
   // ------------------------------------------------------------- reads
 
@@ -1272,8 +1334,9 @@ object SnapshotTable {
   }
 
   /** Time travel: read an exact retained version. A merge-on-read
-    * delete version resolves its `_base` chain (data of the base,
-    * anti-joined with every accumulated tombstone set along the way);
+    * delete version resolves its `_base` chain (data of the base minus
+    * every accumulated tombstone set along the way, each applied by
+    * [[withoutTombstones]]: in the plan when small, else anti-joined);
     * an append version resolves its `_append` chain (base generation ∪
     * this version's own delta files, unioned BY NAME so each
     * generation's hive layout is free to differ). Chains stay short in
@@ -1289,22 +1352,18 @@ object SnapshotTable {
     require(io(dir).versionVisible(tablePath(dir), version),
       s"no complete version v$version under $dir")
     baseOf(dir, version) match {
-      case Some(b) =>
-        val dels = deletesOf(spark, dir, version)
-        readAt(spark, dir, b).join(dels, dels.columns.toSeq, "left_anti")
+      case Some(b) => withoutTombstones(spark, readAt(spark, dir, b), dir, version)
       case None => appendBaseOf(dir, version) match {
         case None => readParquet(spark, s"$dir/v$version")
         case Some(b) =>
           // an UPSERT generation carries tombstones against its base:
-          // anti-join them BEFORE this generation's own files union in,
-          // so the batch replaces (never deletes) itself — the
+          // apply them BEFORE this generation's own files union in, so
+          // the batch replaces (never deletes) itself — the
           // single-commit MERGE read shape
           val base0 = readAt(spark, dir, b)
           val base =
-            if (isUpsert(dir, version)) {
-              val dels = deletesOf(spark, dir, version)
-              base0.join(dels, dels.columns.toSeq, "left_anti")
-            } else base0
+            if (isUpsert(dir, version)) withoutTombstones(spark, base0, dir, version)
+            else base0
           // allowMissingColumns: an evolved append generation's new
           // columns surface as NULL on older generations' rows (and
           // vice versa) — commit-time checks already guarded against
@@ -1574,15 +1633,17 @@ object SnapshotTable {
     * driver, row by row through parquet-hadoop's example `Group` reader
     * (its mirror): no Spark job. `f` maps each row as it streams by, so
     * a caller that keeps a small answer per row never holds more than
-    * one row. Empty when the table does not exist.
+    * one row. Empty when the table does not exist. A Spark-written
+    * table (a tombstone set) is read under the session's `conf`.
     */
-  private def readDriverParquet[A](dest: java.nio.file.Path)(
+  private def readDriverParquet[A](dest: java.nio.file.Path,
+      conf: org.apache.hadoop.conf.Configuration = metaConf)(
       f: org.apache.parquet.example.data.Group => A): Seq[A] =
     visibleFiles(dest).flatMap { part =>
       val reader = org.apache.parquet.hadoop.ParquetReader.builder(
           new org.apache.parquet.hadoop.example.GroupReadSupport,
           new org.apache.hadoop.fs.Path(part.toUri))
-        .withConf(metaConf).build()
+        .withConf(conf).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).map(f).toList
       finally reader.close()
     }
@@ -2174,7 +2235,8 @@ object SnapshotTable {
     * Merge-on-read delete commits resolve like [[readAt]]: the pruning
     * happens on the underlying DATA version's sidecar (a bloom cannot
     * forget a key, so a deleted key only costs a false-positive file
-    * open) and every `_deletes` level in the chain anti-joins on top —
+    * open) and every `_deletes` level in the chain applies on top
+    * ([[withoutTombstones]]) —
     * a point lookup can never resurrect an erased key through the
     * skipping path.
     */
@@ -2193,9 +2255,7 @@ object SnapshotTable {
   private def prunedInScan(spark: SparkSession, dir: String, version: Long,
       column: String, keys: Seq[Any]): DataFrame = baseOf(dir, version) match {
     case Some(b) =>
-      val dels = deletesOf(spark, dir, version)
-      prunedInScan(spark, dir, b, column, keys)
-        .join(dels, dels.columns.toSeq, "left_anti")
+      withoutTombstones(spark, prunedInScan(spark, dir, b, column, keys), dir, version)
     case None =>
       val (files, _) = pruneFilesBloom(dir, version, column, keys)
       readKept(spark, s"$dir/v$version", files)
@@ -2206,7 +2266,8 @@ object SnapshotTable {
     * IN with tens of thousands of literals bloats the Catalyst tree
     * and the generated code, while a broadcast hash semi-join costs
     * one small build side. Below it the IN wins (it pushes into the
-    * parquet row-group filters).
+    * parquet row-group filters). The same bound decides when a
+    * tombstone set applies as an in-plan `NOT IN` ([[withoutTombstones]]).
     */
   val InlineInLiteralMax: Int = 1024
 
@@ -2324,14 +2385,13 @@ object SnapshotTable {
     * on an unpartitioned 100 TB predicate read. `basePath` keeps
     * hive-partition columns resolving when the commit was partitioned.
     * Merge-on-read delete commits resolve like [[readAt]]: pruning on
-    * the data version's sidecar, `_deletes` anti-joined on top.
+    * the data version's sidecar, each `_deletes` level applied on top
+    * ([[withoutTombstones]]).
     */
   def readWhere(spark: SparkSession, dir: String, version: Long,
       column: String, lo: Any, hi: Any): DataFrame = baseOf(dir, version) match {
     case Some(b) =>
-      val dels = deletesOf(spark, dir, version)
-      readWhere(spark, dir, b, column, lo, hi)
-        .join(dels, dels.columns.toSeq, "left_anti")
+      withoutTombstones(spark, readWhere(spark, dir, b, column, lo, hi), dir, version)
     case None =>
       val (files, _) = pruneFiles(dir, version, column, lo, hi)
       readKept(spark, s"$dir/v$version", files)
@@ -2405,14 +2465,13 @@ object SnapshotTable {
     * blooms keep false positives), so the answer is byte-identical to
     * the full scan — pure I/O savings, like [[readWhere]]. Merge-on-
     * read delete commits resolve like [[readAt]]: pruning on the data
-    * version's sidecars, `_deletes` anti-joined on top.
+    * version's sidecars, each `_deletes` level applied on top
+    * ([[withoutTombstones]]).
     */
   def readWhereMulti(spark: SparkSession, dir: String, version: Long,
       preds: Seq[PrunePredicate]): DataFrame = baseOf(dir, version) match {
     case Some(b) =>
-      val dels = deletesOf(spark, dir, version)
-      readWhereMulti(spark, dir, b, preds)
-        .join(dels, dels.columns.toSeq, "left_anti")
+      withoutTombstones(spark, readWhereMulti(spark, dir, b, preds), dir, version)
     case None =>
       val (files, _) = pruneFilesMulti(dir, version, preds)
       readKept(spark, s"$dir/v$version", files).filter(preds.map {

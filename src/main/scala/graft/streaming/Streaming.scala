@@ -589,20 +589,15 @@ object Streaming {
                       col("b.last_type").as("last_type"),
                       col("b.last_ts").as("last_ts"))
                   raceWindow(epoch)
-                  // an all-losing batch upserts NOTHING — and needs no
-                  // marker, because its replay recomputes the same
-                  // empty winner set (idempotent by emptiness).
-                  // Batch-scoped persist: the winner set is consumed
-                  // THREE times (emptiness probe, data write, tombstone
-                  // write), and each consumption otherwise replays the
-                  // state-chain join — which deepens with every
-                  // generation. Freed in the same attempt.
-                  winners.persist()
-                  try {
-                    if (!winners.isEmpty)
-                      SnapshotTable.commitUpsert(winners, Seq("user_id"),
-                        tableDir, expectedVersion = tip, meta = meta)
-                  } finally { winners.unpersist(blocking = false); () }
+                  // an all-losing batch upserts NOTHING — commitUpsert
+                  // publishes no version when its write holds no row —
+                  // and needs no marker, because its replay recomputes
+                  // the same empty winner set (idempotent by
+                  // emptiness). The winners are consumed once: one
+                  // write job writes the data and the tombstones, so
+                  // neither a probe nor a cache is needed
+                  SnapshotTable.commitUpsert(winners, Seq("user_id"),
+                    tableDir, expectedVersion = tip, meta = meta)
               }
               committed = true
             } catch {

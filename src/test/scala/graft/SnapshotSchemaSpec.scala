@@ -8,11 +8,13 @@ import graft.ops.SnapshotTable
 
 /** Snapshot reads take their schema from a parquet footer on the
   * driver instead of a Spark schema-inference job, a commit builds its
-  * stats and bloom sidecars inside its data write, and file-skipping
-  * decisions read those sidecars on the driver. Pins (a) that the
-  * footer schema equals the inferred one exactly (names, types,
-  * nullability, metadata) on every directory shape the lake reads, and
-  * (b) the job counts those changes buy.
+  * stats and bloom sidecars (and an upsert its tombstones) inside its
+  * data write, file-skipping decisions read those sidecars on the
+  * driver, and small tombstone sets apply in the plan. Pins (a) that
+  * the footer schema equals the inferred one exactly (names, types,
+  * nullability, metadata) on every directory shape the lake reads,
+  * (b) the job counts those changes buy, and (c) that in-plan
+  * tombstones drop exactly the rows the anti-join drops.
   */
 class SnapshotSchemaSpec extends SparkSpec {
 
@@ -131,7 +133,10 @@ class SnapshotSchemaSpec extends SparkSpec {
       dir, expectedVersion = v3)
     val (chain, buildJobs) = jobsOf(SnapshotTable.readAt(spark, dir, v4))
     assert(buildJobs == 0, s"building readAt over a 4-generation chain ran $buildJobs jobs")
-    assert(chain.count() == 430L)
+    // both tombstone sets apply in the plan: the scan is the only job
+    val (rows, readJobs) = jobsOf(SnapshotTable.readAt(spark, dir, v4).collect())
+    assert(readJobs == 1, s"readAt over the chain plus its collect ran $readJobs jobs")
+    assert(rows.length == 430 && chain.count() == 430L)
 
     // stats on a DOUBLE column and a bloom come from the data write
     // itself: no job on top of what a sidecar-less commit costs
@@ -146,14 +151,14 @@ class SnapshotSchemaSpec extends SparkSpec {
     assert(SnapshotTable.readStats(sdir, sv).map(_.col).toSet === Set("k", "price"))
     assert(SnapshotTable.readBloom(sdir, sv).map(_._2) === Seq("k"))
 
-    // an upsert is an append plus its `_deletes` write, one job: the
-    // batch keys are written as they come, with no shuffle
+    // an upsert costs what an append of the same batch costs: its data
+    // write also writes the `_deletes` keys
     val keys = (1L to 40L).map(k => (k, k * 2.5, "u")).toDF("k", "price", "c")
     val (_, append) = jobsOf(SnapshotTable.commitAppend(keys, dir,
       expectedVersion = v4))
     val (v6, upsert) = jobsOf(SnapshotTable.commitUpsert(keys, Seq("k"), dir,
       expectedVersion = v4 + 1))
-    assert(upsert - append == 1,
+    assert(upsert - append == 0,
       s"the tombstone write took ${upsert - append} jobs (append $append, upsert $upsert)")
     assert(SnapshotTable.readAt(spark, dir, v6).count() == 430L)
   }
@@ -186,5 +191,55 @@ class SnapshotSchemaSpec extends SparkSpec {
       SnapshotTable.readWhereIn(spark, dir, v, "k", keys).collect())
     assert(rows.map(_.getLong(0)).sorted.toSeq == keys)
     assert(readJobs == 1, s"readWhereIn plus its collect ran $readJobs jobs")
+  }
+
+  /** Commit `base`, delete `tomb` from it, and check the delete
+    * version's read against Spark's anti-join of the base read with the
+    * `_deletes` rows, row for row. Returns whether the read planned a
+    * join (the anti-join path) rather than an in-plan filter.
+    */
+  private def sameAsAntiJoin(base: DataFrame, tomb: DataFrame,
+      partitionCols: Seq[String] = Nil): Boolean = {
+    val dir = freshDir("tombstones")
+    val v1 = SnapshotTable.commit(base, dir, partitionCols = partitionCols)
+    val v2 = SnapshotTable.commitDeletes(tomb, dir, expectedVersion = v1)
+    val got = SnapshotTable.readAt(spark, dir, v2)
+    val dels = spark.read.parquet(s"$dir/v$v2/_deletes")
+    val want = SnapshotTable.readAt(spark, dir, v1)
+      .join(dels, dels.columns.toSeq, "left_anti")
+    assert(got.schema === want.schema)
+    val sorted = (df: DataFrame) => df.collect().toSeq.map(_.toString).sorted
+    assert(sorted(got) === sorted(want), s"tombstones ${tomb.columns.mkString(",")}")
+    assert(sorted(got).size < sorted(SnapshotTable.readAt(spark, dir, v1)).size)
+    got.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join])
+  }
+
+  test("small single-key tombstone sets apply in the plan, as the anti-join would") {
+    import spark.implicits._
+    val rows = Seq[(java.lang.Integer, java.lang.Long, String, Int)](
+      (1, 10L, "a", 0), (2, 20L, "", 1), (null, null, null, 2), (3, 30L, "c", 0),
+      (4, 40L, "d", 1), (2, 20L, "", 2), (5, 50L, "e", 0))
+    val base = rows.toDF("i", "l", "s", "p").repartition(2)
+    // null and duplicate tombstones, null data keys, a "" key
+    assert(!sameAsAntiJoin(base, Seq[java.lang.Integer](2, 2, null, 5, 99).toDF("i")))
+    assert(!sameAsAntiJoin(base, Seq[java.lang.Long](null, 10L, 40L, 40L).toDF("l")))
+    assert(!sameAsAntiJoin(base, Seq("", null, "c", "zz").toDF("s")))
+    // a tombstone on a hive partition column
+    assert(!sameAsAntiJoin(base, Seq(1, 7).toDF("p"), partitionCols = Seq("p")))
+    // an empty set deletes nothing and needs no filter
+    val dir = freshDir("tombstones_empty")
+    val v1 = SnapshotTable.commit(base, dir)
+    val v2 = SnapshotTable.commitDeletes(Seq.empty[Int].toDF("i"), dir, expectedVersion = v1)
+    assert(SnapshotTable.readAt(spark, dir, v2).count() == rows.size.toLong)
+  }
+
+  test("multi-column, double and 1,025-key tombstone sets keep the anti-join") {
+    import spark.implicits._
+    val base = (1 to 2000).map(k => (k, k % 7, k / 8.0)).toDF("k", "g", "d").repartition(2)
+    assert(sameAsAntiJoin(base, Seq((3, 3), (4, 5), (8, 1)).toDF("k", "g")))
+    assert(sameAsAntiJoin(base, Seq(0.125, 0.5, 3.0).toDF("d")))
+    assert(sameAsAntiJoin(base, (1 to 1025).map(k => k * 2).toDF("k")))
+    assert(!sameAsAntiJoin(base, (1 to 1024).map(k => k * 2).toDF("k")))
   }
 }

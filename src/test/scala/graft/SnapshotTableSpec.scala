@@ -1243,6 +1243,55 @@ class SnapshotTableSpec extends SparkSpec {
       .collect().toSet == Set((1L, "a"), (2L, "B")))
   }
 
+  test("an empty commitUpsert publishes nothing and leaves no staged dir") {
+    val dir = freshDir()
+    val v1 = SnapshotTable.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
+      dir, expectedVersion = SnapshotTable.ExpectEmpty)
+    val batch = Seq((2L, "B")).toDF("k", "v").filter($"k" < 0L)
+    assert(SnapshotTable.commitUpsert(batch, Seq("k"), dir,
+      expectedVersion = v1, recordChainStats = true) == v1)
+    assert(SnapshotTable.currentVersion(dir).contains(v1))
+    assert(SnapshotTable.versions(dir) == Seq(v1))
+    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith(".staged-")))
+    assert(SnapshotTable.commitUpsert(Seq((2L, "B")).toDF("k", "v"), Seq("k"),
+      dir, expectedVersion = v1) == v1 + 1)
+  }
+
+  test("an upsert's writers write one key file per data file") {
+    // keys as the batch carries them, from every task, flat in _deletes/
+    // even when the key is a hive partition column
+    def keyFiles(dir: String, v: Long) =
+      new java.io.File(s"$dir/v$v/_deletes").listFiles()
+        .filter(f => f.getName.endsWith(".parquet")).toSeq
+    def dataFiles(dir: String, v: Long): Seq[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().filterNot(_.getName.startsWith("_")).toSeq.flatMap(walk)
+        else Seq(f)
+      walk(new java.io.File(s"$dir/v$v")).filter(_.getName.endsWith(".parquet")).map(_.getPath)
+    }
+    val base = (1L to 60L).map(k => (k, s"v$k", (k % 3).toInt)).toDF("k", "v", "p")
+    val batch = ((1L to 30L) ++ Seq(5L, 61L)).map(k => (k, s"u$k", (k % 3).toInt))
+      .toDF("k", "v", "p").repartition(3)
+    for ((keyCols, part) <- Seq((Seq("k"), Nil), (Seq("k"), Seq("p")),
+        (Seq("p"), Seq("p")), (Seq("k", "p"), Seq("p")))) {
+      val dir = freshDir()
+      val v1 = SnapshotTable.commit(base, dir, expectedVersion = SnapshotTable.ExpectEmpty,
+        partitionCols = part)
+      val v2 = SnapshotTable.commitUpsert(batch, keyCols, dir, expectedVersion = v1,
+        partitionCols = part)
+      assert(keyFiles(dir, v2).size == dataFiles(dir, v2).size, s"$keyCols by $part")
+      val dels = spark.read.parquet(s"$dir/v$v2/_deletes")
+      assert(dels.columns.toSeq == keyCols)
+      assert(dels.collect().toSeq.map(_.toString).sorted ==
+        batch.select(keyCols.map(col): _*).collect().toSeq.map(_.toString).sorted)
+      val want = SnapshotTable.readAt(spark, dir, v1)
+        .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
+        .unionByName(batch)
+      assert(SnapshotTable.readAt(spark, dir, v2).collect().toSeq.map(_.toString).sorted ==
+        want.collect().toSeq.map(_.toString).sorted, s"$keyCols by $part")
+    }
+  }
+
   test("upsert generations refuse folding; full compaction resolves them") {
     val dir = freshDir()
     val v1 = SnapshotTable.commit(Seq((1L, 10L), (2L, 20L)).toDF("k", "n"),

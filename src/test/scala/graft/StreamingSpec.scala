@@ -151,6 +151,37 @@ class StreamingSpec extends SparkSpec {
       .collect().toSet == Set((7L, "click"), (8L, "view")))
   }
 
+  test("foreachBatchUpsertIngest: an all-losing batch publishes nothing, " +
+      "exactly once across a kill") {
+    import graft.ops.SnapshotTable
+    val tmp = Files.createTempDirectory("graft_ingest_losing").toString
+    val in = s"$tmp/in"; val table = s"$tmp/table"
+    def ev(id: Long, t: String, u: Long, typ: String) =
+      (id, ts(t), u, typ, 1.0, "{}")
+    // three files -> three batches: a base, a batch older than the
+    // stored state (all-losing), and a winning batch
+    Seq(Seq(ev(1, "2024-01-01 10:00:00", 7, "signup"), ev(3, "2024-01-01 10:30:00", 8, "view")),
+        Seq(ev(6, "2024-01-01 09:00:00", 7, "late"), ev(2, "2024-01-01 10:30:00", 8, "tie")),
+        Seq(ev(7, "2024-01-01 11:00:00", 8, "click"))).foreach { rows =>
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("append").parquet(in)
+    }
+    def stream() = Streaming.readEventsStream(spark, in, maxFilesPerTrigger = 1)
+    def noStaged() = !new java.io.File(table).listFiles().exists(_.getName.startsWith(".staged-"))
+    // kill right after the all-losing batch, before its checkpoint
+    Streaming.foreachBatchUpsertIngest(stream(), table, failAfterBatch = Some(1L))
+    assert(SnapshotTable.versions(table) == Seq(1L) && noStaged())
+    // the replay recomputes the same empty winner set, then batch 2 merges
+    val fin = Streaming.foreachBatchUpsertIngest(stream(), table)
+    assert(SnapshotTable.versions(table) == Seq(1L, 2L) && noStaged())
+    assert(SnapshotTable.readMeta(table, 2L).get("epoch").contains("2"))
+    assert(fin.select($"user_id", $"last_type").as[(Long, String)].collect().toSet ==
+      Set((7L, "signup"), (8L, "click")))
+    // a re-run from the intact checkpoint commits nothing more
+    Streaming.foreachBatchUpsertIngest(stream(), table)
+    assert(SnapshotTable.versions(table) == Seq(1L, 2L))
+  }
+
   test("append ingest dedup is writer-scoped: a recreated checkpoint " +
       "re-delivers instead of silently dropping") {
     import graft.ops.SnapshotTable
